@@ -15,10 +15,13 @@ UDF. Semantics (seeds, thresholds, handleInvalid modes, split
 fractions) are identical.
 
 Train path: load → prepare_data → fit feature pipeline + decision
-tree → label predictions → parquet + single-file CSV + metrics.
-Score path (--test-file): re-uses the FITTED pipeline/model (the
-train-once/score-many contract; unseen categories survive via
-StringIndexer handleInvalid='keep').
+tree → label predictions → one metrics aggregate (MAE, RMSE and the
+row count) → parquet + single-file CSV. Score path (--test-file):
+re-uses the FITTED pipeline/model (the train-once/score-many
+contract; unseen categories survive via StringIndexer
+handleInvalid='keep'), and its row count and MAE come from the same
+one-aggregate evaluator. Every frame the run persists is released on
+exit, so a second run in the same session starts from its inputs.
 """
 
 from __future__ import annotations
@@ -28,7 +31,6 @@ import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -110,15 +112,17 @@ def run(argv: list[str] | None = None) -> dict:
     # stopping someone else's session is not this CLI's call.
     pre_existing = SparkSession.getActiveSession() is not None
     spark = get_spark(app_name="flight-delay-engine")
+    cached: list[DataFrame] = []  # every frame this run persists, released on exit
     try:
-        from flight_delay_prediction_using_pyspark_spark.sources.readers import (
-            read_flights_csv,
-        )
-
-        raw = read_flights_csv(spark, args.input)
         prepared = _prepare(spark, args.input, args.plane_data).persist()
+        cached.append(prepared)
 
         if args.count_only:
+            from flight_delay_prediction_using_pyspark_spark.sources.readers import (
+                read_flights_csv,
+            )
+
+            raw = read_flights_csv(spark, args.input)
             result = {"raw_rows": raw.count(), "prepared_rows": prepared.count()}
             print(result)
             return result
@@ -126,12 +130,13 @@ def run(argv: list[str] | None = None) -> dict:
         pipeline = build_feature_pipeline(P.CATEGORICAL_FEATURES, P.NUMERIC_FEATURES)
         pipeline_model = pipeline.fit(prepared)
         encoded = pipeline_model.transform(prepared)
+        cached.append(encoded)  # train_decision_tree persists it
         tree_model, val_preds = train_decision_tree(encoded)
-        metrics = evaluate_regression(val_preds)
-
         labeled = add_prediction_labels(
             val_preds, threshold=args.label_threshold
         ).persist()
+        cached.append(labeled)
+        metrics = evaluate_regression(labeled)
         os.makedirs(args.output, exist_ok=True)
         write_parquet(labeled, os.path.join(args.output, "predictions.parquet"))
         write_single_csv(labeled, os.path.join(args.output, "predictions.csv"))
@@ -139,7 +144,7 @@ def run(argv: list[str] | None = None) -> dict:
         result = {
             "mae": metrics["mae"],
             "rmse": metrics["rmse"],
-            "validation_rows": labeled.count(),
+            "validation_rows": metrics["rows"],
         }
 
         if args.figures:
@@ -157,21 +162,23 @@ def run(argv: list[str] | None = None) -> dict:
             test_preds = add_prediction_labels(
                 tree_model.transform(test_encoded), threshold=args.label_threshold
             ).persist()
+            cached.append(test_preds)
             write_parquet(
                 test_preds, os.path.join(args.output, "test_predictions.parquet")
             )
             write_single_csv(
                 test_preds, os.path.join(args.output, "test_predictions.csv")
             )
-            result["test_rows"] = test_preds.count()
-            if "ArrDelay" in test_preds.columns:
-                test_with_label = test_preds.filter(F.col("ArrDelay").isNotNull())
-                if test_with_label.count() > 0:
-                    result["test_mae"] = evaluate_regression(test_with_label)["mae"]
+            test_metrics = evaluate_regression(test_preds)
+            result["test_rows"] = test_metrics["rows"]
+            if test_metrics["mae"] is not None:
+                result["test_mae"] = test_metrics["mae"]
 
         print(result)
         return result
     finally:
+        for df in cached:
+            df.unpersist()
         if not pre_existing:
             spark.stop()
 

@@ -45,10 +45,7 @@ def time_of_day_col(hour: Column) -> Column:
     )
 
 
-def add_time_of_day(df: DataFrame, use_udf: bool = False) -> DataFrame:
-    """C7: DepTime_TOD / CRSDepTime_TOD / CRSArrTime_TOD from the HHMM
-    hour. `use_udf=True` routes through a plain Python UDF (U1 parity,
-    custom_features.py:36); default is the vectorizable when-cascade."""
+def _time_of_day_columns(use_udf: bool) -> dict[str, Column]:
     if use_udf:
         # Self-contained closure: cloudpickle ships it by value, so the
         # executors' Python workers need no import path to this package
@@ -69,18 +66,32 @@ def add_time_of_day(df: DataFrame, use_udf: bool = False) -> DataFrame:
         tod = lambda c: tod_udf(hour_of(c))  # noqa: E731
     else:
         tod = lambda c: time_of_day_col(hour_of(c))  # noqa: E731
-    return (
-        df.withColumn("DepTime_TOD", tod("DepTime"))
-        .withColumn("CRSDepTime_TOD", tod("CRSDepTime"))
-        .withColumn("CRSArrTime_TOD", tod("CRSArrTime"))
-    )
+    return {f"{c}_TOD": tod(c) for c in ("DepTime", "CRSDepTime", "CRSArrTime")}
+
+
+def add_time_of_day(df: DataFrame, use_udf: bool = False) -> DataFrame:
+    """C7: DepTime_TOD / CRSDepTime_TOD / CRSArrTime_TOD from the HHMM
+    hour. `use_udf=True` routes through a plain Python UDF (U1 parity,
+    custom_features.py:36); default is the vectorizable when-cascade."""
+    return df.withColumns(_time_of_day_columns(use_udf))
+
+
+def _weekend_col() -> Column:
+    return F.when(F.col("DayOfWeek").isin([5, 6, 7]), "Weekend").otherwise("Weekday")
 
 
 def add_weekend_indicator(df: DataFrame) -> DataFrame:
     """C8 (custom_features.py:52-57): DayOfWeek ∈ {5,6,7} → Weekend."""
-    return df.withColumn(
-        "Weekend",
-        F.when(F.col("DayOfWeek").isin([5, 6, 7]), "Weekend").otherwise("Weekday"),
+    return df.withColumn("Weekend", _weekend_col())
+
+
+def _time_gap_bucket_col() -> Column:
+    gap = minutes_since_midnight("CRSArrTime") - minutes_since_midnight("CRSDepTime")
+    return (
+        F.when(gap <= 30, "NOT_ENOUGH")
+        .when((gap > 30) & (gap <= 60), "BARELY_ENOUGH")
+        .when((gap > 60) & (gap <= 120), "ENOUGH")
+        .otherwise("MORE_THAN_ENOUGH")
     )
 
 
@@ -88,16 +99,15 @@ def add_time_gap_bucket(df: DataFrame) -> DataFrame:
     """C9 (custom_features.py:62-90): scheduled dep→arr gap bucketed
     into NOT_ENOUGH(≤30) / BARELY_ENOUGH(31-60) / ENOUGH(61-120) /
     MORE_THAN_ENOUGH(>120, and NULL — reference quirk preserved)."""
-    gap = minutes_since_midnight("CRSArrTime") - minutes_since_midnight("CRSDepTime")
-    return df.withColumn(
-        "TimeBetweenDepartures",
-        F.when(gap <= 30, "NOT_ENOUGH")
-        .when((gap > 30) & (gap <= 60), "BARELY_ENOUGH")
-        .when((gap > 60) & (gap <= 120), "ENOUGH")
-        .otherwise("MORE_THAN_ENOUGH"),
-    )
+    return df.withColumn("TimeBetweenDepartures", _time_gap_bucket_col())
 
 
 def add_custom_features(df: DataFrame, use_udf: bool = False) -> DataFrame:
-    """C7+C8+C9 (dataset_utils.py:26-30)."""
-    return add_time_gap_bucket(add_weekend_indicator(add_time_of_day(df, use_udf)))
+    """C7+C8+C9 (dataset_utils.py:26-30) as one projection."""
+    return df.withColumns(
+        {
+            **_time_of_day_columns(use_udf),
+            "Weekend": _weekend_col(),
+            "TimeBetweenDepartures": _time_gap_bucket_col(),
+        }
+    )

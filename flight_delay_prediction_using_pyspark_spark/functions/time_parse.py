@@ -11,14 +11,13 @@ same numbers, scalable plan (SURVEY.md §4 anti-pattern 1).
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flight_delay_prediction_using_pyspark_spark.operators.windows import (
-    with_global_agg,
-    with_global_aggs,
-)
+from flight_delay_prediction_using_pyspark_spark.operators.windows import with_global_aggs
 
 TWO_PI = 2.0 * math.pi
 
@@ -45,41 +44,32 @@ def minutes_since_midnight(col: Column | str) -> Column:
     return F.when(as_int.isNotNull(), hours * 60 + minutes).otherwise(None)
 
 
-def add_cyclical_time(df: DataFrame, time_col: str) -> DataFrame:
-    """Cyclical encoding of one HHMM column (C4): drops null-time rows,
-    then emits `<c>_minutes_cosine/_minutes_sine/_hours_cosine/_hours_sine`
+def _cyclical_columns(time_col: str) -> dict[str, Column]:
+    """Cyclical encoding of one HHMM column (C4):
+    `<c>_minutes_cosine/_minutes_sine/_hours_cosine/_hours_sine`
     (missing encodes as 0, matching dataset_utils.py:93-102)."""
-    df = df.filter(F.col(time_col).isNotNull())
-    as_int = parse_time_digits(time_col)
-    hours = (as_int / 100).cast("int")
-    minutes = (as_int % 100).cast("int")
-    msm = F.when(as_int.isNotNull(), hours * 60 + minutes).otherwise(None)
-    return (
-        df.withColumn(
-            f"{time_col}_minutes_cosine",
-            F.when(msm.isNotNull(), F.cos(TWO_PI * msm / 1440)).otherwise(0),
-        )
-        .withColumn(
-            f"{time_col}_minutes_sine",
-            F.when(msm.isNotNull(), F.sin(TWO_PI * msm / 1440)).otherwise(0),
-        )
-        .withColumn(
-            f"{time_col}_hours_cosine",
-            F.when(hours.isNotNull(), F.cos(TWO_PI * hours / 24)).otherwise(0),
-        )
-        .withColumn(
-            f"{time_col}_hours_sine",
-            F.when(hours.isNotNull(), F.sin(TWO_PI * hours / 24)).otherwise(0),
-        )
-    )
+    hours, msm = hour_of(time_col), minutes_since_midnight(time_col)
+    min_angle, hour_angle = TWO_PI * msm / 1440, TWO_PI * hours / 24
+    return {
+        f"{time_col}_minutes_cosine": F.when(msm.isNotNull(), F.cos(min_angle)).otherwise(0),
+        f"{time_col}_minutes_sine": F.when(msm.isNotNull(), F.sin(min_angle)).otherwise(0),
+        f"{time_col}_hours_cosine": F.when(hours.isNotNull(), F.cos(hour_angle)).otherwise(0),
+        f"{time_col}_hours_sine": F.when(hours.isNotNull(), F.sin(hour_angle)).otherwise(0),
+    }
 
 
 def add_cyclical_times(df: DataFrame, time_cols: list[str] | None = None) -> DataFrame:
     """C4 over the reference's three time columns
-    (dataset_utils.py:111-117)."""
-    for c in time_cols or ["DepTime", "CRSDepTime", "CRSArrTime"]:
-        df = add_cyclical_time(df, c)
-    return df
+    (dataset_utils.py:111-117): drops rows with a null time, then adds
+    every encoding in one projection."""
+    time_cols = time_cols or ["DepTime", "CRSDepTime", "CRSArrTime"]
+    df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in time_cols]))
+    return df.withColumns({k: v for c in time_cols for k, v in _cyclical_columns(c).items()})
+
+
+def add_cyclical_time(df: DataFrame, time_col: str) -> DataFrame:
+    """C4 for one HHMM column; drops its null-time rows."""
+    return add_cyclical_times(df, [time_col])
 
 
 def add_polar_coordinates(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -94,15 +84,10 @@ def add_polar_coordinates(df: DataFrame, columns: list[str] | None = None) -> Da
     the whole unpersisted prepare lineage three times).
     """
     columns = columns or ["DayofMonth", "Month", "DayOfWeek"]
-    df = with_global_aggs(
-        df, {f"__max_{c}": F.max(c) for c in columns}
-    )
+    df = with_global_aggs(df, {f"__max_{c}": F.max(c) for c in columns})
+    polar = {}
     for column in columns:
-        max_col = f"__max_{column}"
-        angle = TWO_PI * (F.col(column) - 1) / F.col(max_col) + (math.pi / 2.0)
-        df = (
-            df.withColumn(f"{column}_polar_x", F.cos(angle))
-            .withColumn(f"{column}_polar_y", F.sin(angle))
-            .drop(max_col)
-        )
-    return df
+        angle = TWO_PI * (F.col(column) - 1) / F.col(f"__max_{column}") + (math.pi / 2.0)
+        polar[f"{column}_polar_x"] = F.cos(angle)
+        polar[f"{column}_polar_y"] = F.sin(angle)
+    return df.withColumns(polar).drop(*(f"__max_{c}" for c in columns))

@@ -18,7 +18,8 @@ of eleven):
 Scale note: each StringIndexer.fit is a distinct-count job and
 RobustScaler.fit runs quantile sketches — at 100 TB, fit on a sampled
 frame or persist the input before Pipeline.fit so the ~2k+1 fit jobs
-share a cached lineage (train.py does the persist).
+share a cached lineage (the CLI persists its prepared frame before the
+fit; train.py persists the encoded frame before the tree fit).
 """
 
 from __future__ import annotations

@@ -49,11 +49,13 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     a < b.
 
     The edge list and the degree frame are persisted for the duration
-    of the computation: `edges` has FIVE consumers here (two degree
-    scans, the orientation join, the wedge-close semi-join via `e`,
-    and the n_edges count), and without the persist each one re-runs
-    the caller's full edge-derivation lineage — for co-purchase
-    graphs that is the per-order pair-generation shuffle, five times.
+    of the computation: `edges` has FOUR consumers here (two degree
+    scans, the orientation join and the wedge-close semi-join via
+    `e`), and without the persist each one re-runs the caller's full
+    edge-derivation lineage — for co-purchase graphs that is the
+    per-order pair-generation shuffle, four times. n_edges has no scan
+    of its own: it comes from the degree aggregate as Σdeg div 2, and
+    is 0 (not NULL) on an empty edge set, as in the SQL oracle.
     All outputs are materialized eagerly so the caches can be released
     before returning; the returned one-row frame is built from
     literals."""
@@ -131,7 +133,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
             F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
             .cast("bigint")
             .alias("n_wedges"),
-            F.expr("sum(deg) div 2").alias("n_edges"),
+            F.expr("coalesce(sum(deg) div 2, 0)").alias("n_edges"),
         ).first(),
     )
     n_edges = drow["n_edges"]
@@ -145,7 +147,8 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
         F.lit(n_edges).cast("bigint").alias("n_edges"),
         F.lit(drow["n_wedges"]).cast("bigint").alias("n_wedges"),
         F.lit(n_tri).cast("bigint").alias("n_triangles"),
-        F.round(F.lit(3.0) * n_tri / F.lit(drow["n_wedges"]), 6).alias("clustering"),
+        # NULL, not an ANSI DIVIDE_BY_ZERO, on a wedge-free graph
+        F.round(F.try_divide(F.lit(3.0 * n_tri), F.lit(drow["n_wedges"])), 6).alias("clustering"),
     )
 
 
@@ -246,16 +249,16 @@ def kcore_peel(
     Scale shape (round-4 rewrite): the graph is held SYMMETRIZED
     (each undirected edge as two directed rows), so a node's degree is
     a plain window count over `src` — peeling a round is two window
-    counts and a filter, fused with the survivor-count aggregate into
-    ONE job per round. The previous broadcast-semi-join formulation
-    launched two broadcast builds plus a degree job per round (2.4x
-    slower on the co-purchase bench graph) and assumed the survivor
-    node SET fits in a driver broadcast — false for billion-node
-    graphs, while the window shuffle partitions by node id with no
-    size assumption (a pathological super-node key is a salting
-    problem, not a capacity wall). The shrinking frame is persisted
-    per round and the predecessor unpersisted after its successor
-    materializes, keeping lineage O(1) deep."""
+    counts and a filter, materialized by a localCheckpoint that keeps
+    lineage O(1) deep. The round's survivor-count aggregate is a
+    separate job over that checkpoint, run on a driver thread so it
+    overlaps the next round's peel. The previous broadcast-semi-join
+    formulation launched two broadcast builds plus a degree job per
+    round (2.4x slower on the co-purchase bench graph) and assumed the
+    survivor node SET fits in a driver broadcast — false for
+    billion-node graphs, while the window shuffle partitions by node
+    id with no size assumption (a pathological super-node key is a
+    salting problem, not a capacity wall)."""
     from pyspark.sql import Window
 
     from concurrent.futures import ThreadPoolExecutor

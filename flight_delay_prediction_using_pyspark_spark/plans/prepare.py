@@ -2,8 +2,7 @@
 
 C1-C10 as pure DataFrame→DataFrame functions with reference-identical
 semantics; physical-plan anti-patterns are rewritten per SURVEY.md §4
-(anti-join instead of collect+isin, scalar-agg broadcast instead of the
-single-partition window, optional deterministic dedup).
+(anti-join instead of collect+isin, optional deterministic dedup).
 """
 
 from __future__ import annotations
@@ -14,10 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flight_delay_prediction_using_pyspark_spark.functions.features import add_custom_features
-from flight_delay_prediction_using_pyspark_spark.functions.time_parse import (
-    add_cyclical_times,
-    add_polar_coordinates,
-)
+from flight_delay_prediction_using_pyspark_spark.functions.time_parse import add_cyclical_times
 from flight_delay_prediction_using_pyspark_spark.operators.relational import (
     anti_join,
     broadcast_enrich,
@@ -67,10 +63,9 @@ def clean_data(df: DataFrame, dedup_order: Sequence[Column | str] | None = None)
     deterministic under any partitioning (required for oracle checks
     and for reproducible pipelines at scale).
     """
-    df = df.drop("Year", "CancellationCode")
-    df = df.filter(F.col("ArrDelay").isNotNull() & (F.col("Cancelled") == 0))
-    df = df.filter(F.col("Distance").isNotNull())
-    df = df.drop("Cancelled")
+    df = df.filter(
+        F.col("ArrDelay").isNotNull() & (F.col("Cancelled") == 0) & F.col("Distance").isNotNull()
+    ).drop("Year", "CancellationCode", "Cancelled")
     if dedup_order is None:
         return df.dropDuplicates(["unique_id"])
     return dedup_deterministic(df, ["unique_id"], dedup_order)
@@ -119,11 +114,15 @@ def prepare_data(
     use_udf: bool = False,
 ) -> DataFrame:
     """C10 (/root/reference/src/main/dataset_utils.py:138-147): the full
-    feature-engineering lineage → 18-column training frame."""
+    feature-engineering lineage → 18-column training frame.
+
+    The reference also adds the C5 polar encoding here, but none of its
+    columns is among the 18 outputs, so it is left out: its global-max
+    branch is a second scan of the input that Catalyst does not prune
+    (`functions.time_parse.add_polar_coordinates` keeps C5 itself)."""
     df = append_unique_id(flights)
     df = clean_data(df, dedup_order=dedup_order)
     df = add_cyclical_times(df)
-    df = add_polar_coordinates(df)
     df = extend_with_plane_data(df, plane)
     df = add_custom_features(df, use_udf=use_udf)
     return df.select(NUMERIC_FEATURES + CATEGORICAL_FEATURES + [TARGET_COL])

@@ -1597,7 +1597,7 @@ def _trained_tree(spark: SparkSession):
     return _TREE_CACHE[key]
 
 
-def _metrics_row(spark: SparkSession, metrics: dict, n_val: int) -> DataFrame:
+def _metrics_row(spark: SparkSession, metrics: dict) -> DataFrame:
     """Shared (mae, rmse, n_val, contract_ok) row for the rows-only
     estimator queries: the driver's weaker rows-only check becomes
     meaningful because a broken training run (NaN/zero metrics, empty
@@ -1605,7 +1605,7 @@ def _metrics_row(spark: SparkSession, metrics: dict, n_val: int) -> DataFrame:
     surfaces as contract_ok=false in the recorded row."""
     import math
 
-    mae, rmse = float(metrics["mae"]), float(metrics["rmse"])
+    mae, rmse, n_val = float(metrics["mae"]), float(metrics["rmse"]), metrics["rows"]
     ok = (
         math.isfinite(mae)
         and math.isfinite(rmse)
@@ -1624,9 +1624,7 @@ def q_ml_decision_tree_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     DecisionTreeRegressor maxDepth=15/maxBins=60/seed=42 on a 90/10
     split; returns MAE/RMSE/val-count as one row."""
     _, val_preds = _trained_tree(spark)
-    metrics = evaluate_regression(val_preds)
-    n_val = val_preds.count()
-    return _metrics_row(spark, metrics, n_val)
+    return _metrics_row(spark, evaluate_regression(val_preds))
 
 
 @query("ml_feature_importance")
@@ -1667,9 +1665,7 @@ def q_ml_linear_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFram
     maxIter=3/regParam=0.01/elasticNetParam=0.5."""
     _, encoded = _encoded_flights(spark)
     _, val_preds = train_linear_regression(encoded)
-    metrics = evaluate_regression(val_preds)
-    n_val = val_preds.count()
-    return _metrics_row(spark, metrics, n_val)
+    return _metrics_row(spark, evaluate_regression(val_preds))
 
 
 @query("ml_random_forest_metrics")
@@ -1687,9 +1683,7 @@ def q_ml_random_forest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, encoded = _encoded_flights(spark)
     _, val_preds = train_random_forest(encoded, num_trees=10, max_depth=8)
-    metrics = evaluate_regression(val_preds)
-    n_val = val_preds.count()
-    return _metrics_row(spark, metrics, n_val)
+    return _metrics_row(spark, evaluate_regression(val_preds))
 
 
 @query("ml_gbt_metrics")
@@ -1703,9 +1697,7 @@ def q_ml_gbt_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, encoded = _encoded_flights(spark)
     _, val_preds = train_gbt(encoded)
-    metrics = evaluate_regression(val_preds)
-    n_val = val_preds.count()
-    return _metrics_row(spark, metrics, n_val)
+    return _metrics_row(spark, evaluate_regression(val_preds))
 
 
 @query("ml_cross_validation")

@@ -212,3 +212,43 @@ def test_cli_train_and_score(spark, flights_csv, tmp_path):
     preds = spark.read.parquet(str(out / "test_predictions.parquet"))
     labels = {r.predicted_label for r in preds.select("predicted_label").distinct().collect()}
     assert labels <= {"early", "on time", "delayed"}
+
+
+#: Spark jobs of one train + score run on the 3000-row fixture, audited
+#: with zero slack in the shared test session (36 at 2, 4 and 8 local
+#: cores): one CSV decode per input, one metrics aggregate per
+#: evaluation, and no count() actions of the CLI's own.
+CLI_JOB_BUDGET = 36
+
+
+@pytest.fixture(scope="module")
+def cli_run_ledger(spark, flights_csv, tmp_path_factory):
+    """One train + score run under a job group: its job ids, and the
+    session's persisted-RDD count before and after."""
+    sc = spark.sparkContext
+    cached_before = sc._jsc.getPersistentRDDs().size()
+    group = "cli-run-ledger"
+    sc.setJobGroup(group, "one CLI train + score run")
+    try:
+        out = str(tmp_path_factory.mktemp("ledger") / "out")
+        run([flights_csv, out, "--test-file", flights_csv])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {
+        "jobs": sc.statusTracker().getJobIdsForGroup(group),
+        "cached_before": cached_before,
+        "cached_after": sc._jsc.getPersistentRDDs().size(),
+    }
+
+
+def test_cli_releases_its_caches(cli_run_ledger):
+    """Every frame the CLI persists is unpersisted on exit, so a second
+    run in the same session recomputes instead of reusing stale blocks."""
+    assert cli_run_ledger["cached_after"] == cli_run_ledger["cached_before"]
+
+
+def test_cli_job_budget(cli_run_ledger):
+    n_jobs = len(cli_run_ledger["jobs"])
+    assert n_jobs <= CLI_JOB_BUDGET, f"{n_jobs} jobs > audited budget {CLI_JOB_BUDGET}"

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flight_delay_prediction_using_pyspark_spark.operators import graph as G
@@ -30,6 +31,30 @@ def test_triangle_stats_triangle_free(spark):
     row = G.triangle_stats(_edges(spark, star)).first()
     assert row.n_triangles == 0
     assert row.n_wedges == 6
+
+
+@pytest.mark.parametrize(
+    "pairs, edges_sql",
+    [
+        ([], "SELECT 1::BIGINT AS a, 2::BIGINT AS b WHERE false"),
+        ([(1, 2)], "SELECT 1::BIGINT AS a, 2::BIGINT AS b"),
+    ],
+    ids=["empty", "one_edge"],
+)
+def test_triangle_stats_degenerate_match_oracle(spark, pairs, edges_sql):
+    """Degenerate inputs against the catalog's SQL oracle: an empty edge
+    set has 0 nodes, edges and triangles (DuckDB's SUM over no rows
+    makes n_wedges NULL), and a wedge-free graph has NULL clustering."""
+    import duckdb
+
+    from flight_delay_prediction_using_pyspark_spark.plans.graph_queries import _EDGES_SQL
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import ORACLES
+    from tests.oracle_util import compare_frames
+
+    got = G.triangle_stats(_edges(spark, pairs)).toPandas()
+    oracle = ORACLES["copurchase_triangle_stats"].replace(_EDGES_SQL, f"e AS ({edges_sql})")
+    assert got.n_edges.tolist() == [len(pairs)]
+    assert compare_frames(got, duckdb.connect().execute(oracle).fetchdf()) == []
 
 
 def test_pagerank_mass_and_symmetry(spark):

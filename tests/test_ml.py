@@ -91,6 +91,28 @@ def test_decision_tree_learns_planted_signal(spark, prepared):
     assert math.isfinite(metrics["rmse"])
 
 
+def test_evaluate_regression_matches_regression_evaluator(spark, encoded):
+    """The one-aggregate evaluator gives RegressionEvaluator's MAE and
+    RMSE and the frame's row count."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    _, out = encoded
+    _, val_preds = train_linear_regression(out)
+    metrics = evaluate_regression(val_preds)
+    for name in ("mae", "rmse"):
+        want = RegressionEvaluator(labelCol="ArrDelay", metricName=name).evaluate(val_preds)
+        assert metrics[name] == pytest.approx(want, rel=1e-12, abs=0)
+    assert metrics["rows"] == val_preds.count() > 0
+
+
+def test_evaluate_regression_counts_but_skips_null_labels(spark):
+    df = spark.createDataFrame(
+        [(1.0, 2.0), (None, 5.0), (3.0, 1.0)], "ArrDelay double, prediction double"
+    )
+    assert evaluate_regression(df) == {"mae": 1.5, "rmse": math.sqrt(2.5), "rows": 3}
+    assert evaluate_regression(df.filter("ArrDelay IS NULL"))["mae"] is None
+
+
 def test_feature_importance_decodes_names(spark, prepared):
     pipeline = build_feature_pipeline(CATEGORICAL_FEATURES, NUMERIC_FEATURES)
     planted = prepared.withColumn("ArrDelay", (F.col("DepDelay") * 1.0).cast("double"))

@@ -556,15 +556,27 @@ def test_mg_candidates_superset_under_adversarial_partitioning(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE_DIR, "documents")
     shard_dir = str(tmp_path / "documents.parquet")
     docs.repartition(16).write.parquet(shard_dir)
-    sharded = spark.read.parquet(shard_dir)
-    assert sharded.rdd.getNumPartitions() >= 8  # the adversarial layout holds
+    # Split packing merges small files up to max(openCost, bytes/core),
+    # so on few cores the 16 files would scan as a handful of
+    # partitions. An open cost equal to the split size puts every file
+    # in its own scan partition, whatever the core count.
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    for k in keys:
+        spark.conf.set(k, str(128 * 1024 * 1024))
+    try:
+        sharded = spark.read.parquet(shard_dir)
+        assert sharded.rdd.getNumPartitions() >= 8  # the adversarial layout holds
 
-    got = {
-        (r.tok, r.freq)
-        for r in QUERIES["doc_token_mg_heavy_hitters"](
-            spark, str(tmp_path)
-        ).collect()
-    }
+        got = {
+            (r.tok, r.freq)
+            for r in QUERIES["doc_token_mg_heavy_hitters"](
+                spark, str(tmp_path)
+            ).collect()
+        }
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     toks = docs.select(
         F.explode(TA.tokens(F.col("text"))).alias("tok")
     )
