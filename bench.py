@@ -4,7 +4,7 @@ Prints ONE JSON line (the only stdout output, and the last line):
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>}
 
-The headline set is 171 queries covering every family (core relational
+The headline set is 186 queries covering every family (core relational
 incl. all 22 TPC-H shapes, flights-parity, ML, text/dedup/tokenizer,
 ANN/clustering incl. two-level IVF and drift re-fit, multimodal incl.
 the executable PPM codec, streaming, temporal, drift/quality
@@ -18,10 +18,11 @@ catalog (mirrored to bench_last.json under all_queries).
 
 Each query is timed end-to-end (plan build + execution to a driver-side
 collect); the recorded number is the MIN over independent reps (2, or
-3 when sub-second; cross-call-memoized ml_* queries record their one
-cold rep — see MEMOIZED_ONE_REP), with all rep readings mirrored to
-bench_last.json under "reps" and the contention canary
-(ml_decision_tree_metrics vs its quiet-window reference) carried in
+3 when sub-second), except that a query whose first rep added an entry
+to the session memo (plans/queries.session_memo) records that one cold
+rep (see _query_reps).  All rep readings are mirrored to
+bench_last.json under "reps", and the contention canary
+(ml_decision_tree_metrics vs its quiet-window reference) is carried in
 the contract line itself.  Regression diagnostics vs
 bench_baseline.json go to bench_regressions.txt, NOT to stdout/stderr,
 so no diagnostic line can displace the contract line in a
@@ -371,95 +372,6 @@ def _scaling_main() -> None:
                       "out": "bench_scaling.json"}, separators=(",", ":")))
 
 
-#: Queries whose cost is memoized ACROSS calls in one session (the
-#: ml_* family shares _ENCODED_CACHE/_TREE_CACHE fits keyed by
-#: SparkContext): a second rep would measure a cache hit, not the
-#: query, so these record their single cold rep. This also keeps
-#: ml_decision_tree_metrics meaningful as the host-contention canary
-#: (quiet-window ≈ 9.0 s at sf0.1 — SCALE.md): a cache-hit "minimum"
-#: would hide exactly the load signal the canary exists to carry.
-MEMOIZED_ONE_REP = {
-    "ml_feature_pipeline_stats",
-    "ml_decision_tree_metrics",
-    "ml_feature_importance",
-    "ml_linear_regression_metrics",
-    "ml_random_forest_metrics",
-    "ml_gbt_metrics",
-    "ml_cross_validation",
-    "ml_isotonic_calibration",
-    # BPE training is memoized per session+SF (_BPE_CACHE): a second
-    # induction rep would measure the cached merge list, not training.
-    "corpus_bpe_vocab_induction",
-    # batched trainer likewise (_BPE_BATCH_CACHE)
-    "corpus_bpe_batched_merges",
-    # fit memoized per session (_TREESQL_CACHE): the recorded cold rep
-    # includes the one-time fit, like the rest of the ml family
-    "ml_tree_sql_scoring_parity",
-    # whole-result memo (_DEEP_RESULT_CACHE): rep 2 would serve a
-    # driver-side tuple and hide the fit + doomed-compile measurement
-    "ml_tree_sql_codegen_ceiling",
-    "ml_tree_sql_depth15_parity",
-}
-
-#: Consumer groups of the PERSISTED cross-query caches (_PAIR_CACHE /
-#: _GRAPH_CACHE in plans/text_queries.py and plans/graph_queries.py):
-#: within each group the FIRST query to run builds and persists the
-#: shared frame, so its rep 2 is a cache hit and min-of-reps would
-#: silently drop the build cost from the headline (round-8 ADVICE).
-#: At run time the first group member present in the run order joins
-#: MEMOIZED_ONE_REP — it records its one COLD rep, the build cost
-#: stays attributed, and later group members (warm either way) keep
-#: min-of-reps. Listed in HEADLINE order per group.
-SHARED_CACHE_GROUPS: dict[str, list[str]] = {
-    # _sigs_cached (shingle + minhash signature frame)
-    "minhash_sigs": [
-        "dedup_minhash_lsh_pairs",
-        "training_corpus_prep",
-        "corpus_full_pipeline",
-        "dedup_containment_pairs",
-        "corpus_dedup_survivor_bias",
-        "dedup_minhash_band_tuning",
-        "corpus_leakage_safe_split",
-        "dedup_bbit_minhash_est",
-        "dedup_minhash_clusters",
-        "dedup_lsh_levenshtein",
-        "corpus_decontaminate",
-        "corpus_decontaminate_report",
-        "dedup_minhash_est_accuracy",
-        "dedup_family_agreement",
-    ],
-    # _lsh_pairs_cached (band-bucket join + Jaccard verify on top of sigs)
-    "minhash_pairs": [
-        "dedup_minhash_lsh_pairs",
-        "corpus_leakage_safe_split",
-        "dedup_minhash_clusters",
-        "dedup_lsh_levenshtein",
-        "dedup_family_agreement",
-    ],
-    # _simhash_pairs_cached
-    "simhash": ["dedup_simhash_pairs", "dedup_family_agreement"],
-    # _winnow_fps_cached
-    "winnow": ["dedup_winnowing_pairs", "doc_winnowing_census"],
-    # _edges_cached (copurchase graph)
-    "graph": [
-        "copurchase_triangle_stats",
-        "copurchase_pagerank_top10",
-        "copurchase_kcore_census",
-    ],
-}
-
-
-def _one_rep_names(names: list[str]) -> set[str]:
-    """MEMOIZED_ONE_REP plus the first present consumer of each shared
-    persisted cache, resolved against the actual run order."""
-    out = set(MEMOIZED_ONE_REP)
-    order = {n: i for i, n in enumerate(names)}
-    for members in SHARED_CACHE_GROUPS.values():
-        present = [m for m in members if m in order]
-        if present:
-            out.add(min(present, key=lambda m: order[m]))
-    return out
-
 #: Canary query + its quiet-window reference (SCALE.md): a cold rep
 #: far above quiet_ref means the run is contaminated by host load and
 #: per-query readings should not be adjudicated as regressions.
@@ -508,8 +420,7 @@ TOTAL_QUIET_REF_FALLBACK_SEC = 380.0
 #: volume — round-11 closing run: 2-3.6x on these while batch
 #: neighbors held ~1x), so the events-streaming family always gets a
 #: third rep to keep one load burst from stamping a phantom
-#: regression. The ann_*_ingest streams are excluded: they are
-#: first-consumer cache builders (one-rep by construction).
+#: regression.
 STREAMING_MIN3 = {
     "events_streaming_dedup",
     "events_streaming_dedup_builtin",
@@ -582,6 +493,38 @@ def _canary_main() -> None:
     }, separators=(",", ":")), flush=True)
 
 
+def _query_reps(spark, sf_dir: str, name: str) -> list[float]:
+    """Wall seconds of each independent rep of one catalog query: 2,
+    or 3 when sub-second (scheduler jitter is proportionally worst
+    there) or in STREAMING_MIN3. A query whose first rep added a
+    session-memo entry (on any thread) keeps that one cold rep: a
+    second rep would time the memo hit, dropping the build cost from
+    the headline and the load signal from the ml_* canary."""
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        QUERIES,
+        memo_size,
+    )
+
+    reps: list[float] = []
+    n_reps = 3 if name in STREAMING_MIN3 else 2
+    memo_before = memo_size(spark)
+    while len(reps) < n_reps:
+        start = time.perf_counter()
+        df = QUERIES[name](spark, sf_dir)
+        # Force full execution incl. result materialization to
+        # driver. Arrow toPandas, matching how the driver's
+        # correctness gate consumes results (collect()'s per-row
+        # Python objects would bill large-output queries ~2x for
+        # pure driver-side overhead).
+        df.toPandas()
+        reps.append(round(time.perf_counter() - start, 3))
+        if len(reps) == 1 and memo_size(spark) > memo_before:
+            break
+        if n_reps == 2 and len(reps) == 2 and min(reps) < 1.0:
+            n_reps = 3
+    return reps
+
+
 def main() -> None:
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING") == "1":
         _scaling_main()
@@ -618,12 +561,7 @@ def main() -> None:
     # Recorded number = per-query MIN over reps (round-7 verdict item
     # 3: single-run readings on a shared box inflate 1.3-1.8× under
     # load and cost a round of adjudication per fluke; the minimum is
-    # the structural reading). Reps are fully independent executions —
-    # each wrapped-query entry releases the previous rep's scratch —
-    # except the MEMOIZED_ONE_REP family (cross-call fit caches), which
-    # records its one cold rep. Sub-second queries (where scheduler
-    # jitter is proportionally worst) get a third rep; it costs ~0.4 s
-    # each.
+    # the structural reading) — see _query_reps.
     timings: dict[str, float] = {}
     all_reps: dict[str, list[float]] = {}
     #: 1-min loadavg sampled as each query finishes — per-REGRESSION
@@ -632,22 +570,8 @@ def main() -> None:
     #: keeps the absolute level elevated; the SIGNAL is the spike
     #: relative to the battery's own band.
     load1: dict[str, float] = {}
-    one_rep = _one_rep_names(names)
     for name in names:
-        reps: list[float] = []
-        n_reps = 1 if name in one_rep else (3 if name in STREAMING_MIN3 else 2)
-        while len(reps) < n_reps:
-            start = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            # Force full execution incl. result materialization to
-            # driver. Arrow toPandas, matching how the driver's
-            # correctness gate consumes results (collect()'s per-row
-            # Python objects would bill large-output queries ~2x for
-            # pure driver-side overhead).
-            df.toPandas()
-            reps.append(round(time.perf_counter() - start, 3))
-            if n_reps == 2 and len(reps) == 2 and min(reps) < 1.0:
-                n_reps = 3
+        reps = _query_reps(spark, sf_dir, name)
         timings[name] = round(min(reps), 2)
         all_reps[name] = reps
         load1[name] = round(os.getloadavg()[0], 1)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flight_delay_prediction_using_pyspark_spark.operators import graph as G
-from flight_delay_prediction_using_pyspark_spark.plans.queries import query
+from flight_delay_prediction_using_pyspark_spark.plans.queries import query, session_memo
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
 
 #: Shared edge CTE for the oracles: distinct a<b part pairs with
@@ -32,21 +32,18 @@ e AS (
 """
 
 
-#: One persisted co-purchase edge frame per (session, sf_dir): all
-#: graph queries (triangles, PageRank, k-core) read the SAME edge set,
-#: and its derivation (lineitem self-join + distinct-order support
-#: count) dominates each query's cost. Callers receive a select("*")
-#: wrapper so the operators' own persist/unpersist bookkeeping cannot
-#: drop the shared cache (the cache manager still substitutes the
-#: cached subtree into the wrapper's plan).
-_GRAPH_CACHE: dict = {}
-
-
 def _edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _GRAPH_CACHE:
-        _GRAPH_CACHE[key] = copurchase_edges(spark, sf_dir).persist()
-    return _GRAPH_CACHE[key].select("*")
+    """One persisted co-purchase edge frame per session and sf_dir: all
+    graph queries (triangles, PageRank, k-core) read the SAME edge set,
+    and its derivation (lineitem self-join + distinct-order support
+    count) dominates each query's cost. Callers receive a select("*")
+    wrapper so the operators' own persist/unpersist bookkeeping cannot
+    drop the shared cache (the cache manager still substitutes the
+    cached subtree into the wrapper's plan)."""
+    edges = session_memo(
+        spark, ("graph", sf_dir), lambda: copurchase_edges(spark, sf_dir).persist()
+    )
+    return edges.select("*")
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,11 +40,32 @@ from flight_delay_prediction_using_pyspark_spark.sources.readers import load_tab
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-#: Per-query scratch caches (see scratch_persist), keyed by the
-#: BUILDING thread's ident. Deliberately NOT the module-level memo
-#: caches (_ENCODED_CACHE, _GRAPH_CACHE) whose whole point is
-#: surviving across sibling queries.
+#: Per-query scratch caches (see scratch_persist), keyed by the BUILDING
+#: thread's ident — unlike session_memo, which serves sibling queries.
 _SCRATCH: dict[int, list[DataFrame]] = {}
+
+#: Session memo registry (see session_memo): SparkContext → {key: value}.
+_MEMO: dict[SparkContext, dict] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], object]):
+    """The value stored under `key` for this session, or `build()`'s
+    result, stored on first request — for deterministic work sibling
+    catalog queries share (a fit, a persisted pair frame, a merge list).
+    Stopped contexts' entries (stop() sets `_jsc` to None) are dropped
+    at every call, so nothing outlives its session. No lock: builds
+    under different keys must overlap on run_concurrently threads."""
+    for sc in [sc for sc in list(_MEMO) if sc._jsc is None]:
+        _MEMO.pop(sc, None)
+    memo = _MEMO.setdefault(spark.sparkContext, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def memo_size(spark: SparkSession) -> int:
+    """Number of entries memoized for this session so far."""
+    return len(_MEMO.get(spark.sparkContext, ()))
 
 
 def scratch_persist(df: DataFrame) -> DataFrame:
@@ -158,7 +180,7 @@ def run_concurrently(*thunks: Callable[[], object]) -> list[object]:
                 with _SCRATCH_LOCK:
                     _SCRATCH.setdefault(caller, []).extend(frames)
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
         futures = [pool.submit(wrap, i, t) for i, t in enumerate(thunks)]
         errors = [
             (i, f.exception()) for i, f in enumerate(futures) if f.exception()
@@ -1532,16 +1554,11 @@ def _prepared_flights(spark: SparkSession):
     )
 
 
-# The three ml_* queries share one fitted pipeline: fitting is
+# The ml_* queries share one fitted pipeline: fitting is
 # deterministic (same frame, same seeds), so re-fitting per query only
-# burns time. Keyed by SparkContext id — a fresh driver session gets a
-# fresh fit; the cached encoded frame is persist()ed.
-_ENCODED_CACHE: dict[int, tuple] = {}
-
-
+# burns time. The cached encoded frame is persist()ed.
 def _encoded_flights(spark: SparkSession):
-    key = id(spark.sparkContext)
-    if key not in _ENCODED_CACHE:
+    def build():
         # Compact the (small) training frame before fitting: estimator
         # fits and tree induction run dozens of internal jobs over it,
         # and 64 near-empty partitions mean 64 scheduled tasks per job.
@@ -1553,8 +1570,9 @@ def _encoded_flights(spark: SparkSession):
         prepared = _prepared_flights(spark).repartition(2).persist()
         pipeline = build_feature_pipeline(P.CATEGORICAL_FEATURES, P.NUMERIC_FEATURES)
         model = pipeline.fit(prepared)
-        _ENCODED_CACHE[key] = (model, model.transform(prepared).persist())
-    return _ENCODED_CACHE[key]
+        return model, model.transform(prepared).persist()
+
+    return session_memo(spark, ("encoded_flights",), build)
 
 
 @query("ml_feature_pipeline_stats")
@@ -1584,17 +1602,12 @@ def q_ml_feature_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TREE_CACHE: dict[int, tuple] = {}
-
-
 def _trained_tree(spark: SparkSession):
     """Memoized DT fit on the shared encoded frame (same seeds ⇒ same
     model; the metrics and importance queries share one training)."""
-    key = id(spark.sparkContext)
-    if key not in _TREE_CACHE:
-        _, encoded = _encoded_flights(spark)
-        _TREE_CACHE[key] = train_decision_tree(encoded)
-    return _TREE_CACHE[key]
+    return session_memo(
+        spark, ("trained_tree",), lambda: train_decision_tree(_encoded_flights(spark)[1])
+    )
 
 
 def _metrics_row(spark: SparkSession, metrics: dict) -> DataFrame:
@@ -1889,8 +1902,6 @@ def q_ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Transpiled-tree scoring (round 8): fit memoized per session — the
 # synthetic frame is SF-independent, so one small deterministic fit
 # serves every invocation.
-_TREESQL_CACHE: dict[int, tuple] = {}
-
 _TREESQL_FEATURES = ["DepDelay", "Distance", "DepTime"]
 
 
@@ -1902,8 +1913,7 @@ def _treesql_fit(spark: SparkSession):
         RandomForestRegressor,
     )
 
-    key = id(spark.sparkContext)
-    if key not in _TREESQL_CACHE:
+    def build():
         df = (
             flights_df(spark, 2000)
             .select(
@@ -1929,8 +1939,9 @@ def _treesql_fit(spark: SparkSession):
         gbt = GBTRegressor(maxIter=5, maxDepth=3, seed=42, stepSize=0.1).fit(
             assembled
         )
-        _TREESQL_CACHE[key] = (tree, rf, gbt, assembled)
-    return _TREESQL_CACHE[key]
+        return tree, rf, gbt, assembled
+
+    return session_memo(spark, ("treesql_fit",), build)
 
 
 @query(
@@ -2018,11 +2029,6 @@ def q_ml_tree_sql_scoring_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # docstring for the full probe table)
 # ---------------------------------------------------------------------------
 
-#: Deep-fit memo: (SparkContext id, n_rows, depth) → fitted model.
-#: The synthetic frame is SF-independent and partition-pinned, so one
-#: deterministic fit serves every invocation.
-_DEEPTREE_CACHE: dict[tuple[int, int, int], object] = {}
-
 _DEEP_FEATS = ["f1", "f2", "f3"]
 
 
@@ -2056,32 +2062,33 @@ def _deep_synth(spark: SparkSession, n_rows: int) -> DataFrame:
 def _deep_fit(spark: SparkSession, n_rows: int, depth: int):
     """DecisionTreeRegressor(maxDepth=depth, maxBins=60, seed=42) — the
     reference's own tree config (reference src/main/helper_methods.py:301
-    uses maxDepth=15, maxBins=60) — on the deterministic synth frame."""
+    uses maxDepth=15, maxBins=60) — on the deterministic synth frame,
+    which is SF-independent and partition-pinned, so one memoized fit
+    serves the session."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import DecisionTreeRegressor
 
-    key = (id(spark.sparkContext), n_rows, depth)
-    if key not in _DEEPTREE_CACHE:
+    def build():
         assembled = (
             VectorAssembler(inputCols=_DEEP_FEATS, outputCol="features")
             .transform(_deep_synth(spark, n_rows))
             .persist()
         )
         try:
-            _DEEPTREE_CACHE[key] = DecisionTreeRegressor(
+            return DecisionTreeRegressor(
                 maxDepth=depth, maxBins=60, seed=42
             ).fit(assembled)
         finally:
             assembled.unpersist()
-    return _DEEPTREE_CACHE[key]
+
+    return session_memo(spark, ("deep_fit", n_rows, depth), build)
 
 
-def _parity_mismatches(spark, model, scored_col) -> tuple[int, int]:
+def _parity_mismatches(spark, model, n_rows: int, scored_col) -> tuple[int, int]:
     """(n_rows, mismatches) of model.transform vs a scoring column
-    factory over the deep synth frame the model was fitted on."""
+    over the `n_rows` deep synth frame the model was fitted on."""
     from pyspark.ml.feature import VectorAssembler
 
-    n_rows = _DEEP_ROWS_BY_MODEL[id(model)]
     assembled = VectorAssembler(
         inputCols=_DEEP_FEATS, outputCol="features"
     ).transform(_deep_synth(spark, n_rows))
@@ -2095,13 +2102,10 @@ def _parity_mismatches(spark, model, scored_col) -> tuple[int, int]:
     return int(r["n"]), int(r["mism"])
 
 
-_DEEP_ROWS_BY_MODEL: dict[int, int] = {}
-
-#: Whole-result memo for the two ceiling queries: every leg (fit,
-#: doomed-compile probe, parse of a 74-87 KB expression, parity agg)
-#: is deterministic per session, and the expensive one IS the
-#: measurement — pay it once, serve repeats from the tuple.
-_DEEP_RESULT_CACHE: dict[tuple[int, str], tuple] = {}
+# The two ceiling queries memoize their whole result row: every leg
+# (fit, doomed-compile probe, parse of a 74-87 KB expression, parity
+# agg) is deterministic per session, and the expensive one IS the
+# measurement — pay it once, serve repeats from the tuple.
 
 
 @query(
@@ -2147,8 +2151,7 @@ def q_ml_tree_sql_codegen_ceiling(
         wholestage_compiles,
     )
 
-    key = (id(spark.sparkContext), "ceiling")
-    if key not in _DEEP_RESULT_CACHE:
+    def build():
         n_rows = 20000
         # the two fits are independent deterministic jobs — overlap
         # them (guide §2.6); likewise the two codegen probes below
@@ -2158,8 +2161,6 @@ def q_ml_tree_sql_codegen_ceiling(
             lambda: _deep_fit(spark, n_rows, 8),
             lambda: _deep_fit(spark, n_rows, 11),
         )
-        _DEEP_ROWS_BY_MODEL[id(small)] = n_rows
-        _DEEP_ROWS_BY_MODEL[id(large)] = n_rows
         raw = _deep_synth(spark, n_rows)
         _WS = "spark.sql.codegen.wholeStage"
         exprs = {
@@ -2190,7 +2191,7 @@ def q_ml_tree_sql_codegen_ceiling(
                 if tag == "large":
                     spark.conf.set(_WS, "false")
                 _, mism = _parity_mismatches(
-                    spark, model, F.expr(exprs[tag])
+                    spark, model, n_rows, F.expr(exprs[tag])
                 )
             finally:
                 spark.conf.set(_WS, prev)
@@ -2199,7 +2200,7 @@ def q_ml_tree_sql_codegen_ceiling(
                 "in_ws": in_ws and n_sub > 0,
                 "mism": mism,
             }
-        _DEEP_RESULT_CACHE[key] = (
+        return (
             results["small"]["leaves"] <= WHOLESTAGE_SAFE_LEAVES,
             results["large"]["leaves"] > WHOLESTAGE_SAFE_LEAVES,
             results["small"]["in_ws"],
@@ -2208,7 +2209,7 @@ def q_ml_tree_sql_codegen_ceiling(
             results["large"]["mism"],
         )
     return spark.createDataFrame(
-        [_DEEP_RESULT_CACHE[key]],
+        [session_memo(spark, ("deep_result", "ceiling"), build)],
         "small_under_ceiling boolean, large_over_ceiling boolean, "
         "small_in_wholestage boolean, large_in_wholestage boolean, "
         "small_mismatch long, large_mismatch long",
@@ -2262,11 +2263,9 @@ def q_ml_tree_sql_depth15_parity(
         vectorized_tree_scorer,
     )
 
-    key = (id(spark.sparkContext), "depth15")
-    if key not in _DEEP_RESULT_CACHE:
+    def build():
         n_rows = 2000
         model = _deep_fit(spark, n_rows, 15)
-        _DEEP_ROWS_BY_MODEL[id(model)] = n_rows
         leaves = count_leaves(model)
 
         expr = tree_to_case_expr(model, _DEEP_FEATS)
@@ -2284,14 +2283,14 @@ def q_ml_tree_sql_depth15_parity(
             # under one toggle (guide §2.6)
             spark.conf.set(_WS, "false")
             (n, sql_mism), (_, udf_mism) = run_concurrently(
-                lambda: _parity_mismatches(spark, model, F.expr(expr)),
+                lambda: _parity_mismatches(spark, model, n_rows, F.expr(expr)),
                 lambda: _parity_mismatches(
-                    spark, model, scorer(*[F.col(c) for c in _DEEP_FEATS])
+                    spark, model, n_rows, scorer(*[F.col(c) for c in _DEEP_FEATS])
                 ),
             )
         finally:
             spark.conf.set(_WS, prev)
-        _DEEP_RESULT_CACHE[key] = (
+        return (
             n,
             leaves > WHOLESTAGE_SAFE_LEAVES,
             scoring_strategy(model) == "vectorized",
@@ -2299,7 +2298,7 @@ def q_ml_tree_sql_depth15_parity(
             udf_mism,
         )
     return spark.createDataFrame(
-        [_DEEP_RESULT_CACHE[key]],
+        [session_memo(spark, ("deep_result", "depth15"), build)],
         "n_rows long, leaves_over_ceiling boolean, "
         "strategy_vectorized boolean, sql_mismatch long, "
         "udf_mismatch long",

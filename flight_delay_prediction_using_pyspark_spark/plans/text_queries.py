@@ -17,6 +17,7 @@ from flight_delay_prediction_using_pyspark_spark.operators import aggregates as 
 from flight_delay_prediction_using_pyspark_spark.plans.queries import (
     query,
     scratch_persist,
+    session_memo,
     spread_if_narrow,
 )
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
@@ -366,37 +367,34 @@ def _minhash_cluster_oracle(threshold: float) -> str:
 
 
 
-#: Memoized MinHash-LSH pair frames keyed by (context, sf_dir, threshold):
-#: three catalog queries (pairs, clusters, levenshtein-verify) consume the
-#: SAME pair graph — persist it once instead of recomputing signatures,
-#: band buckets, and the verify join per query.
-_PAIR_CACHE: dict = {}
-
-
 def _sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted minhash-signature frame per (session, sf_dir),
+    """One persisted minhash-signature frame per session and sf_dir,
     shared by every LSH verify variant (Jaccard, containment,
     clusters, levenshtein) — the shingle+sign stage dominates their
     cost."""
-    key = ("sigs", id(spark.sparkContext), sf_dir)
-    if key not in _PAIR_CACHE:
-        _PAIR_CACHE[key] = TD.minhash_signatures(
+    return session_memo(
+        spark,
+        ("sigs", sf_dir),
+        lambda: TD.minhash_signatures(
             load_table(spark, sf_dir, "documents"),
             parallelism=spark.sparkContext.defaultParallelism,
-        ).persist()
-    return _PAIR_CACHE[key]
+        ).persist(),
+    )
 
 
 def _lsh_pairs_cached(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> DataFrame:
-    key = (id(spark.sparkContext), sf_dir, threshold)
-    if key not in _PAIR_CACHE:
-        pairs = TD.minhash_lsh_pairs(
+    """One persisted MinHash-LSH pair frame per session, sf_dir and
+    threshold: the pairs, clusters and levenshtein-verify queries (and
+    more) consume the SAME pair graph — build it once."""
+    return session_memo(
+        spark,
+        ("lsh_pairs", sf_dir, threshold),
+        lambda: TD.minhash_lsh_pairs(
             load_table(spark, sf_dir, "documents"),
             threshold=threshold,
             sigs=_sigs_cached(spark, sf_dir),
-        ).persist()
-        _PAIR_CACHE[key] = pairs
-    return _PAIR_CACHE[key]
+        ).persist(),
+    )
 
 
 @query("dedup_minhash_lsh_pairs", oracle=_minhash_oracle(0.5))
@@ -438,19 +436,20 @@ def _simhash_oracle(max_hamming: int, chunks: int) -> str:
 
 
 def _simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted SimHash pair frame per (session, sf_dir): both
+    """One persisted SimHash pair frame per session and sf_dir: both
     the pair query and the cross-family agreement audit consume the
     identical (Hamming ≤ 3, 4-chunk) pair set — the tokenize + 32
     bit-vote signature stage dominates, so build it once."""
-    key = ("simhash_pairs", id(spark.sparkContext), sf_dir)
-    if key not in _PAIR_CACHE:
-        _PAIR_CACHE[key] = TD.simhash_pairs(
+    return session_memo(
+        spark,
+        ("simhash_pairs", sf_dir),
+        lambda: TD.simhash_pairs(
             load_table(spark, sf_dir, "documents"),
             max_hamming=3,
             chunks=4,
             parallelism=spark.sparkContext.defaultParallelism,
-        ).persist()
-    return _PAIR_CACHE[key]
+        ).persist(),
+    )
 
 
 @query("dedup_simhash_pairs", oracle=_simhash_oracle(3, 4))
@@ -1272,25 +1271,23 @@ _WINNOW_CTES = f"""d AS (
 
 def _winnow_fps_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One persisted (doc_id, fp) winnowing-fingerprint frame per
-    (session, sf_dir), shared by the census and pairs queries — the
+    session and sf_dir, shared by the census and pairs queries — the
     O(tokens) k-gram hashing pass dominates both. Repartitioned to the
     session parallelism first: the testdata table is a single parquet
     file, and an expensive map over one input split would otherwise
     run single-task (the cluster-scale analogue is
     files.maxPartitionBytes, but an explicit spread is what a one-file
     table needs)."""
-    key = ("winnow", id(spark.sparkContext), sf_dir)
-    if key not in _PAIR_CACHE:
-        docs = spread_if_narrow(
-            load_table(spark, sf_dir, "documents")
-        )
-        _PAIR_CACHE[key] = docs.select(
+    def build():
+        docs = spread_if_narrow(load_table(spark, sf_dir, "documents"))
+        return docs.select(
             "doc_id",
             F.explode(
                 TA.winnowing_fingerprints("text", k=_WINNOW_K, w=_WINNOW_W)
             ).alias("fp"),
         ).persist()
-    return _PAIR_CACHE[key]
+
+    return session_memo(spark, ("winnow", sf_dir), build)
 
 
 @query(
@@ -4503,26 +4500,22 @@ def _bpe_induction_oracle(n_merges: int) -> str:
     """
 
 
-#: Learned merge lists keyed by (SparkContext id, sf_dir) — the
-#: ml-family memoization pattern (_ENCODED_CACHE): training is
-#: deterministic, so the induction and apply queries share ONE
-#: training run per session instead of each paying the K sequential
-#: selection jobs. The cached object is the bounded Python merge
-#: list (n_merges tuples), never a frame.
-_BPE_CACHE: dict[tuple[int, str], list[tuple[int, str, str, int]]] = {}
-
-
 def _bpe_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, int]]:
+    """The learned merge list, memoized per session and sf_dir:
+    training is deterministic, so the induction and apply queries
+    share ONE training run per session instead of each paying the K
+    sequential selection jobs. The memoized object is the bounded
+    Python merge list (n_merges tuples), never a frame."""
     from flight_delay_prediction_using_pyspark_spark.text import bpe as B
 
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _BPE_CACHE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         words = scratch_persist(B.word_freq(docs))
-        _BPE_CACHE[key] = B.bpe_train(words, _BPE_N_MERGES)[0]
-    return _BPE_CACHE[key]
+        return B.bpe_train(words, _BPE_N_MERGES)[0]
+
+    return session_memo(spark, ("bpe_merges", sf_dir), build)
 
 
 @query("corpus_bpe_vocab_induction", oracle=_bpe_induction_oracle(_BPE_N_MERGES))
@@ -5083,27 +5076,23 @@ def _bpe_batched_oracle(n_rounds: int, batch_k: int, cap: int) -> str:
     )
 
 
-#: Batched-training memo, same pattern as _BPE_CACHE (deterministic
-#: fit per session+SF; the cached object is the bounded merge list).
-_BPE_BATCH_CACHE: dict[tuple[int, str], list[tuple[int, str, str, int]]] = {}
-
-
 def _bpe_batched_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, int]]:
+    """The batched trainer's merge list, memoized like _bpe_merges."""
     from flight_delay_prediction_using_pyspark_spark.text import bpe as B
 
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _BPE_BATCH_CACHE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         words = scratch_persist(B.word_freq(docs))
-        _BPE_BATCH_CACHE[key] = B.bpe_train_batched(
+        return B.bpe_train_batched(
             words,
             batch_k=_BPE_BATCH_K,
             cand_cap=_BPE_BATCH_CAP,
             n_rounds=_BPE_BATCH_ROUNDS,
         )[0]
-    return _BPE_BATCH_CACHE[key]
+
+    return session_memo(spark, ("bpe_batched_merges", sf_dir), build)
 
 
 @query(

@@ -112,17 +112,16 @@ def quantize_sql_expr(vec_sql: str, scale: int = DEFAULT_SCALE) -> str:
 # iteration builds a fresh one), vs ~3 ms for the parse of the
 # equivalent SQL string. The parsed tree is the SAME expression
 # (identical functions, literals, fold order), so results are
-# bit-identical — pinned by tests/test_similarity.py's
-# sql-vs-Column parity tests. Vector arguments are therefore SQL
-# expression TEXT (a column name or e.g. "slice(rq, 1, 8)"); the
-# public helpers also keep accepting a Column and fall back to the
-# (bit-identical, slower-to-build) Column path for compatibility.
+# bit-identical to the py_* driver twins and the DuckDB oracles —
+# pinned by tests/test_similarity.py's sql-text parity test. Vector
+# arguments are therefore SQL expression TEXT only (a column name or
+# e.g. "slice(rq, 1, 8)").
 #
 # CONTRACT of the string arguments (round-13 ADVICE): a string is
 # interpolated UNQUOTED into the generated SQL, so it must be a plain
 # identifier or already-valid SQL expression text. A column name that
 # needs backtick quoting (reserved word, special characters) must be
-# passed pre-quoted ("`my col`") or as a Column.
+# passed pre-quoted ("`my col`").
 
 
 def _dbl(x: float) -> str:
@@ -143,27 +142,15 @@ def _dbl(x: float) -> str:
 
 
 def _sq_dist_sql_expr(qv_sql: str, centroid: list[float]) -> str:
-    """SQL text of _sq_dist_expr's tree: Σ_j (double(qv_j) − c_j)² as
-    a left fold in array order — operand-order-identical to both
-    _sq_dist_expr and _sq_dist_sql."""
+    """Σ_j (double(qv_j) − c_j)² as Spark SQL text: a left fold in
+    array order — operand-order-identical to _sq_dist_sql and
+    py_sq_dist."""
     arr = "array(" + ",".join(_dbl(c) for c in centroid) + ")"
     return (
         f"aggregate(zip_with({qv_sql}, {arr}, (x, c) -> "
         "(CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), "
         "0.0D, (a, b) -> a + b)"
     )
-
-
-def _sq_dist_expr(qv_col: Column, centroid: list[float]) -> Column:
-    """Σ_j (double(qv_j) − c_j)² as a left fold in array order —
-    operand-order-identical to _sq_dist_sql."""
-    c_lit = F.array(*[F.lit(float(c)) for c in centroid])
-    diffs = F.zip_with(
-        qv_col,
-        c_lit,
-        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda a, b: a + b)
 
 
 def _sq_dist_sql(qv_expr: str, centroid_expr: str, d: int) -> str:
@@ -180,7 +167,7 @@ def _sq_dist_sql(qv_expr: str, centroid_expr: str, d: int) -> str:
 
 
 def py_sq_dist(q: list[int], c: list[float]) -> float:
-    """Driver-side twin of _sq_dist_expr/_sq_dist_sql: the SAME left
+    """Driver-side twin of _sq_dist_sql_expr/_sq_dist_sql: the SAME left
     fold (acc starts 0.0, terms in index order), so centroid-ranking
     decisions made on the driver (IVF probe lists, PQ LUTs) are
     bit-equal to what either engine would compute."""
@@ -211,28 +198,15 @@ def _nearest_sql_expr(
 
 
 def nearest_expr(
-    qv_col: str | Column, centroids: dict[int, tuple[int, list[int]]]
+    qv_col: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> Column:
     """Argmin cluster id over inlined centroid literals: array_min of
     (dist, cid) structs — lexicographic struct ordering ≡ SQL
     ``ORDER BY dist, cid`` (ties → lowest cid). Each distance fold
     appears ONCE in the expression (a nested when-chain duplicates it
     O(k²) times — measured 5.8 MB task binaries at k=8·m=4 vs ~1.5 MB
-    this way). Pass the vector as SQL text (column name / expression)
-    to build via one F.expr parse; a Column takes the py4j path
-    (bit-identical, ~500x slower to construct)."""
-    if isinstance(qv_col, str):
-        return F.expr(_nearest_sql_expr(qv_col, centroids))
-    entries = [
-        F.struct(
-            _sq_dist_expr(qv_col, centroid_components(*centroids[cid])).alias(
-                "d"
-            ),
-            F.lit(cid).alias("c"),
-        )
-        for cid in sorted(centroids)
-    ]
-    return F.array_min(F.array(*entries))["c"]
+    this way)."""
+    return F.expr(_nearest_sql_expr(qv_col, centroids))
 
 
 # --- the trainer ---------------------------------------------------------------
@@ -300,26 +274,19 @@ def kmeans_fit_from_seeds(
 
 
 def inertia_expr(
-    qv_col: str | Column, centroids: dict[int, tuple[int, list[int]]]
+    qv_col: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> Column:
     """floor of the min squared distance to any centroid — the
     per-row inertia contribution, floor-quantized to BIGINT so the
     corpus sum is exact and order-free (the double min is
     bit-identical both engines; only the cross-row SUM needs the
     integer armor)."""
-    if isinstance(qv_col, str):
-        ds = [
-            _sq_dist_sql_expr(qv_col, centroid_components(*centroids[cid]))
-            for cid in sorted(centroids)
-        ]
-        md = ds[0] if len(ds) == 1 else f"least({', '.join(ds)})"
-        return F.expr(f"CAST(floor({md}) AS BIGINT)")
-    dists = [
-        _sq_dist_expr(qv_col, centroid_components(*centroids[cid]))
+    ds = [
+        _sq_dist_sql_expr(qv_col, centroid_components(*centroids[cid]))
         for cid in sorted(centroids)
     ]
-    md = dists[0] if len(dists) == 1 else F.least(*dists)
-    return F.floor(md).cast("long")
+    md = ds[0] if len(ds) == 1 else f"least({', '.join(ds)})"
+    return F.expr(f"CAST(floor({md}) AS BIGINT)")
 
 
 def inertia_sql(q_cte: str, cent_cte: str, d: int) -> str:
@@ -414,30 +381,19 @@ def grouped_fit_from_seeds(
 
 
 def _grouped_nearest_expr(
-    group_col: str | Column,
-    qv_col: str | Column,
+    group_col: str,
+    qv_col: str,
     per_group: dict[int, dict[int, tuple[int, list[int]]]],
 ) -> Column:
     """CASE over the group column, each branch the group's argmin —
-    one projection covers all m codebooks. String args build the CASE
-    as one parsed SQL expression (same tree as the F.when chain with
-    no otherwise: a missing group yields NULL either way)."""
-    if isinstance(group_col, str) and isinstance(qv_col, str):
-        whens = " ".join(
-            f"WHEN {group_col} = {int(g)} THEN"
-            f" {_nearest_sql_expr(qv_col, per_group[g])}"
-            for g in sorted(per_group)
-        )
-        return F.expr(f"CASE {whens} END")
-    expr = None
-    for g in sorted(per_group):
-        branch = nearest_expr(qv_col, per_group[g])
-        expr = (
-            F.when(group_col == F.lit(g), branch)
-            if expr is None
-            else expr.when(group_col == F.lit(g), branch)
-        )
-    return expr
+    one projection covers all m codebooks, built as one parsed SQL
+    expression. No ELSE: a missing group yields NULL."""
+    whens = " ".join(
+        f"WHEN {group_col} = {int(g)} THEN"
+        f" {_nearest_sql_expr(qv_col, per_group[g])}"
+        for g in sorted(per_group)
+    )
+    return F.expr(f"CASE {whens} END")
 
 
 # --- two-level (hierarchical) IVF: coarse cells, per-cell fine lists -----------
@@ -523,7 +479,7 @@ def two_level_assign_exprs(
     coarse: dict[int, tuple[int, list[int]]],
     books: dict[int, dict[int, tuple[int, list[int]]]],
     *,
-    qv_col: str | Column = "qv",
+    qv_col: str = "qv",
     coarse_out: str = "gid",
 ) -> tuple[Column, Column]:
     """The FULL-assignment (cells=None) expression pair of
@@ -610,8 +566,8 @@ def two_level_assign(
 
 
 def residual_expr(
-    qv_col: str | Column,
-    gid_col: str | Column,
+    qv_col: str,
+    gid_col: str,
     centroids: dict[int, tuple[int, list[int]]],
 ) -> Column:
     """Quantized residual w.r.t. the row's assigned coarse centroid:
@@ -621,31 +577,15 @@ def residual_expr(
     exact-integer contract (IVFADC, Jégou et al. TPAMI 2011 §V). CASE
     over the cell id, each branch a zip_with over that cell's inlined
     centroid — the same k·d literal budget as nearest_expr."""
-    if isinstance(qv_col, str) and isinstance(gid_col, str):
-        whens = []
-        for cid in sorted(centroids):
-            comp = centroid_components(*centroids[cid])
-            arr = "array(" + ",".join(_dbl(c) for c in comp) + ")"
-            whens.append(
-                f"WHEN {gid_col} = {int(cid)} THEN zip_with({qv_col}, {arr},"
-                " (x, c) -> CAST(floor(CAST(x AS DOUBLE) - c) AS BIGINT))"
-            )
-        return F.expr(f"CASE {' '.join(whens)} END")
-    expr = None
+    whens = []
     for cid in sorted(centroids):
         comp = centroid_components(*centroids[cid])
-        c_lit = F.array(*[F.lit(float(c)) for c in comp])
-        branch = F.zip_with(
-            qv_col,
-            c_lit,
-            lambda x, c: F.floor(x.cast("double") - c).cast("long"),
+        arr = "array(" + ",".join(_dbl(c) for c in comp) + ")"
+        whens.append(
+            f"WHEN {gid_col} = {int(cid)} THEN zip_with({qv_col}, {arr},"
+            " (x, c) -> CAST(floor(CAST(x AS DOUBLE) - c) AS BIGINT))"
         )
-        expr = (
-            F.when(gid_col == F.lit(cid), branch)
-            if expr is None
-            else expr.when(gid_col == F.lit(cid), branch)
-        )
-    return expr
+    return F.expr(f"CASE {' '.join(whens)} END")
 
 
 def residual_sql(qv_expr: str, c_expr: str, d: int) -> str:
@@ -914,18 +854,11 @@ def _int_sq_dist_sql_expr(qv_sql: str, cand: list[int]) -> str:
     )
 
 
-def int_sq_dist_expr(qv_col: str | Column, cand: list[int]) -> Column:
+def int_sq_dist_expr(qv_col: str, cand: list[int]) -> Column:
     """Exact integer Σ(x_j−c_j)² between a quantized vector column and
     a quantized candidate POINT (k-means|| candidates are corpus rows,
     not means, so distances stay in BIGINT — no FP contract at all)."""
-    if isinstance(qv_col, str):
-        return F.expr(_int_sq_dist_sql_expr(qv_col, cand))
-    c_lit = F.array(*[F.lit(int(c)).cast("long") for c in cand])
-    return F.aggregate(
-        F.zip_with(qv_col, c_lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda a, b: a + b,
-    )
+    return F.expr(_int_sq_dist_sql_expr(qv_col, cand))
 
 
 def int_sq_dist_sql(a: str, b: str, d: int) -> str:
@@ -1103,9 +1036,9 @@ INLINE_CENTROID_DOUBLES_MAX = 8_192
 
 
 def _sq_dist_cols(qv_col: Column, c_col: Column) -> Column:
-    """Column-column twin of _sq_dist_expr (the centroid arrives as a
-    JOINED column, not a literal) — identical fold, identical IEEE
-    ops, so join-assignment is bit-equal to literal-assignment."""
+    """Column-column twin of _sq_dist_sql_expr (the centroid arrives
+    as a JOINED column, not a literal) — identical fold, identical
+    IEEE ops, so join-assignment is bit-equal to literal-assignment."""
     diffs = F.zip_with(
         qv_col,
         c_col,

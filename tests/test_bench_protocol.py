@@ -39,17 +39,24 @@ def test_streaming_min3_members_are_catalog_queries():
     assert not ghosts, ghosts
 
 
-def test_shared_cache_first_consumer_gets_one_cold_rep():
-    """The first present member of each shared persisted cache records
-    its one COLD rep (min-of-reps would silently drop the build cost
-    from the headline — round-8 ADVICE)."""
-    names = [n for n in bench.HEADLINE if n in QUERIES]
-    one_rep = bench._one_rep_names(names)
-    for members in bench.SHARED_CACHE_GROUPS.values():
-        present = [m for m in members if m in names]
-        if present:
-            first = min(present, key=names.index)
-            assert first in one_rep, (members, first)
+def test_memo_build_gets_one_cold_rep(spark):
+    """A query records its one COLD rep exactly when its first rep
+    added a session memo entry (min-of-reps would silently drop the
+    build cost from the headline — round-8 ADVICE). From a cold graph
+    memo, the first co-purchase consumer builds the edge frame; a
+    rerun and a sibling consumer only hit it and keep min-of-reps."""
+    from flight_delay_prediction_using_pyspark_spark.plans import queries as Q
+    from tests.conftest import SF_CORRECTNESS_DIR as sf
+
+    edges = Q._MEMO.get(spark.sparkContext, {}).pop(("graph", sf), None)
+    if edges is not None:
+        edges.unpersist()
+    size = Q.memo_size(spark)
+    assert len(bench._query_reps(spark, sf, "copurchase_triangle_stats")) == 1
+    assert Q.memo_size(spark) == size + 1
+    assert len(bench._query_reps(spark, sf, "copurchase_triangle_stats")) >= 2
+    assert len(bench._query_reps(spark, sf, "copurchase_pagerank_top10")) >= 2
+    assert Q.memo_size(spark) == size + 1
 
 
 def test_contamination_gate_constants_pinned():

@@ -683,13 +683,15 @@ def test_copurchase_edges_single_pass_no_join(spark):
     self-join (which shuffled lineitem twice), and exactly the two
     aggregation exchanges."""
     from flight_delay_prediction_using_pyspark_spark.plans import graph_queries as GQ
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import _MEMO
 
     # Another test may have run a graph query first, persisting the
     # shared edge frame — the cache manager would then substitute an
     # InMemoryTableScan (with its own internal exchanges) into the
-    # plan built here. Drop the cache so we assert the real shape.
-    for cache_key in list(GQ._GRAPH_CACHE):
-        GQ._GRAPH_CACHE.pop(cache_key).unpersist()
+    # plan built here. Drop the memo entry so we assert the real shape.
+    edges = _MEMO.get(spark.sparkContext, {}).pop(("graph", SF_CORRECTNESS_DIR), None)
+    if edges is not None:
+        edges.unpersist()
     plan = plan_of(GQ.copurchase_edges(spark, SF_CORRECTNESS_DIR))
     assert "Join" not in plan
     assert n_exchanges(plan) <= 2

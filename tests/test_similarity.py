@@ -269,8 +269,6 @@ def test_assignment_join_path_matches_literal_path(spark, km_rows):
     """The broadcast-join assignment (production-k escape hatch) is
     row-identical to the inlined-literal argmin on the same
     centroids, including ties (min(struct) ≡ array_min(struct))."""
-    from pyspark.sql import functions as F
-
     from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
 
     df = spark.createDataFrame(km_rows, "vec_id long, qv array<long>")
@@ -278,7 +276,7 @@ def test_assignment_join_path_matches_literal_path(spark, km_rows):
     lit_path = {
         r["vec_id"]: r["cid"]
         for r in df.withColumn(
-            "cid", km.nearest_expr(F.col("qv"), cent)
+            "cid", km.nearest_expr("qv", cent)
         ).collect()
     }
     join_path = {
@@ -414,70 +412,74 @@ def test_two_level_ivfadc_scoring_plan_is_shuffle_free(spark):
     assert df.first()["vec_id"] == 0
 
 
-def test_sql_text_exprs_match_column_paths(spark, km_rows):
+def test_sql_text_exprs_match_driver_twins(spark, km_rows):
     """Round-13 optimization: the literal-heavy assignment/residual/
     inertia expressions are built as SQL text parsed by ONE F.expr
     call (the Column API costs one py4j round-trip per literal —
-    seconds per Lloyd's iteration at k=8·d=64). The parsed tree must
-    be bit-identical to the Column-API tree on every helper: raw
-    distances (doubles compared exactly), argmin ids incl. ties,
-    grouped CASE, residuals, inertia, and the integer k-means||
-    distance."""
+    seconds per Lloyd's iteration at k=8·d=64). Every helper must be
+    bit-identical to its driver-side twin: raw distances vs
+    py_sq_dist (doubles compared exactly), argmin ids incl. ties and
+    the grouped CASE vs a Python argmin over (py_sq_dist, cid),
+    residuals vs py_residual, inertia vs floor(min py_sq_dist), and
+    the integer k-means|| distance vs a plain integer sum."""
+    import math
+
     from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
 
     df = spark.createDataFrame(km_rows, "vec_id long, qv array<long>")
     cent = km.kmeans_fit(df, k=5, iters=2, d=64)
+    qvs = dict(km_rows)
+    cids = sorted(cent)
+    comp = {c: km.centroid_components(*cent[c]) for c in cids}
+
+    def argmin(book, qv):
+        return min(
+            (km.py_sq_dist(qv, km.centroid_components(*book[c])), c)
+            for c in book
+        )[1]
 
     # raw fold distances, compared as exact doubles
-    comp = {c: km.centroid_components(*cent[c]) for c in cent}
-    d_col = df.select(
-        "vec_id",
-        *[km._sq_dist_expr(F.col("qv"), comp[c]).alias(f"d{c}") for c in cent],
-    ).collect()
     d_sql = df.select(
         "vec_id",
-        *[
-            F.expr(km._sq_dist_sql_expr("qv", comp[c])).alias(f"d{c}")
-            for c in cent
-        ],
+        *[F.expr(km._sq_dist_sql_expr("qv", comp[c])).alias(f"d{c}") for c in cids],
     ).collect()
-    assert sorted(map(tuple, d_col)) == sorted(map(tuple, d_sql))
+    assert {r[0]: tuple(r[1:]) for r in d_sql} == {
+        v: tuple(km.py_sq_dist(qv, comp[c]) for c in cids) for v, qv in qvs.items()
+    }
 
-    # argmin (string arg -> SQL path, Column arg -> legacy path)
+    # argmin, ties to the lowest cid
+    nearest = {v: argmin(cent, qv) for v, qv in qvs.items()}
     a_sql = {r["vec_id"]: r["cid"] for r in df.withColumn(
         "cid", km.nearest_expr("qv", cent)).collect()}
-    a_col = {r["vec_id"]: r["cid"] for r in df.withColumn(
-        "cid", km.nearest_expr(F.col("qv"), cent)).collect()}
-    assert a_sql == a_col
+    assert a_sql == nearest
 
     # grouped CASE over a 2-group codebook
     pg = {0: cent, 1: {c: (n, [s + 1 for s in ss]) for c, (n, ss) in cent.items()}}
     gdf = df.withColumn("g", (F.col("vec_id") % 2).cast("int"))
     g_sql = {r["vec_id"]: r["cid"] for r in gdf.withColumn(
         "cid", km._grouped_nearest_expr("g", "qv", pg)).collect()}
-    g_col = {r["vec_id"]: r["cid"] for r in gdf.withColumn(
-        "cid", km._grouped_nearest_expr(F.col("g"), F.col("qv"), pg)).collect()}
-    assert g_sql == g_col
+    assert g_sql == {v: argmin(pg[v % 2], qv) for v, qv in qvs.items()}
 
     # residuals w.r.t. the assigned centroid
     rdf = df.withColumn("gid", km.nearest_expr("qv", cent))
     r_sql = {r["vec_id"]: r["rq"] for r in rdf.withColumn(
         "rq", km.residual_expr("qv", "gid", cent)).collect()}
-    r_col = {r["vec_id"]: r["rq"] for r in rdf.withColumn(
-        "rq", km.residual_expr(F.col("qv"), F.col("gid"), cent)).collect()}
-    assert r_sql == r_col
+    assert r_sql == {
+        v: km.py_residual(qv, comp[nearest[v]]) for v, qv in qvs.items()
+    }
 
     # inertia (floor-quantized min distance)
-    i_sql = [r["md"] for r in df.select(
-        km.inertia_expr("qv", cent).alias("md")).collect()]
-    i_col = [r["md"] for r in df.select(
-        km.inertia_expr(F.col("qv"), cent).alias("md")).collect()]
-    assert sorted(i_sql) == sorted(i_col)
+    i_sql = {r["vec_id"]: r["md"] for r in df.select(
+        "vec_id", km.inertia_expr("qv", cent).alias("md")).collect()}
+    assert i_sql == {
+        v: math.floor(min(km.py_sq_dist(qv, comp[c]) for c in cids))
+        for v, qv in qvs.items()
+    }
 
     # exact-integer distance (k-means|| candidates)
     cand = km_rows[0][1]
-    z_sql = [r["d"] for r in df.select(
-        km.int_sq_dist_expr("qv", cand).alias("d")).collect()]
-    z_col = [r["d"] for r in df.select(
-        km.int_sq_dist_expr(F.col("qv"), cand).alias("d")).collect()]
-    assert z_sql == z_col
+    z_sql = {r["vec_id"]: r["d"] for r in df.select(
+        "vec_id", km.int_sq_dist_expr("qv", cand).alias("d")).collect()}
+    assert z_sql == {
+        v: sum((x - c) * (x - c) for x, c in zip(qv, cand)) for v, qv in qvs.items()
+    }
