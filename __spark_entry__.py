@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from flight_delay_prediction_using_pyspark_spark.plans.queries import ORACLES, QUERIES
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-_COST_HINTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "catalog_cost_hints.json")
+_BASELINE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_baseline.json")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -96,14 +96,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Past rounds' coverage is read from the CORRECTNESS_r*.json files the
     driver leaves in the repo, so this rotation is self-maintaining:
     each round's head is automatically the still-unverified tail.
-    Unhinted (new) queries default to 0.3 s and land early in tier 2.
+    "Cheapest" is the query's wall seconds in bench.py's committed
+    baseline; a query without a baseline entry (new) costs 0 and lands
+    first in its tier.
     """
     try:
-        with open(_COST_HINTS) as f:
-            hints = json.load(f)["queries"]
+        with open(_BASELINE) as f:
+            base = json.load(f)["queries"]
     except (OSError, KeyError, ValueError):
-        hints = {}
-    cost = lambda n: hints.get(n, 0.3)  # noqa: E731
+        base = {}
+    cost = lambda n: base.get(n, {}).get("wall_s", 0.0)  # noqa: E731
     attempted = _driver_attempted()
     must = [n for n in _MUST_HAVE if n in QUERIES]
     fresh, fresh_weak, deferred, seen, seen_weak = [], [], [], [], []

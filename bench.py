@@ -2,31 +2,36 @@
 
 Prints ONE JSON line (the only stdout output, and the last line):
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "stamp": {...}, "queries": {name: sec, ...}, "sf": <sf>}
 
 The headline set is 186 queries covering every family (core relational
 incl. all 22 TPC-H shapes, flights-parity, ML, text/dedup/tokenizer,
 ANN/clustering incl. two-level IVF and drift re-fit, multimodal incl.
 the executable PPM codec, streaming, temporal, drift/quality
 analytics, the sample-based estimation tier, and the governance
-audits).  The driver
-captures only the last 2000 chars of stdout, so the contract line
-holds the total + the most expensive per-query entries that fit the
-window; the complete per-query dict is always written to
-bench_last.json.  Set SPARK_GRAFT_BENCH_FULL=1 to time the full
-catalog (mirrored to bench_last.json under all_queries).
+audits).  The driver captures only the last 2000 chars of stdout, so
+the contract line holds the total + the most expensive per-query
+entries that fit the window; the complete per-query record is always
+written to bench_last.json.  Set SPARK_GRAFT_BENCH_FULL=1 to run the
+full catalog (mirrored to bench_last.json under all_queries).
 
 Each query is timed end-to-end (plan build + execution to a driver-side
-collect); the recorded number is the MIN over independent reps (2, or
-3 when sub-second), except that a query whose first rep added an entry
+collect); the recorded wall is the MIN over independent reps (2, or 3
+when sub-second), except that a query whose first rep added an entry
 to the session memo (plans/queries.session_memo) records that one cold
-rep (see _query_reps).  All rep readings are mirrored to
-bench_last.json under "reps", and the contention canary
-(ml_decision_tree_metrics vs its quiet-window reference) is carried in
-the contract line itself.  Regression diagnostics vs
-bench_baseline.json go to bench_regressions.txt, NOT to stdout/stderr,
-so no diagnostic line can displace the contract line in a
-merged-stream capture.
+rep (see _query_reps).
+
+Every rep runs inside one perfbench.spans.Tracer span.  After the
+battery the run reads Spark's job and stage records once from its REST
+API and attributes each job to the span open at its submission, so
+each query's record also carries its min-over-reps executor CPU, jobs
+and tasks.  The regression gate compares executor CPU and job counts
+with bench_baseline.json and writes its verdict to
+bench_regressions.txt, NOT to stdout/stderr, so no diagnostic line can
+displace the contract line in a merged-stream capture.  Wall is
+reported but never gated.  Every artifact carries a stamp {cpus,
+pyspark, java, sf, steal_share}, and a baseline stamped with another
+configuration (steal_share aside) is not compared.
 """
 
 from __future__ import annotations
@@ -38,6 +43,13 @@ import time
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
+
+from perfbench.procmon import cpu_counters, steal_since  # noqa: E402
+from perfbench.spans import BENCH_CONF, SparkRest, Tracer, layer_ledger  # noqa: E402
+
+#: Per-query ledger fields recorded as the MIN over reps; the gate
+#: reads executor_cpu_s and jobs.
+LEDGER_FIELDS = ("executor_cpu_s", "jobs", "tasks")
 
 HEADLINE = [
     # core relational / aggregation / window
@@ -372,165 +384,134 @@ def _scaling_main() -> None:
                       "out": "bench_scaling.json"}, separators=(",", ":")))
 
 
-#: Canary query + its quiet-window reference (SCALE.md): a cold rep
-#: far above quiet_ref means the run is contaminated by host load and
-#: per-query readings should not be adjudicated as regressions.
-CANARY = "ml_decision_tree_metrics"
-CANARY_QUIET_REF_SEC = 9.0
-
-#: FRESH-SESSION canary reference (round-12 verdict gap #3): the 9.0 s
-#: reference above is calibrated MID-BATTERY (after ~25 queries have
-#: JIT-warmed the JVM and populated the session's fit caches). An
-#: ISOLATED mini-battery — fresh process, warmup query, then the
-#: canary — pays first-session JIT + the uncached MLlib fit and reads
-#: far higher on the SAME quiet box: measured this round 15.9/18.4 s
-#: (warm page cache) AND 31.7/35.9 s (cold page cache, loadavg_start
-#: 1.1 — a certifiably quiet box); the round-12 judge measured
-#: 18.6/24.8 s, SCALE.md notes 13.3 s. 16.0 is the warm-cache floor;
-#: the quiet band extends to ~2.3× that under a cold page cache, so
-#: the fresh canary CONTEXTUALIZES isolated readings (an 18-30 s
-#: isolated canary is normal, not contamination) but cannot certify
-#: quietness by itself — loadavg_start, recorded in every artifact,
-#: is the primary certification signal. `SPARK_GRAFT_BENCH_CANARY=1`
-#: runs exactly this mini-battery and prints both refs + loadavg.
-CANARY_FRESH_SESSION_REF_SEC = 16.0
-
-#: Battery-start 1-min loadavg above this ⇒ external host load ⇒
-#: contaminated (the round-12 memory: intermittent external load
-#: defeats the early canary — two round-11 runs had quiet canaries
-#: but 2-5x back halves). 6.0, not 2.0, because a RETRY process
-#: measures ~3 min after our own 32-thread battery stopped and the
-#: decaying 1-min average still carries ~e^-3 of that run's load.
-LOADAVG_START_MAX = 6.0
-
-#: Quiet-total model: per-query baselines are committed as the MAX of
-#: two canary-verified runs, so their sum over-states any single quiet
-#: run's total — round-11 quiet runs landed at 0.69-0.74x the baseline
-#: sum. 0.75 is the measured upper envelope of that ratio; deriving
-#: the reference from the committed baselines (instead of the old
-#: hand-pinned 380 s constant) keeps the contamination gate calibrated
-#: automatically as HEADLINE grows (round-11 ADVICE: the pinned
-#: constant had ~0.3% headroom left).
-TOTAL_QUIET_RATIO = 0.75
-#: Fallback when bench_baseline.json is absent (fresh checkout).
-TOTAL_QUIET_REF_FALLBACK_SEC = 380.0
-
-#: Micro-batch streaming queries inflate disproportionately under
-#: transient host load (scheduling latency per micro-batch, not data
-#: volume — round-11 closing run: 2-3.6x on these while batch
-#: neighbors held ~1x), so the events-streaming family always gets a
-#: third rep to keep one load burst from stamping a phantom
-#: regression.
-STREAMING_MIN3 = {
-    "events_streaming_dedup",
-    "events_streaming_dedup_builtin",
-    "events_stream_stream_join",
-    "events_stream_static_join",
-    "events_streaming_cms",
-    "events_streaming_totals",
-    "events_streaming_sessionize",
-    "events_streaming_priority_sample",
-    "custom_pysource_stream_stats",
-    # 4 micro-batches + 3 store appends per batch: measured 3.6x
-    # inflation under a round-12 load burst while its batch neighbor
-    # held ~1x — the exact signature this set exists for
-    "corpus_streaming_ingest_dedup",
-}
-
-
-def _baseline_queries() -> dict[str, float]:
+def _baseline() -> dict:
     path = os.environ.get(
         "SPARK_GRAFT_BASELINE", os.path.join(REPO_ROOT, "bench_baseline.json")
     )
     if not os.path.exists(path):
         return {}
     with open(path) as f:
-        return json.load(f).get("queries", {})
+        return json.load(f)
 
 
-def _loadavg() -> list[float]:
-    """1/5/15-min load averages, rounded for artifact compactness."""
-    return [round(x, 2) for x in os.getloadavg()]
-
-
-def _canary_main() -> None:
-    """Isolated mini-battery self-certification (round-12 verdict gap
-    #3): fresh process → warmup → the canary once, printed with BOTH
-    references and the loadavg evidence, so an isolated re-measure can
-    certify itself quiet without the full battery."""
-    import json as _json
-    import time as _time
-
-    from flight_delay_prediction_using_pyspark_spark.plans.queries import QUERIES
-    from flight_delay_prediction_using_pyspark_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    load_start = _loadavg()
-    spark = get_spark(app_name="spark-graft-canary")
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = _time.perf_counter()
-    QUERIES["pricing_summary"](spark, sf_dir).toPandas()
-    warm = round(_time.perf_counter() - t0, 2)
-    t0 = _time.perf_counter()
-    QUERIES[CANARY](spark, sf_dir).toPandas()
-    canary = round(_time.perf_counter() - t0, 2)
-    spark.stop()
-    print(_json.dumps({
-        "metric": "fresh_session_canary",
-        "canary_sec": canary,
-        "warmup_sec": warm,
-        "fresh_ref_sec": CANARY_FRESH_SESSION_REF_SEC,
-        "mid_battery_ref_sec": CANARY_QUIET_REF_SEC,
-        "loadavg_start": load_start,
-        "loadavg_end": _loadavg(),
-        # loadavg is the PRIMARY quiet signal: a cold page cache puts
-        # an honest fresh canary at ~2.3x the warm-cache floor even at
-        # loadavg 1.1 (measured), so the canary only corroborates.
-        "quiet": bool(load_start[0] < 2.0),
-        "canary_within_fresh_band": bool(
-            canary <= 2.3 * CANARY_FRESH_SESSION_REF_SEC
-        ),
-    }, separators=(",", ":")), flush=True)
-
-
-def _query_reps(spark, sf_dir: str, name: str) -> list[float]:
-    """Wall seconds of each independent rep of one catalog query: 2,
+def _query_reps(spark, sf_dir: str, name: str, tracer: Tracer | None = None) -> list[float]:
+    """Wall seconds of each independent rep of one catalog query, each
+    rep inside its own span of `tracer` (layer "<name>#<rep>"): 2 reps,
     or 3 when sub-second (scheduler jitter is proportionally worst
-    there) or in STREAMING_MIN3. A query whose first rep added a
-    session-memo entry (on any thread) keeps that one cold rep: a
-    second rep would time the memo hit, dropping the build cost from
-    the headline and the load signal from the ml_* canary."""
+    there). A query whose first rep added a session-memo entry (on any
+    thread) keeps that one cold rep: a second rep would time the memo
+    hit, dropping the build cost from the headline."""
     from flight_delay_prediction_using_pyspark_spark.plans.queries import (
         QUERIES,
         memo_size,
     )
 
+    tracer = tracer or Tracer()
     reps: list[float] = []
-    n_reps = 3 if name in STREAMING_MIN3 else 2
+    n_reps = 2
     memo_before = memo_size(spark)
     while len(reps) < n_reps:
         start = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        # Force full execution incl. result materialization to
-        # driver. Arrow toPandas, matching how the driver's
-        # correctness gate consumes results (collect()'s per-row
-        # Python objects would bill large-output queries ~2x for
-        # pure driver-side overhead).
-        df.toPandas()
+        with tracer.span(name, f"{name}#{len(reps)}"):
+            # Force full execution incl. result materialization to
+            # driver. Arrow toPandas, matching how the driver's
+            # correctness gate consumes results (collect()'s per-row
+            # Python objects would bill large-output queries ~2x for
+            # pure driver-side overhead).
+            QUERIES[name](spark, sf_dir).toPandas()
         reps.append(round(time.perf_counter() - start, 3))
         if len(reps) == 1 and memo_size(spark) > memo_before:
             break
-        if n_reps == 2 and len(reps) == 2 and min(reps) < 1.0:
+        if len(reps) == 2 and min(reps) < 1.0:
             n_reps = 3
     return reps
+
+
+def _battery(spark, sf_dir: str, names: list[str]) -> tuple[dict[str, dict], dict[str, int]]:
+    """Run a warm-up and then `names`, one after another, and join
+    Spark's own job and stage records (read once, at the end) to the
+    rep spans. Time-window attribution is exact because nothing else
+    runs meanwhile. Returns each query's record (min-over-reps wall and
+    LEDGER_FIELDS, plus every rep's wall) and the attribution count
+    over the jobs this battery started."""
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import QUERIES
+
+    rest = SparkRest(spark)
+    first_job = 1 + max((j["jobId"] for j in rest.settled_records()[0]), default=-1)
+    tracer = Tracer()
+    # Warm the JVM + parquet footers + Arrow/pandas conversion path once
+    # so per-query numbers measure the queries, not session startup.
+    with tracer.span("warmup", "warmup"):
+        QUERIES["pricing_summary"](spark, sf_dir).toPandas()
+    reps = {name: _query_reps(spark, sf_dir, name, tracer) for name in names}
+    jobs, stages = rest.settled_records()
+    ledger = layer_ledger(tracer.spans, [j for j in jobs if j["jobId"] >= first_job], stages)
+    records = {}
+    for name, walls in reps.items():
+        rows = [ledger["layers"].get(f"{name}#{k}", {}) for k in range(len(walls))]
+        records[name] = {"wall_s": round(min(walls), 2), "reps": walls}
+        for field in LEDGER_FIELDS:
+            records[name][field] = round(min(row.get(field, 0) for row in rows), 3)
+    return records, {k: ledger[k] for k in ("jobs_total", "jobs_attributed")}
+
+
+def _stamp(spark, sf: float, steal_share: float) -> dict:
+    """The configuration a run's numbers belong to."""
+    import pyspark
+
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "pyspark": pyspark.__version__,
+        "java": spark.sparkContext._jvm.System.getProperty("java.version"),
+        "sf": sf,
+        "steal_share": round(steal_share, 4),
+    }
+
+
+def _regressions(records: dict[str, dict], base: dict[str, dict]) -> list[str]:
+    """Queries whose executor CPU rose above 1.5x their baseline and by
+    more than 0.5 s, or that started more jobs than their baseline.
+    Wall is never gated: host load inflates it, not the engine's work."""
+    lines = []
+    for name, rec in sorted(records.items()):
+        ref = base.get(name)
+        if ref is None:
+            continue
+        cpu, ref_cpu = rec["executor_cpu_s"], ref["executor_cpu_s"]
+        if cpu > 1.5 * ref_cpu and cpu - ref_cpu > 0.5:
+            lines.append(
+                f"REGRESSION {name}: executor_cpu_s {ref_cpu:.2f} -> {cpu:.2f}"
+                f" (wall_s {ref['wall_s']:.2f} -> {rec['wall_s']:.2f})"
+            )
+        if rec["jobs"] > ref["jobs"]:
+            lines.append(f"REGRESSION {name}: jobs {ref['jobs']} -> {rec['jobs']}")
+    return lines
+
+
+def _report_regressions(records: dict[str, dict], stamp: dict) -> None:
+    """Write the gate's verdict vs the committed baseline to
+    bench_regressions.txt (never stdout: the contract line must be the
+    last thing a tail-capture sees). The file is always rewritten, so an
+    earlier run's verdict never reads as current. A baseline that is
+    missing, or stamped with another configuration (steal_share aside),
+    is not compared."""
+    base = _baseline()
+    config = lambda s: {k: v for k, v in (s or {}).items() if k != "steal_share"}  # noqa: E731
+    if base.get("stamp") and config(base["stamp"]) == config(stamp):
+        lines = _regressions(records, base["queries"]) or ["bench: no regressions vs baseline"]
+    else:
+        lines = [
+            f"not compared: baseline stamp {json.dumps(base.get('stamp'))}"
+            f" vs this run {json.dumps(stamp)}"
+        ]
+    lines.append(f"stamp={json.dumps(stamp)}")
+    with open(os.path.join(REPO_ROOT, "bench_regressions.txt"), "w") as f:
+        f.write("\n".join(lines) + "\n")
 
 
 def main() -> None:
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING") == "1":
         _scaling_main()
-        return
-    if os.environ.get("SPARK_GRAFT_BENCH_CANARY") == "1":
-        _canary_main()
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -539,192 +520,68 @@ def main() -> None:
     from flight_delay_prediction_using_pyspark_spark.plans.queries import QUERIES
     from flight_delay_prediction_using_pyspark_spark.session import get_spark
 
-    # Load evidence (round-12 verdict item 1 + the host-contention
-    # memory): record loadavg at battery start — BEFORE our own Spark
-    # session adds load — so adjudication can distinguish external
-    # contention from genuine regressions without a re-measure cycle.
-    load_start = _loadavg()
-    spark = get_spark(app_name="spark-graft-bench")
+    cpu_start = cpu_counters()
+    # BENCH_CONF retains every job and stage record until the ledger
+    # reads them at the end of the battery.
+    spark = get_spark(app_name="spark-graft-bench", extra_conf=BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM + parquet footers + Arrow/pandas conversion path once
-    # so per-query numbers measure the queries, not session startup.
-    QUERIES["pricing_summary"](spark, sf_dir).toPandas()
-
     # Full mode runs the HEADLINE prefix in HEADLINE order (then the
-    # rest): blocks that share a memoized fit (the ml_* family) must
-    # attribute the shared cost to the same query in both modes, or a
-    # full run flags a phantom per-query "regression" purely from
-    # which sibling paid the one-time fit.
+    # rest): a shared memoized build must land on the same query in
+    # both modes, or a full run flags a phantom per-query "regression"
+    # purely from which sibling paid the build.
     head = [n for n in HEADLINE if n in QUERIES]
     names = head + [n for n in QUERIES if n not in set(head)] if full else head
-    # Recorded number = per-query MIN over reps (round-7 verdict item
-    # 3: single-run readings on a shared box inflate 1.3-1.8× under
-    # load and cost a round of adjudication per fluke; the minimum is
-    # the structural reading) — see _query_reps.
-    timings: dict[str, float] = {}
-    all_reps: dict[str, list[float]] = {}
-    #: 1-min loadavg sampled as each query finishes — per-REGRESSION
-    #: evidence (a flagged query whose load1 spikes vs its neighbors
-    #: was hit by a burst, not a code change). Our own 32-thread run
-    #: keeps the absolute level elevated; the SIGNAL is the spike
-    #: relative to the battery's own band.
-    load1: dict[str, float] = {}
-    for name in names:
-        reps = _query_reps(spark, sf_dir, name)
-        timings[name] = round(min(reps), 2)
-        all_reps[name] = reps
-        load1[name] = round(os.getloadavg()[0], 1)
+    records, attribution = _battery(spark, sf_dir, names)
+    stamp = _stamp(spark, sf, steal_since(cpu_start)["steal_share"])
+    _report_regressions(records, stamp)
 
-    # Auto-retry on contamination (round-8 verdict, process item;
-    # widened round 11): per-query numbers are unadjudicatable when
-    # the run is inflated by host load. TWO signals, because the load
-    # arrives in bursts: the early-battery contention canary (>1.3x
-    # its quiet reference) catches a hot START, and the battery TOTAL
-    # (>1.25x its quiet reference) catches the MID-RUN bursts the
-    # canary provably misses (round 11: two runs with quiet canaries
-    # carried back halves at 2-5x). Rather than record a contaminated
-    # artifact, sleep out the load window and RE-EXEC the battery in
-    # a fresh process — a same-session rerun would hit every memoized
-    # fit and persisted cache and record warm numbers as cold. One
-    # retry only; if the retry is still hot, the artifact carries
-    # `contaminated: true` so adjudication knows to discount it.
-    canary_val = timings.get(CANARY)
-    # Compare run-total vs quiet-reference over BASELINED headline
-    # queries only, so newly added (not-yet-baselined) queries can
-    # never tip a genuinely quiet run over the threshold.
-    baseline_q = _baseline_queries()
-    adjudicated = set(HEADLINE) & set(baseline_q)
-    total_val = sum(t for n, t in timings.items() if n in adjudicated)
-    total_quiet_ref = (
-        TOTAL_QUIET_RATIO * sum(baseline_q[n] for n in adjudicated)
-        if adjudicated
-        else TOTAL_QUIET_REF_FALLBACK_SEC
-    )
-    load_end = _loadavg()
-    # THREE contamination signals (round-12 item 1 adds the third):
-    # the early canary catches a hot start, the battery total catches
-    # mid-run bursts the canary misses, and battery-START loadavg
-    # catches external load already present before our session added
-    # any (measured before get_spark, so it is purely ambient).
-    contaminated = bool(
-        sf == 0.1
-        and (
-            (canary_val is not None
-             and canary_val > 1.3 * CANARY_QUIET_REF_SEC)
-            or total_val > 1.25 * total_quiet_ref
-            or load_start[0] > LOADAVG_START_MAX
-        )
-    )
-    if contaminated and not os.environ.get("SPARK_GRAFT_BENCH_RETRIED"):
-        spark.stop()
-        time.sleep(int(os.environ.get("SPARK_GRAFT_BENCH_RETRY_SLEEP", "180")))
-        os.environ["SPARK_GRAFT_BENCH_RETRIED"] = "1"
-        os.execv(sys.executable, [sys.executable, os.path.abspath(__file__)])
-
-    _report_regressions(timings, sf, load_start, load_end, load1)
-
-    headline = {n: t for n, t in timings.items() if n in set(HEADLINE)}
+    headline = {n: records[n] for n in head}
+    total = round(sum(r["wall_s"] for r in headline.values()), 2)
     # The driver captures only the LAST 2000 chars of stdout (verified:
     # BENCH_r04's tail field is exactly 2000 chars and its parse failed
     # because the 73-query line ran 2265 bytes).  So the contract line
     # carries the total + as many per-query entries as fit under the
     # window, most-expensive first (those are the ones BASELINE.md
-    # grading cares about); the COMPLETE per-query dict always lands in
-    # bench_last.json, referenced from the line itself.
+    # grading cares about); the COMPLETE per-query record always lands
+    # in bench_last.json, referenced from the line itself.
     budget = 1900
     shown: dict[str, float] = {}
-    canary = {
-        "name": CANARY,
-        "sec": canary_val,
-        "quiet_ref_sec": CANARY_QUIET_REF_SEC if sf == 0.1 else None,
-        "total_quiet_ref_sec": round(total_quiet_ref, 1) if sf == 0.1 else None,
-        "loadavg_start": load_start,
-        "loadavg_end": load_end,
-        "contaminated": contaminated,
-        "retried": bool(os.environ.get("SPARK_GRAFT_BENCH_RETRIED")),
-    }
     base = {
         "metric": "headline_total",
-        "value": round(sum(headline.values()), 2),
+        "value": total,
         "unit": "sec",
         "n_queries": len(headline),
         "agg": "min_of_reps",
-        "canary": canary,
+        "stamp": stamp,
         "queries": shown,
         "full_timings": "bench_last.json",
         "sf": sf,
     }
-    for n, t in sorted(headline.items(), key=lambda r: -r[1]):
-        shown[n] = t
+    for n, r in sorted(headline.items(), key=lambda kv: -kv[1]["wall_s"]):
+        shown[n] = r["wall_s"]
         if len(json.dumps(base, separators=(",", ":"))) > budget:
             del shown[n]
             break
     line = json.dumps(base, separators=(",", ":"))
     mirror = {
         "metric": "headline_total",
-        "value": round(sum(headline.values()), 2),
+        "value": total,
         "unit": "sec",
         "agg": "min_of_reps",
-        "canary": canary,
+        "stamp": stamp,
+        **attribution,
         "queries": headline,
-        "reps": all_reps,
-        "load1": load1,
         "sf": sf,
     }
     if full:
-        mirror["all_queries"] = timings
+        mirror["all_queries"] = records
     with open(os.path.join(REPO_ROOT, "bench_last.json"), "w") as f:
         f.write(json.dumps(mirror, separators=(",", ":")) + "\n")
     # Stop Spark BEFORE printing so no late JVM output can follow the
     # contract line in a merged stdout/stderr capture.
     spark.stop()
     print(line, flush=True)
-
-
-def _report_regressions(
-    timings: dict[str, float],
-    sf: float,
-    load_start: list[float] | None = None,
-    load_end: list[float] | None = None,
-    load1: dict[str, float] | None = None,
-) -> None:
-    """Compare against the committed baseline (bench_baseline.json) and
-    write per-query regressions to bench_regressions.txt (never stdout:
-    the contract line must be the last thing a tail-capture sees).  Box
-    contention can inflate wall-clock 1.5x+, so flag only >1.5x AND
-    >0.5s absolute; each flag carries the 1-min loadavg sampled when
-    that query finished plus the battery's start/end loadavg, so
-    adjudication can read load artifacts off the file instead of
-    burning a re-measure cycle (round-11/12 both spent theirs on
-    this). Rerun isolated before believing a regression."""
-    load1 = load1 or {}
-    path = os.environ.get(
-        "SPARK_GRAFT_BASELINE", os.path.join(REPO_ROOT, "bench_baseline.json")
-    )
-    if not os.path.exists(path):
-        return
-    with open(path) as f:
-        base = json.load(f)
-    if base.get("sf") != sf:
-        return
-    ref = base.get("queries", {})
-    lines = [
-        f"REGRESSION {n}: {ref[n]:.2f}s -> {t:.2f}s"
-        + (f" (load1@query={load1[n]})" if n in load1 else "")
-        for n, t in sorted(timings.items(), key=lambda r: ref.get(r[0], 0) - r[1])
-        if n in ref and t > 1.5 * ref[n] and t - ref[n] > 0.5
-    ] or ["bench: no regressions vs baseline"]
-    if load_start is not None:
-        lines.append(f"loadavg_start={load_start} loadavg_end={load_end}")
-    # stamp the core count: an 8-core scaling run's flags are not
-    # comparable to the canonical 32-core baseline (round-13 VERDICT
-    # item 8 — the committed artifact must name its configuration)
-    lines.append(
-        f"cpus={os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}"
-    )
-    with open(os.path.join(REPO_ROOT, "bench_regressions.txt"), "w") as f:
-        f.write("\n".join(lines) + "\n")
 
 
 if __name__ == "__main__":

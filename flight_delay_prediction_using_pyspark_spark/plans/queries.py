@@ -79,7 +79,7 @@ def scratch_persist(df: DataFrame) -> DataFrame:
     consumer in that action, but the query function returns a LAZY
     frame — unpersisting before the harness collects would throw the
     cache away before it is ever used. Releasing at next-query entry
-    bounds a full-catalog session (bench.py runs ~110 queries in one
+    bounds a full-catalog session (bench.py runs 186 queries in one
     SparkSession; the driver runs 50) to ONE query's scratch instead
     of accumulating every query's, with zero coordination required
     from the harness. (Round-5 ADVICE: persisted rev/tf/sides frames

@@ -845,8 +845,11 @@ def two_level_cte_sql(
 # --- k-means|| oversampling init (Bahmani et al., VLDB 2012) -------------------
 
 
-def _int_sq_dist_sql_expr(qv_sql: str, cand: list[int]) -> str:
-    """SQL text of int_sq_dist_expr's tree."""
+def int_sq_dist_sql_expr(qv_sql: str, cand: list[int]) -> str:
+    """Spark SQL text of the exact integer Σ(x_j−c_j)² between a
+    quantized vector and a quantized candidate POINT (k-means||
+    candidates are corpus rows, not means, so distances stay in
+    BIGINT — no FP contract at all)."""
     arr = "array(" + ",".join(f"{int(c)}L" for c in cand) + ")"
     return (
         f"aggregate(zip_with({qv_sql}, {arr}, (x, c) -> (x - c) * (x - c)),"
@@ -854,15 +857,8 @@ def _int_sq_dist_sql_expr(qv_sql: str, cand: list[int]) -> str:
     )
 
 
-def int_sq_dist_expr(qv_col: str, cand: list[int]) -> Column:
-    """Exact integer Σ(x_j−c_j)² between a quantized vector column and
-    a quantized candidate POINT (k-means|| candidates are corpus rows,
-    not means, so distances stay in BIGINT — no FP contract at all)."""
-    return F.expr(_int_sq_dist_sql_expr(qv_col, cand))
-
-
 def int_sq_dist_sql(a: str, b: str, d: int) -> str:
-    """DuckDB twin of int_sq_dist_expr (exact, order-free)."""
+    """DuckDB twin of int_sq_dist_sql_expr (exact, order-free)."""
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(generate_series(1, {d}), i -> "
@@ -874,13 +870,12 @@ def int_sq_dist_sql(a: str, b: str, d: int) -> str:
 U32_DENOM = float(1 << 32)
 
 
-def u32_expr(id_col: str | Column) -> Column:
+def u32_expr(id_col: str) -> Column:
     """The repo's engine-portable hash-uniform as a 32-bit integer:
     conv(substr(md5(id), 1, 8), 16, 10) — bit-identical to DuckDB's
     CAST(concat('0x', substr(md5(id), 1, 8)) AS BIGINT)."""
-    col = F.col(id_col) if isinstance(id_col, str) else id_col
     return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 8), 16, 10
+        F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 8), 16, 10
     ).cast("long")
 
 
@@ -928,7 +923,7 @@ def kmeanspp_candidates(
         (int(seed["vid"]), 0, [int(x) for x in seed["qv"]])
     ]
     for t in range(1, rounds + 1):
-        ds = [_int_sq_dist_sql_expr("qv", qv) for _, _, qv in cands]
+        ds = [int_sq_dist_sql_expr("qv", qv) for _, _, qv in cands]
         d2 = F.expr(ds[0] if len(ds) == 1 else f"least({', '.join(ds)})")
         scored = base.select("vid", "qv", "u32", d2.alias("d2"))
         s_total = int(
@@ -953,7 +948,7 @@ def kmeanspp_candidates(
     nearest = F.expr(
         "array_min(array("
         + ", ".join(
-            f"struct({_int_sq_dist_sql_expr('qv', qv)} AS d,"
+            f"struct({int_sq_dist_sql_expr('qv', qv)} AS d,"
             f" {int(vid)}L AS c)"
             for vid, _, qv in cands
         )

@@ -1,42 +1,41 @@
-"""Unit tests for bench.py's measurement protocol — the contamination
-gate and rep accounting, which otherwise only fail as mis-adjudicated
-rounds (round-11 verdict cycle)."""
+"""Unit tests for bench.py's measurement protocol: the ledger loop,
+rep accounting and the executor-CPU/job-count regression gate, which
+otherwise only fail as mis-adjudicated rounds."""
 
 from __future__ import annotations
 
+import json
+
 import bench
 from flight_delay_prediction_using_pyspark_spark.plans.queries import ORACLES, QUERIES
+
+STAMP = {"cpus": 4, "pyspark": "4.1.2", "java": "17.0.1", "sf": 0.1, "steal_share": 0.01}
+
+
+def _rec(wall: float, cpu: float, jobs: int) -> dict:
+    return {"wall_s": wall, "reps": [wall], "executor_cpu_s": cpu, "jobs": jobs, "tasks": 8 * jobs}
+
+
+def _report(tmp_path, monkeypatch, records: dict, baseline: dict | None) -> str:
+    """bench._report_regressions against `baseline` (None: no file)."""
+    base = tmp_path / "base.json"
+    if baseline is not None:
+        base.write_text(json.dumps(baseline))
+    monkeypatch.setenv("SPARK_GRAFT_BASELINE", str(base))
+    monkeypatch.setattr(bench, "REPO_ROOT", str(tmp_path))
+    bench._report_regressions(records, STAMP)
+    return (tmp_path / "bench_regressions.txt").read_text()
 
 
 def test_headline_entries_exist_and_are_baselined():
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing, f"headline names not in catalog: {missing}"
-    base = bench._baseline_queries()
+    base = bench._baseline()["queries"]
     unbaselined = [n for n in bench.HEADLINE if n not in base]
     assert not unbaselined, (
-        "headline entries without a committed baseline (the derived "
-        f"quiet reference silently shrinks): {unbaselined}"
+        "headline entries without a committed baseline (the gate "
+        f"silently skips them): {unbaselined}"
     )
-
-
-def test_derived_quiet_reference_tracks_baselines():
-    """Round-11 ADVICE: the total-quiet reference derives from the
-    committed baselines (0.75 x their sum over baselined headline
-    queries) instead of a hand-pinned constant, so HEADLINE growth
-    cannot silently exhaust the contamination gate's headroom."""
-    base = bench._baseline_queries()
-    adjudicated = set(bench.HEADLINE) & set(base)
-    ref = bench.TOTAL_QUIET_RATIO * sum(base[n] for n in adjudicated)
-    # sanity band: the round-11/12 quiet-run totals sat at 355-480 s;
-    # a ref outside [250, 800] means either baselines or the ratio
-    # regressed in a way adjudication would misread
-    assert 250.0 < ref < 800.0, ref
-    assert bench.TOTAL_QUIET_RATIO == 0.75
-
-
-def test_streaming_min3_members_are_catalog_queries():
-    ghosts = [n for n in bench.STREAMING_MIN3 if n not in QUERIES]
-    assert not ghosts, ghosts
 
 
 def test_memo_build_gets_one_cold_rep(spark):
@@ -59,59 +58,80 @@ def test_memo_build_gets_one_cold_rep(spark):
     assert Q.memo_size(spark) == size + 1
 
 
-def test_contamination_gate_constants_pinned():
-    """Round-12 verdict item 1: the fresh-session canary reference and
-    the loadavg-start gate exist and sit in their measured bands —
-    fresh-session canary floor measured 15.9-18.4 s warm-cache on a
-    quiet box (36 s first-ever cold-cache), mid-battery 9.0 s; the
-    loadavg gate must clear a retry process' own decayed load (~e^-3
-    of a 32-thread battery after the 180 s retry sleep) but catch the
-    loadavg 4.7-7.9 band that contaminated the r12 8M soak."""
-    assert bench.CANARY_QUIET_REF_SEC == 9.0
-    assert 13.0 <= bench.CANARY_FRESH_SESSION_REF_SEC <= 26.0
-    assert bench.CANARY_FRESH_SESSION_REF_SEC > bench.CANARY_QUIET_REF_SEC
-    assert 2.0 < bench.LOADAVG_START_MAX <= 8.0
+def test_ledger_battery_attributes_every_job(spark):
+    """The per-query loop joins Spark's own job and stage records to its
+    rep spans: every job the battery starts (the warm-up's included)
+    lands in a span, each query records jobs and executor CPU, and a
+    cold memo build still keeps exactly one rep."""
+    from flight_delay_prediction_using_pyspark_spark.plans import queries as Q
+    from tests.conftest import SF_CORRECTNESS_DIR as sf
+
+    edges = Q._MEMO.get(spark.sparkContext, {}).pop(("graph", sf), None)
+    if edges is not None:
+        edges.unpersist()
+    names = ["tpch_q6_forecast_revenue", "copurchase_triangle_stats"]
+    records, attribution = bench._battery(spark, sf, names)
+    assert attribution["jobs_attributed"] == attribution["jobs_total"] > 0
+    for name in names:
+        assert records[name]["jobs"] > 0, name
+        assert records[name]["executor_cpu_s"] > 0, name
+        assert records[name]["tasks"] >= records[name]["jobs"], name
+    assert len(records["copurchase_triangle_stats"]["reps"]) == 1
+    assert len(records["tpch_q6_forecast_revenue"]["reps"]) >= 2
 
 
-def test_regression_lines_carry_load_evidence(tmp_path, monkeypatch):
-    """Every REGRESSION line carries the 1-min loadavg sampled at that
-    query's completion, and the file ends with the battery start/end
-    loadavg — so adjudication reads load artifacts off the file
-    instead of burning a re-measure cycle (rounds 11 AND 12 each
-    spent theirs proving driver flags were host load)."""
-    import json
-
-    base = tmp_path / "base.json"
-    base.write_text(json.dumps({"sf": 0.1, "queries": {"q_slow": 1.0, "q_ok": 1.0}}))
-    monkeypatch.setenv("SPARK_GRAFT_BASELINE", str(base))
-    monkeypatch.setattr(bench, "REPO_ROOT", str(tmp_path))
-    bench._report_regressions(
-        {"q_slow": 2.5, "q_ok": 1.1},
-        0.1,
-        load_start=[0.5, 0.4, 0.3],
-        load_end=[12.0, 6.0, 3.0],
-        load1={"q_slow": 14.5, "q_ok": 11.0},
-    )
-    text = (tmp_path / "bench_regressions.txt").read_text()
-    assert "REGRESSION q_slow: 1.00s -> 2.50s (load1@query=14.5)" in text
-    assert "q_ok" not in text.split("loadavg_start")[0]
-    assert "loadavg_start=[0.5, 0.4, 0.3]" in text
-    assert "loadavg_end=[12.0, 6.0, 3.0]" in text
+def test_gate_flags_cpu_and_jobs_not_wall(tmp_path, monkeypatch):
+    """A 2x executor-CPU regression and one extra job are flagged; 2x
+    wall with CPU and jobs unchanged is host load, never flagged."""
+    base = {
+        "stamp": STAMP,
+        "queries": {n: _rec(2.0, 2.0, 3) for n in ("q_cpu", "q_jobs", "q_wall", "q_small")},
+    }
+    text = _report(tmp_path, monkeypatch, {
+        "q_cpu": _rec(2.1, 4.0, 3),
+        "q_jobs": _rec(2.0, 2.0, 4),
+        "q_wall": _rec(4.0, 2.0, 3),
+        "q_small": _rec(2.0, 2.4, 3),  # +20%: under both thresholds
+        "q_new": _rec(9.0, 9.0, 9),  # no baseline entry
+    }, base)
+    assert "REGRESSION q_cpu: executor_cpu_s 2.00 -> 4.00 (wall_s 2.00 -> 2.10)" in text
+    assert "REGRESSION q_jobs: jobs 3 -> 4" in text
+    assert text.count("REGRESSION") == 2
+    assert "q_wall" not in text and "q_small" not in text and "q_new" not in text
 
 
-def test_quiet_run_regression_file_still_carries_load(tmp_path, monkeypatch):
-    import json
+def test_gate_compares_nothing_across_stamps(tmp_path, monkeypatch):
+    """A baseline from another configuration is never compared, however
+    far its numbers are from this run's."""
+    base = {"stamp": {**STAMP, "cpus": 32}, "queries": {"q": _rec(1.0, 1.0, 1)}}
+    text = _report(tmp_path, monkeypatch, {"q": _rec(9.0, 9.0, 9)}, base)
+    assert "REGRESSION" not in text
+    assert text.startswith("not compared: baseline stamp {")
+    assert '"cpus": 32' in text and '"cpus": 4' in text
 
-    base = tmp_path / "base.json"
-    base.write_text(json.dumps({"sf": 0.1, "queries": {"q": 1.0}}))
-    monkeypatch.setenv("SPARK_GRAFT_BASELINE", str(base))
-    monkeypatch.setattr(bench, "REPO_ROOT", str(tmp_path))
-    bench._report_regressions(
-        {"q": 1.0}, 0.1, load_start=[0.1, 0.2, 0.3], load_end=[9.0, 4.0, 2.0]
-    )
-    text = (tmp_path / "bench_regressions.txt").read_text()
-    assert "no regressions" in text
-    assert "loadavg_start=[0.1, 0.2, 0.3]" in text
+
+def test_regression_file_rewritten_without_comparable_baseline(tmp_path, monkeypatch):
+    """A missing or other-SF baseline still rewrites the file, so an
+    earlier run's verdict never survives to read as current."""
+    stale = tmp_path / "bench_regressions.txt"
+    stale.write_text("REGRESSION old_query: stale\n")
+    text = _report(tmp_path, monkeypatch, {"q": _rec(1.0, 1.0, 1)}, None)
+    assert "old_query" not in text
+    assert text.startswith("not compared: baseline stamp null vs this run {")
+    stale.write_text("REGRESSION old_query: stale\n")
+    base = {"stamp": {**STAMP, "sf": 0.01}, "queries": {"q": _rec(1.0, 1.0, 1)}}
+    text = _report(tmp_path, monkeypatch, {"q": _rec(1.0, 1.0, 1)}, base)
+    assert "old_query" not in text
+    assert '"sf": 0.01' in text and '"sf": 0.1' in text
+
+
+def test_quiet_run_regression_file_carries_stamp(tmp_path, monkeypatch):
+    """Host steal differs between any two runs, so it is stamped but
+    does not block the comparison."""
+    base = {"stamp": {**STAMP, "steal_share": 0.2}, "queries": {"q": _rec(1.0, 1.0, 1)}}
+    text = _report(tmp_path, monkeypatch, {"q": _rec(1.0, 1.0, 1)}, base)
+    assert text.splitlines()[0] == "bench: no regressions vs baseline"
+    assert text.splitlines()[1] == f"stamp={json.dumps(STAMP)}"
 
 
 def test_coverage_doc_counts_match_catalog():
@@ -134,15 +154,27 @@ def test_coverage_doc_counts_match_catalog():
     )
 
 
-def test_catalog_cost_hints_cover_every_query():
-    import json
-    import os
+def test_catalog_queries_are_baselined_and_rotated_by_cost():
+    """Every catalog query has a committed baseline record, and the
+    driver rotation is _MUST_HAVE first, then each tier in ascending
+    baseline wall."""
+    import __spark_entry__ as E
 
-    with open(os.path.join(bench.REPO_ROOT, "catalog_cost_hints.json")) as f:
-        hints = json.load(f)["queries"]
-    unhinted = sorted(set(QUERIES) - set(hints))
-    # new queries default to 0.3s in the rotation — a missing hint is
-    # not fatal, but the round's additions should land with hints so
-    # the 50-slot window orders honestly
-    assert not unhinted, f"queries without cost hints: {unhinted}"
-    assert set(ORACLES) <= set(QUERIES)
+    base = bench._baseline()["queries"]
+    unbaselined = sorted(set(QUERIES) - set(base))
+    assert not unbaselined, f"queries without a baseline entry: {unbaselined}"
+    for name, rec in base.items():
+        assert set(bench.LEDGER_FIELDS) | {"wall_s"} <= set(rec), name
+    order = list(E.queries())
+    assert sorted(order) == sorted(QUERIES)
+    must = [n for n in E._MUST_HAVE if n in QUERIES]
+    assert order[: len(must)] == must
+    attempted = E._driver_attempted()
+
+    def tier(n: str) -> int:
+        if n in attempted:
+            return 3 + (n not in ORACLES)
+        return 2 if n in E._DEFER else int(n not in ORACLES)
+
+    keys = [(tier(n), base[n]["wall_s"]) for n in order[len(must):]]
+    assert keys == sorted(keys)

@@ -479,7 +479,7 @@ def test_sql_text_exprs_match_driver_twins(spark, km_rows):
     # exact-integer distance (k-means|| candidates)
     cand = km_rows[0][1]
     z_sql = {r["vec_id"]: r["d"] for r in df.select(
-        "vec_id", km.int_sq_dist_expr("qv", cand).alias("d")).collect()}
+        "vec_id", F.expr(km.int_sq_dist_sql_expr("qv", cand)).alias("d")).collect()}
     assert z_sql == {
         v: sum((x - c) * (x - c) for x, c in zip(qv, cand)) for v, qv in qvs.items()
     }
