@@ -5,16 +5,20 @@ Data model: a media column is
   payload: binary               -- the opaque encoded bytes
   media_meta: struct<media_type string, width int, height int,
                      n_bytes long>    -- typed, prunable metadata
+                                         (MEDIA_META_TYPE)
 
 The Spark-side plumbing is real and tested: explicit output schemas,
 `mapInPandas` with Arrow batches, per-batch (not per-row) numpy work,
-and partition counts preserved. The *codec* step is stubbed — this
-container ships no image/audio libraries — behind
-`decode_with_codec()`, which raises NotImplementedError with the
-integration point documented. The deterministic fallback path
-(`byte_features`, `frame_sample`) does honest byte-level computation
-on the payload, so every pipeline stage downstream of decode is
-exercised with real data.
+and partition counts preserved. Four codecs are real, pure-Python and
+dependency-free — P6 PPM, uncompressed 24-bit BMP, 8-bit RGB PNG and
+palette GIF89a — and all decoding goes through ONE media_type →
+decoder table (`DECODERS`) behind `decode_with_codec()`. JPEG, audio
+and video raise NotImplementedError ("no codec available"): this
+container ships no image/audio libraries, and that function is the
+integration point. The codec-free paths (`decode_features` without
+`use_codec`, `frame_sample`, `decode_resize_stats`) do honest
+byte-level computation on the payload, so every pipeline stage downstream of
+decode is exercised with real data.
 
 Scale notes: mapInPandas streams Arrow record batches — payloads
 never materialize as Python lists; memory is bounded by
@@ -49,6 +53,16 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_idx", T.LongType()),
         T.StructField("frame_bytes", T.LongType()),
         T.StructField("frame_hash", T.StringType()),
+    ]
+)
+
+#: Type of the `media_meta` struct every media builder emits.
+MEDIA_META_TYPE = T.StructType(
+    [
+        T.StructField("media_type", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("n_bytes", T.LongType()),
     ]
 )
 
@@ -218,9 +232,6 @@ def _make_bmp_codec():
 
 
 encode_bmp, decode_bmp = _make_bmp_codec()
-
-#: media_type of the BMP codec path.
-BMP_MEDIA_TYPE = "image/bmp"
 
 
 def _make_png_codec():
@@ -398,9 +409,6 @@ def _make_png_codec():
 
 
 encode_png, decode_png = _make_png_codec()
-
-#: media_type of the PNG codec path.
-PNG_MEDIA_TYPE = "image/png"
 
 
 def _make_gif_codec():
@@ -634,36 +642,63 @@ def _make_gif_codec():
 
 encode_gif, decode_gif = _make_gif_codec()
 
-#: media_type of the GIF codec path.
+
+#: media_type of each real codec.
+PPM_MEDIA_TYPE = "image/x-portable-pixmap"
+BMP_MEDIA_TYPE = "image/bmp"
+PNG_MEDIA_TYPE = "image/png"
 GIF_MEDIA_TYPE = "image/gif"
 
+#: The one media_type → decoder table. Every decoder returns
+#: (width, height, maxval, rgb_topdown), so downstream code is
+#: codec-agnostic.
+DECODERS = {
+    PPM_MEDIA_TYPE: decode_ppm,
+    BMP_MEDIA_TYPE: decode_bmp,
+    PNG_MEDIA_TYPE: decode_png,
+    GIF_MEDIA_TYPE: decode_gif,
+}
 
-def decode_with_codec(payload: bytes, media_type: str) -> tuple[int, int, int, bytes]:
-    """The codec dispatch point. PPM (P6), uncompressed 24-bit BMP,
-    8-bit RGB PNG (zlib/DEFLATE, all five scanline filters), and
-    palette GIF89a (variable-width LZW) decode for real — pure
-    Python, no binary deps, one container family per compression
-    discipline (text header / flat binary / DEFLATE / LZW). Other
-    media types (JPEG, audio, video) raise: PIL/torchaudio/ffmpeg are
-    not available in this environment; swap in
-    `PIL.Image.open(io.BytesIO(payload))` (or the audio/video
-    equivalent) here when the runtime ships codecs."""
-    if media_type == "image/x-portable-pixmap":
-        return decode_ppm(payload)
-    if media_type == BMP_MEDIA_TYPE:
-        return decode_bmp(payload)
-    if media_type == PNG_MEDIA_TYPE:
-        return decode_png(payload)
-    if media_type == GIF_MEDIA_TYPE:
-        return decode_gif(payload)
-    raise NotImplementedError(
-        f"no codec available for {media_type}; install PIL/ffmpeg and "
-        "wire it here — downstream plumbing is codec-agnostic"
-    )
+#: media_type → (encoder, raster bytes per pixel) for the Python encode
+#: arm: RGB containers take 3·w·h raster bytes, GIF takes w·h palette
+#: indices.
+ENCODERS = {
+    BMP_MEDIA_TYPE: (encode_bmp, 3),
+    PNG_MEDIA_TYPE: (encode_png, 3),
+    GIF_MEDIA_TYPE: (encode_gif, 1),
+}
 
 
-#: media_type of the executable PPM codec path.
-PPM_MEDIA_TYPE = "image/x-portable-pixmap"
+def _make_codec_dispatch(decoders: dict):
+    """Factory (by-value cloudpickle, like the codec factories): the
+    dispatch and its table ship inside every UDF closure that calls
+    it, so executor workers never import this package."""
+
+    def decode_with_codec(
+        payload: bytes, media_type: str
+    ) -> tuple[int, int, int, bytes]:
+        """The codec dispatch point. PPM (P6), uncompressed 24-bit
+        BMP, 8-bit RGB PNG (zlib/DEFLATE, all five scanline filters),
+        and palette GIF89a (variable-width LZW) decode for real — pure
+        Python, no binary deps, one container family per compression
+        discipline (text header / flat binary / DEFLATE / LZW). Other
+        media types (JPEG, audio, video) raise NotImplementedError:
+        PIL/torchaudio/ffmpeg are not available in this environment;
+        add `PIL.Image.open(io.BytesIO(payload))` (or the audio/video
+        equivalent) to the table when the runtime ships codecs."""
+        decode = decoders.get(media_type)
+        if decode is None:
+            raise NotImplementedError(
+                f"no codec available for {media_type}; install PIL/ffmpeg "
+                "and add it to DECODERS — downstream plumbing is "
+                "codec-agnostic"
+            )
+        return decode(payload)
+
+    return decode_with_codec
+
+
+decode_with_codec = _make_codec_dispatch(DECODERS)
 
 
 def attach_ppm_media(
@@ -709,42 +744,38 @@ def attach_ppm_media(
     )
 
 
-def attach_bmp_media(
+def attach_encoded_media(
     df: DataFrame,
+    media_type: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     carry_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """The BMP twin of attach_ppm_media, deliberately built as the
-    PYTHON encode arm (mapInPandas + struct.pack) where the PPM arm
-    is pure Catalyst: real pipelines mix JVM-synthesized and
-    upstream-Python-produced payloads, and the mixed-codec query
-    unions both arms through one decode dispatch. Same deterministic
-    dimensions (w = 1 + n mod 13, h = 1 + n mod 11) and the same
-    text-byte tiling for the RGB raster, so the decoded-pixel truth
-    is the same SQL tile arithmetic — but the bytes on the wire are a
-    genuine little-endian binary BMP (bottom-up rows, BGR, 4-byte row
-    padding) the decoder must actually invert."""
+    """The PYTHON encode arm of the synthetic media builders
+    (mapInPandas + the `ENCODERS` codec for `media_type`: BMP, PNG or
+    GIF), where attach_ppm_media is pure Catalyst: real pipelines mix
+    JVM-synthesized and upstream-Python-produced payloads, and the
+    mixed-codec queries union both arms through one decode dispatch.
+
+    Same deterministic dimensions as the PPM arm (w = 1 + n mod 13,
+    h = 1 + n mod 11), and the text bytes tile the container's raster:
+    3·w·h RGB bytes for BMP and PNG, w·h palette indices for GIF
+    (grayscale identity palette, so the decoded truth is each tiled
+    byte TRIPLED). The decoded-pixel truth therefore stays SQL tile
+    arithmetic, while the wire bytes are a genuine container the
+    decoder must invert. Null and empty texts emit no row, like the
+    PPM arm's `length > 0` filter."""
     carry = list(carry_cols)
-    meta_type = T.StructType(
-        [
-            T.StructField("media_type", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
     schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
             T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", meta_type),
+            T.StructField("media_meta", MEDIA_META_TYPE),
         ]
         + [df.schema[c] for c in carry]
     )
     out_cols = [f.name for f in schema.fields]
-    enc = encode_bmp  # by-value (factory `<locals>` qualname)
-    mt = BMP_MEDIA_TYPE
+    enc, channels = ENCODERS[media_type]  # by-value (`<locals>` qualname)
     tcol, icol = text_col, id_col
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -753,141 +784,15 @@ def attach_bmp_media(
             for doc_id, text, *extra in zip(
                 pdf[icol], pdf[tcol], *[pdf[c] for c in carry]
             ):
+                if pd.isna(text) or not text:
+                    continue
                 tb = str(text).encode("utf-8")
                 n = len(tb)
-                if n == 0:
-                    continue
                 w, h = n % 13 + 1, n % 11 + 1
-                npx = 3 * w * h
-                rgb = (tb * (npx // n + 1))[:npx]
-                payload = enc(w, h, rgb)
+                npx = channels * w * h
+                payload = enc(w, h, (tb * (npx // n + 1))[:npx])
                 meta = {
-                    "media_type": mt,
-                    "width": w,
-                    "height": h,
-                    "n_bytes": len(payload),
-                }
-                rows.append((int(doc_id), payload, meta, *extra))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return df.mapInPandas(build, schema=schema)
-
-
-def attach_png_media(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """The PNG arm of the synthetic media builders (mapInPandas +
-    stdlib zlib, like the BMP arm): same deterministic dimensions
-    (w = 1 + n mod 13, h = 1 + n mod 11) and the same text-byte
-    tiling for the RGB raster, so the decoded-pixel truth is the
-    same SQL tile arithmetic — but the bytes on the wire are a real
-    chunked, CRC-guarded, DEFLATE-compressed PNG whose row filters
-    cycle through all five types, so the decoder must inflate and
-    invert Sub/Up/Average/Paeth prediction to recover the raster."""
-    carry = list(carry_cols)
-    meta_type = T.StructType(
-        [
-            T.StructField("media_type", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", meta_type),
-        ]
-        + [df.schema[c] for c in carry]
-    )
-    out_cols = [f.name for f in schema.fields]
-    enc = encode_png  # by-value (factory `<locals>` qualname)
-    mt = PNG_MEDIA_TYPE
-    tcol, icol = text_col, id_col
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, *extra in zip(
-                pdf[icol], pdf[tcol], *[pdf[c] for c in carry]
-            ):
-                tb = str(text).encode("utf-8")
-                n = len(tb)
-                if n == 0:
-                    continue
-                w, h = n % 13 + 1, n % 11 + 1
-                npx = 3 * w * h
-                rgb = (tb * (npx // n + 1))[:npx]
-                payload = enc(w, h, rgb)
-                meta = {
-                    "media_type": mt,
-                    "width": w,
-                    "height": h,
-                    "n_bytes": len(payload),
-                }
-                rows.append((int(doc_id), payload, meta, *extra))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return df.mapInPandas(build, schema=schema)
-
-
-def attach_gif_media(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """The GIF arm of the synthetic media builders (mapInPandas +
-    stdlib LZW, like the BMP/PNG arms): same deterministic dimensions
-    (w = 1 + n mod 13, h = 1 + n mod 11), but GIF is PALETTE media,
-    so the text bytes tile the w·h pixel INDICES (grayscale identity
-    palette: index i renders (i, i, i)) instead of the 3·w·h RGB
-    bytes — the decoded-pixel truth is each tiled byte TRIPLED, which
-    keeps the oracle arithmetic in the same tile algebra as the other
-    arms while the wire bytes are a real LZW-compressed, sub-blocked
-    GIF89a container."""
-    carry = list(carry_cols)
-    meta_type = T.StructType(
-        [
-            T.StructField("media_type", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", meta_type),
-        ]
-        + [df.schema[c] for c in carry]
-    )
-    out_cols = [f.name for f in schema.fields]
-    enc = encode_gif  # by-value (factory `<locals>` qualname)
-    mt = GIF_MEDIA_TYPE
-    tcol, icol = text_col, id_col
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, *extra in zip(
-                pdf[icol], pdf[tcol], *[pdf[c] for c in carry]
-            ):
-                tb = str(text).encode("utf-8")
-                n = len(tb)
-                if n == 0:
-                    continue
-                w, h = n % 13 + 1, n % 11 + 1
-                npx = w * h
-                gray = (tb * (npx // n + 1))[:npx]
-                payload = enc(w, h, gray)
-                meta = {
-                    "media_type": mt,
+                    "media_type": media_type,
                     "width": w,
                     "height": h,
                     "n_bytes": len(payload),
@@ -903,13 +808,13 @@ def decode_features(
 ) -> DataFrame:
     """Per-media byte-level features via mapInPandas (Arrow batches).
 
-    `use_codec=True` routes each payload through the REAL codec —
-    PPM payloads decode (header parsed, raster extracted) and the
-    features are computed over the DECODED PIXEL BYTES; other media
-    types raise NotImplementedError (the documented PIL/ffmpeg
-    boundary). The default path computes the same statistics over the
-    raw payload bytes — identical batch shape, schema, and
-    partitioning either way.
+    `use_codec=True` routes each payload through decode_with_codec by
+    its media_meta.media_type and computes the features over the
+    DECODED PIXEL BYTES: PPM, BMP, PNG and GIF decode for real; JPEG,
+    audio and video raise NotImplementedError (the documented
+    PIL/ffmpeg boundary). The default path computes the same
+    statistics over the raw payload bytes — identical batch shape,
+    schema, and partitioning either way.
 
     `carry_cols` (e.g. `("source",)`) are echoed per row from input
     batch to output batch, so grouping dimensions ride the extractor
@@ -918,21 +823,14 @@ def decode_features(
     doc-id projection of the whole fact table per query).
 
     The UDF closure is self-contained (captures only local values and
-    the factory-made by-value decoder, no module globals): executor
+    the factory-made by-value dispatch, no module globals): executor
     Python workers must not need this package importable."""
     carry = list(carry_cols)
     schema = T.StructType(list(FEATURE_SCHEMA.fields) + [df.schema[c] for c in carry])
     out_cols = [f.name for f in schema.fields]
     if use_codec:
         df = df.withColumn("__media_type", F.col("media_meta.media_type"))
-    ppm = decode_ppm  # `<locals>` qualnames ⇒ cloudpickled by value
-    bmp = decode_bmp
-    png = decode_png
-    gif = decode_gif
-    ppm_type = PPM_MEDIA_TYPE
-    bmp_type = BMP_MEDIA_TYPE
-    png_type = PNG_MEDIA_TYPE
-    gif_type = GIF_MEDIA_TYPE
+    decode = decode_with_codec  # `<locals>` qualname ⇒ cloudpickled by value
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # local import: runs on executors
@@ -949,51 +847,14 @@ def decode_features(
             return (int(doc_id), n, s, float(s) / n, entropy, *extra)
 
         for pdf in batches:
+            types = pdf["__media_type"] if use_codec else [None] * len(pdf)
             rows = []
-            if use_codec:
-                for doc_id, payload, mt, *extra in zip(
-                    pdf["doc_id"],
-                    pdf["payload"],
-                    pdf["__media_type"],
-                    *[pdf[c] for c in carry],
-                ):
-                    if mt == ppm_type:
-                        _w, _h, _maxval, raster = ppm(bytes(payload))
-                    elif mt == bmp_type:
-                        _w, _h, _maxval, raster = bmp(bytes(payload))
-                    elif mt == png_type:
-                        _w, _h, _maxval, raster = png(bytes(payload))
-                    elif mt == gif_type:
-                        _w, _h, _maxval, raster = gif(bytes(payload))
-                    else:
-                        raise NotImplementedError(
-                            f"no codec available for {mt}; install "
-                            "PIL/ffmpeg and wire it into this loop"
-                        )
-                    rows.append(feature_row(doc_id, raster, extra))
-                yield pd.DataFrame(rows, columns=out_cols)
-                continue
-            for doc_id, payload, *extra in zip(
-                pdf["doc_id"], pdf["payload"], *[pdf[c] for c in carry]
+            for doc_id, payload, mt, *extra in zip(
+                pdf["doc_id"], pdf["payload"], types, *[pdf[c] for c in carry]
             ):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                n = int(arr.size)
-                if n == 0:
-                    rows.append((int(doc_id), 0, 0, 0.0, 0.0, *extra))
-                    continue
-                counts = np.bincount(arr, minlength=256)
-                probs = counts[counts > 0] / n
-                entropy = float(-(probs * np.log2(probs)).sum())
-                rows.append(
-                    (
-                        int(doc_id),
-                        n,
-                        int(arr.sum(dtype=np.int64)),
-                        float(arr.sum(dtype=np.int64)) / n,
-                        entropy,
-                        *extra,
-                    )
-                )
+                buf = bytes(payload)
+                raster = decode(buf, mt)[3] if use_codec else buf
+                rows.append(feature_row(doc_id, raster, extra))
             yield pd.DataFrame(rows, columns=out_cols)
 
     return df.mapInPandas(extract, schema=schema)
@@ -1014,8 +875,10 @@ def decode_resize_stats(df: DataFrame, target: int = 8) -> DataFrame:
     neighbor resize to (target × target), and emit the sampled-pixel
     sum/mean — the full decode → transform → feature pipeline a real
     image stage runs, with the codec swapped for pure index
-    arithmetic (pixel(r, c) = payload[(r·w + c) mod n]). Unlike the
-    `use_codec` stub, every stage here EXECUTES, and the math is
+    arithmetic (pixel(r, c) = payload[(r·w + c) mod n]), so it runs
+    on ANY payload — including `attach_media`'s image/fake bytes, for
+    which decode_with_codec has no codec (PPM, BMP, PNG and GIF decode
+    for real there; JPEG, audio and video raise). The math is
     engine-portable (oracle-verified in SQL via ord/substring).
 
     Arrow batches via mapInPandas; the per-row work is O(target²)
@@ -1106,6 +969,34 @@ PHASH_SCHEMA = T.StructType(
 )
 
 
+def _phash_map(src: DataFrame, sample, target: int, chunk_bits: int) -> DataFrame:
+    """The above-mean chunk packer every phash builder shares. `src` is
+    (doc_id, payload, *args); `sample(payload_bytes, *args)` returns
+    the builder's own target×target pixel grid, row-major. Bit j is set
+    iff pixel_j is above the mean — the INTEGER comparison
+    n_bits·px > Σpx, so no float ties — and the bits pack into
+    n_bits/chunk_bits (doc_id, ci, val) rows. `sample` must be a local
+    closure so it ships by value with the UDF."""
+    n_bits = target * target
+    n_chunks = n_bits // chunk_bits
+
+    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload, *args in zip(*(pdf[c] for c in pdf.columns)):
+                px = sample(bytes(payload), *args)
+                s = sum(px)
+                for ci in range(n_chunks):
+                    val = 0
+                    for b in range(chunk_bits):
+                        if n_bits * px[ci * chunk_bits + b] > s:
+                            val |= 1 << b
+                    rows.append((int(doc_id), ci, val))
+            yield pd.DataFrame(rows, columns=["doc_id", "ci", "val"])
+
+    return src.mapInPandas(hash_batches, schema=PHASH_SCHEMA)
+
+
 def phash_chunks(df: DataFrame, target: int = 8, chunk_bits: int = 16) -> DataFrame:
     """Perceptual average-hash of each decoded media payload, emitted
     as pigeonhole chunks: decode via the fake codec's 8×8 pixel grid
@@ -1123,33 +1014,16 @@ def phash_chunks(df: DataFrame, target: int = 8, chunk_bits: int = 16) -> DataFr
         F.greatest(F.col("media_meta.height"), F.lit(1)).alias("h"),
     )
     t = target
-    n_bits = t * t
-    n_chunks = n_bits // chunk_bits
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, w, h in zip(
-                pdf["doc_id"], pdf["payload"], pdf["w"], pdf["h"]
-            ):
-                raw = bytes(payload)
-                n, w, h = len(raw), int(w), int(h)
-                px = [
-                    raw[(((r * h) // t) * w + (c * w) // t) % n]
-                    for r in range(t)
-                    for c in range(t)
-                ]
-                s = sum(px)
-                for ci in range(n_chunks):
-                    val = 0
-                    for b in range(chunk_bits):
-                        j = ci * chunk_bits + b
-                        if n_bits * px[j] > s:
-                            val |= 1 << b
-                    rows.append((int(doc_id), ci, val))
-            yield pd.DataFrame(rows, columns=["doc_id", "ci", "val"])
+    def sample(raw: bytes, w, h) -> list[int]:
+        n, w, h = len(raw), int(w), int(h)
+        return [
+            raw[(((r * h) // t) * w + (c * w) // t) % n]
+            for r in range(t)
+            for c in range(t)
+        ]
 
-    return src.mapInPandas(hash_batches, schema=PHASH_SCHEMA)
+    return _phash_map(src, sample, target, chunk_bits)
 
 
 def phash_chunks_codec(df: DataFrame, target: int = 8, chunk_bits: int = 16) -> DataFrame:
@@ -1168,42 +1042,17 @@ def phash_chunks_codec(df: DataFrame, target: int = 8, chunk_bits: int = 16) -> 
         "doc_id", "payload", F.col("media_meta.media_type").alias("mt")
     )
     t = target
-    n_bits = t * t
-    n_chunks = n_bits // chunk_bits
-    # `<locals>` qualnames ⇒ cloudpickled by value (executor Python
-    # workers must not need this package importable — decode_features
-    # discipline; decode_with_codec itself is module-level and would
-    # ship by reference)
-    codecs = {
-        PPM_MEDIA_TYPE: decode_ppm,
-        BMP_MEDIA_TYPE: decode_bmp,
-        PNG_MEDIA_TYPE: decode_png,
-        GIF_MEDIA_TYPE: decode_gif,
-    }
+    decode = decode_with_codec  # `<locals>` qualname ⇒ cloudpickled by value
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, mt in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mt"]
-            ):
-                w, h, _mx, raster = codecs[str(mt)](bytes(payload))
-                px = [
-                    raster[3 * (((r * h) // t) * w + (c * w) // t)]
-                    for r in range(t)
-                    for c in range(t)
-                ]
-                s = sum(px)
-                for ci in range(n_chunks):
-                    val = 0
-                    for b in range(chunk_bits):
-                        j = ci * chunk_bits + b
-                        if n_bits * px[j] > s:
-                            val |= 1 << b
-                    rows.append((int(doc_id), ci, val))
-            yield pd.DataFrame(rows, columns=["doc_id", "ci", "val"])
+    def sample(raw: bytes, mt) -> list[int]:
+        w, h, _mx, raster = decode(raw, mt)
+        return [
+            raster[3 * (((r * h) // t) * w + (c * w) // t)]
+            for r in range(t)
+            for c in range(t)
+        ]
 
-    return src.mapInPandas(hash_batches, schema=PHASH_SCHEMA)
+    return _phash_map(src, sample, target, chunk_bits)
 
 
 def phash_near_dup(
@@ -1290,56 +1139,42 @@ def attach_media_clones(
     differ): here 'same content, different container' is true by
     construction, and a decode-normalize pipeline must pair the
     clones at Hamming 0."""
-    meta_type = T.StructType(
-        [
-            T.StructField("media_type", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
             T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", meta_type),
+            T.StructField("media_meta", MEDIA_META_TYPE),
         ]
     )
-    enc_bmp, enc_png, enc_gif = encode_bmp, encode_png, encode_gif
-    types = (PPM_MEDIA_TYPE, BMP_MEDIA_TYPE, PNG_MEDIA_TYPE, GIF_MEDIA_TYPE)
+    ppm_type = PPM_MEDIA_TYPE
+    # arms 1-3 in media_id order; `<locals>` encoders ship by value
+    arms = [
+        (mt, *ENCODERS[mt]) for mt in (BMP_MEDIA_TYPE, PNG_MEDIA_TYPE, GIF_MEDIA_TYPE)
+    ]
     tcol, icol = text_col, id_col
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf[icol], pdf[tcol]):
+                if pd.isna(text) or not text:
+                    continue
                 tb = str(text).encode("utf-8")
                 n = len(tb)
-                if n == 0:
-                    continue
                 w, h = n % 13 + 1, n % 11 + 1
                 gray = (tb * (w * h // n + 1))[: w * h]
-                rgb = bytes(v for g in gray for v in (g, g, g))
+                rasters = {1: gray, 3: bytes(v for g in gray for v in (g, g, g))}
                 header = f"P6\n# spark-graft synthetic\n{w} {h}\n255\n"
-                payloads = (
-                    header.encode("ascii") + rgb,
-                    enc_bmp(w, h, rgb),
-                    enc_png(w, h, rgb),
-                    enc_gif(w, h, gray),
-                )
-                for arm, (mt, payload) in enumerate(zip(types, payloads)):
-                    rows.append(
-                        (
-                            int(doc_id) * 4 + arm,
-                            payload,
-                            {
-                                "media_type": mt,
-                                "width": w,
-                                "height": h,
-                                "n_bytes": len(payload),
-                            },
-                        )
-                    )
+                payloads = [(ppm_type, header.encode("ascii") + rasters[3])]
+                payloads += [(mt, enc(w, h, rasters[ch])) for mt, enc, ch in arms]
+                for arm, (mt, payload) in enumerate(payloads):
+                    meta = {
+                        "media_type": mt,
+                        "width": w,
+                        "height": h,
+                        "n_bytes": len(payload),
+                    }
+                    rows.append((int(doc_id) * 4 + arm, payload, meta))
             yield pd.DataFrame(rows, columns=["media_id", "payload", "media_meta"])
 
     return df.mapInPandas(build, schema=schema)
@@ -1368,44 +1203,21 @@ def phash_chunks_normalized(
         F.col("media_meta.media_type").alias("mt"),
     )
     t = target
-    n_bits = t * t
-    n_chunks = n_bits // chunk_bits
-    # `<locals>` qualnames ⇒ cloudpickled by value (decode_features
-    # discipline: executor workers never import this package)
-    codecs = {
-        PPM_MEDIA_TYPE: decode_ppm,
-        BMP_MEDIA_TYPE: decode_bmp,
-        PNG_MEDIA_TYPE: decode_png,
-        GIF_MEDIA_TYPE: decode_gif,
-    }
+    decode = decode_with_codec  # `<locals>` qualname ⇒ cloudpickled by value
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, mt in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mt"]
-            ):
-                w, h, _mx, raster = codecs[str(mt)](bytes(payload))
-                gray = [
-                    (raster[3 * p] + raster[3 * p + 1] + raster[3 * p + 2]) // 3
-                    for p in range(w * h)
-                ]
-                px = [
-                    gray[((r * h) // t) * w + (c * w) // t]
-                    for r in range(t)
-                    for c in range(t)
-                ]
-                s = sum(px)
-                for ci in range(n_chunks):
-                    val = 0
-                    for b in range(chunk_bits):
-                        j = ci * chunk_bits + b
-                        if n_bits * px[j] > s:
-                            val |= 1 << b
-                    rows.append((int(media_id), ci, val))
-            yield pd.DataFrame(rows, columns=["doc_id", "ci", "val"])
+    def sample(raw: bytes, mt) -> list[int]:
+        w, h, _mx, raster = decode(raw, mt)
+        gray = [
+            (raster[3 * p] + raster[3 * p + 1] + raster[3 * p + 2]) // 3
+            for p in range(w * h)
+        ]
+        return [
+            gray[((r * h) // t) * w + (c * w) // t]
+            for r in range(t)
+            for c in range(t)
+        ]
 
-    return src.mapInPandas(hash_batches, schema=PHASH_SCHEMA)
+    return _phash_map(src, sample, target, chunk_bits)
 
 
 def decode_features_arrow(df: DataFrame, carry_cols: Sequence[str] = ()) -> DataFrame:

@@ -373,7 +373,7 @@ def q_media_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_ppm_decode_stats: each document becomes a real GIF89a —
     logical screen descriptor, 256-entry grayscale palette, image
     descriptor, variable-width LZW index stream in sub-blocks,
-    trailer (attach_gif_media) — then decodes through the pure-Python
+    trailer (attach_encoded_media) — then decodes through the pure-Python
     GIF parser inside the Arrow-batched decode_features(use_codec=
     True) loop, with per-source stats over the DECODED RGB raster.
     Every payload exercises the block walk, the 9→12-bit LZW code
@@ -390,7 +390,7 @@ def q_media_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the extractor (join-free carry)."""
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     feats = M.decode_features(
-        M.attach_gif_media(docs, carry_cols=("source",)),
+        M.attach_encoded_media(docs, M.GIF_MEDIA_TYPE, carry_cols=("source",)),
         use_codec=True,
         carry_cols=("source",),
     )
@@ -399,6 +399,19 @@ def q_media_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_bytes").alias("total_px_bytes"),
         F.sum("byte_sum").alias("total_px_sum"),
     )
+
+
+def _mixed_codec_media(docs: DataFrame) -> DataFrame:
+    """The four-container corpus of the mixed-codec queries: doc_id
+    mod 4 routes each document to PPM (0, the Catalyst arm), BMP (1),
+    PNG (2) or GIF (3) (the Python arm), unioned into one frame."""
+    media = M.attach_ppm_media(docs.filter(F.col("doc_id") % 4 == 0))
+    arm_types = (M.BMP_MEDIA_TYPE, M.PNG_MEDIA_TYPE, M.GIF_MEDIA_TYPE)
+    for arm, mt in enumerate(arm_types, 1):
+        media = media.unionByName(
+            M.attach_encoded_media(docs.filter(F.col("doc_id") % 4 == arm), mt)
+        )
+    return media
 
 
 @query(
@@ -468,15 +481,8 @@ def q_media_mixed_codec_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage over the union; the only shuffle is the final 4-group
     agg."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    ppm_arm = M.attach_ppm_media(docs.filter(F.col("doc_id") % 4 == 0))
-    bmp_arm = M.attach_bmp_media(docs.filter(F.col("doc_id") % 4 == 1))
-    png_arm = M.attach_png_media(docs.filter(F.col("doc_id") % 4 == 2))
-    gif_arm = M.attach_gif_media(docs.filter(F.col("doc_id") % 4 == 3))
-    media = (
-        ppm_arm.unionByName(bmp_arm)
-        .unionByName(png_arm)
-        .unionByName(gif_arm)
-        .withColumn("media_type", F.col("media_meta.media_type"))
+    media = _mixed_codec_media(docs).withColumn(
+        "media_type", F.col("media_meta.media_type")
     )
     feats = M.decode_features(
         media, use_codec=True, carry_cols=("media_type",)
@@ -563,12 +569,7 @@ def q_media_phash_mixed_codec_near_dup(
     container-invariant sibling, whose clone fan-out quadruples the
     codec work, keeps it.)"""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    media = (
-        M.attach_ppm_media(docs.filter(F.col("doc_id") % 4 == 0))
-        .unionByName(M.attach_bmp_media(docs.filter(F.col("doc_id") % 4 == 1)))
-        .unionByName(M.attach_png_media(docs.filter(F.col("doc_id") % 4 == 2)))
-        .unionByName(M.attach_gif_media(docs.filter(F.col("doc_id") % 4 == 3)))
-    )
+    media = _mixed_codec_media(docs)
     return M.phash_near_dup(
         M.phash_chunks_codec(media), max_hamming=3, persist_fn=scratch_persist
     )

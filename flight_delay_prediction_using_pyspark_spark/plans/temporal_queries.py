@@ -1674,8 +1674,8 @@ def q_layout_dynamic_partition_overwrite(
     incoming frame. The oracle computes the expected FINAL table
     (untouched types verbatim + doubled purchases), so both halves
     of the contract — untouched partitions intact, target partition
-    replaced — are value-verified, not just counted. The conf is
-    scoped and restored."""
+    replaced — are value-verified, not just counted. The mode is a
+    writer option, so no session-global conf changes."""
     import tempfile
 
     ensure_utc(spark)
@@ -1690,13 +1690,12 @@ def q_layout_dynamic_partition_overwrite(
         ev.filter(F.col("event_type") == "purchase")
         .withColumn("cents", F.col("cents") * 2)
     )
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf, "static")
-    spark.conf.set(conf, "dynamic")
-    try:
-        doubled.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    finally:
-        spark.conf.set(conf, old)
+    (
+        doubled.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
     back = spark.read.parquet(path)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -1,6 +1,8 @@
 """Unit tests for multimodal.media: payload/metadata shapes, Arrow
-mapInPandas decode, frame fan-out, codec stub, and the ASCII
-assumption the byte-level oracles rely on."""
+mapInPandas decode, frame fan-out, the four real codecs (PPM, BMP,
+PNG, GIF) behind the one decode dispatch, the missing-codec error for
+every other media type (JPEG, audio, video), and the ASCII assumption
+the byte-level oracles rely on."""
 
 from __future__ import annotations
 
@@ -183,6 +185,45 @@ def test_ppm_codec_raises_on_foreign_media_type(spark):
     # match an unrelated schema/pickle crash (round-10 ADVICE)
     with _pytest.raises(Exception, match="no codec available"):
         M.decode_features(media, use_codec=True).collect()
+    # the phash builders share the same dispatch and the same error
+    with _pytest.raises(Exception, match="no codec available"):
+        M.phash_chunks_codec(media).collect()
+    with _pytest.raises(Exception, match="no codec available"):
+        M.phash_chunks_normalized(media, id_col="doc_id").collect()
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        M.attach_ppm_media,
+        lambda df: M.attach_encoded_media(df, M.BMP_MEDIA_TYPE),
+        lambda df: M.attach_encoded_media(df, M.PNG_MEDIA_TYPE),
+        lambda df: M.attach_encoded_media(df, M.GIF_MEDIA_TYPE),
+        lambda df: M.attach_media_clones(df).withColumn(
+            "doc_id", F.expr("media_id DIV 4")
+        ),
+    ],
+    ids=["ppm", "bmp", "png", "gif", "clones"],
+)
+def test_media_builders_skip_null_and_empty_text(spark, build):
+    """Every media arm — the Catalyst PPM arm, the Python encode arm
+    for each codec, and the clone fan-out — emits media only for a
+    non-empty text: a null text must not become the bytes "None"."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, "abc"), (3, "")], "doc_id long, text string"
+    )
+    assert {r.doc_id for r in build(docs).collect()} == {2}
+
+
+def test_codec_tables_ship_by_value():
+    """The dispatch and every codec in both tables are factory-made
+    closures (`<locals>` in __qualname__), so cloudpickle ships them by
+    value and executor workers never import this package — the
+    self-contained-closure rule a driver from a foreign cwd enforces."""
+    fns = [M.decode_with_codec, *M.DECODERS.values()]
+    fns += [enc for enc, _channels in M.ENCODERS.values()]
+    for fn in fns:
+        assert "<locals>" in fn.__qualname__, fn.__qualname__
 
 
 def test_bmp_codec_roundtrip_and_layout():
@@ -233,14 +274,14 @@ def test_bmp_decoder_rejects_malformed():
 
 
 def test_bmp_pipeline_and_dispatch(spark):
-    """attach_bmp_media (the Python encode arm) emits real BMPs whose
+    """attach_encoded_media (the Python encode arm) emits real BMPs whose
     decoded features match the text-byte tiling; decode_with_codec
     dispatches both codecs and still raises for library types."""
     import pytest as _pytest
 
     text = "mixed codec!"  # n=12 -> w=13, h=2
     docs = spark.createDataFrame([(3, text)], ["doc_id", "text"])
-    media = M.attach_bmp_media(docs)
+    media = M.attach_encoded_media(docs, M.BMP_MEDIA_TYPE)
     row = media.first()
     w, h, mv, raster = M.decode_bmp(bytes(row.payload))
     n = len(text)
@@ -368,12 +409,12 @@ def test_png_decode_rejects_malformed():
 
 
 def test_png_pipeline_decodes_real_payloads(spark):
-    """attach_png_media emits real compressed PNGs that the stdlib
+    """attach_encoded_media emits real compressed PNGs that the stdlib
     parser decodes to the exact tiled raster inside the mapInPandas
     feature stage (stats over DECODED pixels, not container bytes)."""
     text = "hello world!"  # n=12 -> w=13, h=2
     docs = spark.createDataFrame([(7, text, "sA")], ["doc_id", "text", "source"])
-    media = M.attach_png_media(docs, carry_cols=("source",))
+    media = M.attach_encoded_media(docs, M.PNG_MEDIA_TYPE, carry_cols=("source",))
     row = media.first()
     w, h, mv, raster = M.decode_png(bytes(row.payload))
     n = len(text)
@@ -543,12 +584,12 @@ def test_gif_decode_rejects_malformed():
 
 
 def test_gif_pipeline_decodes_real_payloads(spark):
-    """attach_gif_media emits real LZW-compressed GIFs whose decoded
+    """attach_encoded_media emits real LZW-compressed GIFs whose decoded
     features are stats over TRIPLED tiled text bytes (palette media:
     text tiles the w*h indices, each rendering (i, i, i))."""
     text = "hello world!"  # n=12 -> w=13, h=2
     docs = spark.createDataFrame([(3, text, "sB")], ["doc_id", "text", "source"])
-    media = M.attach_gif_media(docs, carry_cols=("source",))
+    media = M.attach_encoded_media(docs, M.GIF_MEDIA_TYPE, carry_cols=("source",))
     row = media.first()
     w, h, mv, raster = M.decode_gif(bytes(row.payload))
     n = len(text)
