@@ -146,7 +146,8 @@ def compact_partitioned(
     rewrite is a distributed coalesce job over that partition's files
     only, so maintenance cost is proportional to the fragmented data,
     not the store. The per-partition rewrites are SUBMITTED
-    CONCURRENTLY from a bounded driver thread pool (guide §2.6 —
+    CONCURRENTLY, at most 4 at a time, through the catalog's driver
+    thread helper (plans.queries.run_concurrently; guide §2.6 —
     Spark's scheduler runs the independent jobs at once; each rewrite
     touches only its own partition directory, so there is no
     commit-protocol interaction), which is exactly how a
@@ -158,7 +159,8 @@ def compact_partitioned(
     import math
     import os
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
+
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import run_concurrently
 
     def compact_one(part_dir: str) -> tuple[str, int] | None:
         files = [
@@ -185,8 +187,9 @@ def compact_partitioned(
     part_dirs = sorted(glob.glob(os.path.join(path, f"{partition_col}=*")))
     if not part_dirs:
         return {}
-    with ThreadPoolExecutor(max_workers=min(4, len(part_dirs))) as pool:
-        results = list(pool.map(compact_one, part_dirs))
+    results = run_concurrently(
+        *[lambda p=p: compact_one(p) for p in part_dirs], max_workers=min(4, len(part_dirs))
+    )
     return dict(r for r in results if r is not None)
 
 

@@ -145,7 +145,9 @@ def release_scratch() -> None:
 _SCRATCH_LOCK = threading.Lock()
 
 
-def run_concurrently(*thunks: Callable[[], object]) -> list[object]:
+def run_concurrently(
+    *thunks: Callable[[], object], max_workers: int | None = None
+) -> list[object]:
     """Run independent driver-side build/collect chains on threads —
     the guide §2.6 pattern (overlap independent jobs): Spark's
     scheduler happily runs several jobs at once in one application,
@@ -165,7 +167,10 @@ def run_concurrently(*thunks: Callable[[], object]) -> list[object]:
     worker thread is re-homed to the CALLING thread's registry so the
     next catalog query on this thread still releases it (the
     thread-keyed registry would otherwise leak worker-thread
-    entries)."""
+    entries).
+
+    ``max_workers`` bounds how many thunks run at once; the default
+    runs every thunk on its own thread."""
     from concurrent.futures import ThreadPoolExecutor
 
     caller = threading.get_ident()
@@ -180,7 +185,7 @@ def run_concurrently(*thunks: Callable[[], object]) -> list[object]:
                 with _SCRATCH_LOCK:
                     _SCRATCH.setdefault(caller, []).extend(frames)
 
-    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
+    with ThreadPoolExecutor(max_workers=max_workers or max(1, len(thunks))) as pool:
         futures = [pool.submit(wrap, i, t) for i, t in enumerate(thunks)]
         errors = [
             (i, f.exception()) for i, f in enumerate(futures) if f.exception()

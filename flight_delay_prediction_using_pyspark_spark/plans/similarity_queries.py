@@ -833,7 +833,7 @@ def q_embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (see similarity/kmeans.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     cent = km.kmeans_fit(qdf, k=_KM_K, iters=_KM_ITERS, d=_KM_D)
     rows = [
@@ -893,7 +893,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
         emb.select(
-            "vec_id", "embedding", km.quantize_expr("embedding").alias("qv")
+            "vec_id", "embedding", F.expr(km.quantize_sql_expr("embedding")).alias("qv")
         )
     )
     cent = km.kmeans_fit(
@@ -956,11 +956,12 @@ def q_ann_ivf_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Why hierarchical at production k ≈ √n: a flat quantizer either
     inlines k·d literals (plan-size ceiling) or pays a per-id reduce
-    for every row (assign_via_join); two levels keep every expression
-    the plan carries at kc·d or kf·d literals — the coarse assignment
-    is literal-inlined, and the FINE assignment expression is built
-    from the PROBED cells' codebooks only (two_level_assign(cells=…)),
-    so query cost scales with n_probe, not kc·kf. With the corpus
+    for every row (a broadcast-join assignment); two levels keep every
+    expression the plan carries at kc·d or kf·d literals — the coarse
+    assignment is literal-inlined, and the FINE assignment expression
+    is built from the PROBED cells' codebooks only
+    (two_level_assign(cells=…)), so query cost scales with n_probe,
+    not kc·kf. With the corpus
     written partitionBy(gid, fid), the probe filter prunes to
     (pc·pf)/(kc·kf) of the data at plan time. The oracle replays the
     coarse chain, the per-cell seeding, the fine grouped chain, and
@@ -978,7 +979,7 @@ def _two_level_probe(spark: SparkSession, sf_dir: str):
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
         emb.select(
-            "vec_id", "embedding", km.quantize_expr("embedding").alias("qv")
+            "vec_id", "embedding", F.expr(km.quantize_sql_expr("embedding")).alias("qv")
         )
     )
     coarse, books = km.two_level_fit(
@@ -1081,7 +1082,7 @@ def _pq_trained(spark: SparkSession, sf_dir: str):
     would release_scratch mid-query)."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     reshaped = base.select(
         "vec_id",
@@ -1100,7 +1101,6 @@ def _pq_trained(spark: SparkSession, sf_dir: str):
         iters=_PQ_ITERS,
         d=_PQ_SUBD,
         group_col="sub",
-        n_groups=_PQ_M,
     )
     return base, books
 
@@ -1293,7 +1293,7 @@ def q_semdedup_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
         emb.select(
-            "vec_id", "embedding", km.quantize_expr("embedding").alias("qv")
+            "vec_id", "embedding", F.expr(km.quantize_sql_expr("embedding")).alias("qv")
         )
     )
     cent = km.kmeans_fit(
@@ -1360,11 +1360,9 @@ def q_embedding_kmeans_pp_candidates(
     collect."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
-    cands = km.kmeanspp_candidates(
-        base, rounds=_KMPP_ROUNDS, l=_KMPP_L, d=_KM_D
-    )
+    cands = km.kmeanspp_candidates(base, rounds=_KMPP_ROUNDS, l=_KMPP_L)
     out = spark.createDataFrame(
         [(vid, rnd, wt) for vid, rnd, _qv, wt in cands],
         "vec_id long, round_added long, weight long",
@@ -1429,7 +1427,7 @@ def q_embedding_kmeans_init_quality(
     reduction, and the two inertia scans in one WITH chain."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     # the two init arms are independent trainings over `base` —
     # overlap them, then overlap the two inertia scans (guide §2.6)
@@ -1437,9 +1435,7 @@ def q_embedding_kmeans_init_quality(
         return km.kmeans_fit(base, k=_KM_K, iters=_SD_KM_ITERS, d=_KM_D)
 
     def _arm_b():
-        cands = km.kmeanspp_candidates(
-            base, rounds=_KMPP_ROUNDS, l=_KMPP_L, d=_KM_D
-        )
+        cands = km.kmeanspp_candidates(base, rounds=_KMPP_ROUNDS, l=_KMPP_L)
         seeds = sorted(cands, key=lambda c: (-c[3], c[0]))[:_KM_K]
         return km.kmeans_fit_from_seeds(
             base,
@@ -1507,7 +1503,7 @@ def q_ann_ivf_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+    base = emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     cent = km.kmeans_fit(base, k=_KM_K, iters=_IVF_ITERS, d=_KM_D)
 
     stage = tempfile.mkdtemp(prefix="ivf_src_")
@@ -1829,7 +1825,7 @@ def _cusum_sql_ctes(census_cte: str, sfx: str, min_mass: int = 0) -> str:
 #: the frozen quantizer trains on — phases 0-1 of `staged` are the
 #: original vectors, so reading them straight from `embeddings` skips
 #: materializing the shift) and `qall` (every vector, phases 2-3
-#: +1.5-shifted BEFORE quantization, exactly quantize_expr's IEEE
+#: +1.5-shifted BEFORE quantization, exactly quantize_sql_expr's IEEE
 #: order: widen float→double, +1.5, ×scale, floor).
 _DRIFT_FIXTURE_SQL = f"""
     hist AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
@@ -1944,7 +1940,7 @@ def q_ann_ivf_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # frozen quantizer: trained on pre-drift history only
     hist = staged.filter(F.col("phase") < 2).select(
-        "vec_id", km.quantize_expr("embedding").alias("qv")
+        "vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv")
     )
     stage = tempfile.mkdtemp(prefix="ivf_drift_src_")
     # training and the fixture write are independent of each other —
@@ -2292,7 +2288,7 @@ def q_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-built bytes (n_probe × m × k doubles)."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     coarse = km.kmeans_fit(base, k=_KM_K, iters=_IVF_ITERS, d=_KM_D)
     res = scratch_persist(
@@ -2323,7 +2319,6 @@ def q_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=_PQ_ITERS,
         d=_PQ_SUBD,
         group_col="sub",
-        n_groups=_PQ_M,
     )
     q_quant = [
         int(x)
@@ -2596,7 +2591,7 @@ def q_ann_ivfadc_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
 
     def _sub_slices(df: DataFrame, vcol: str) -> DataFrame:
@@ -2619,7 +2614,6 @@ def q_ann_ivfadc_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             iters=_PQ_ITERS,
             d=_PQ_SUBD,
             group_col="sub",
-            n_groups=_PQ_M,
         )
 
     # the four training chains are mutually independent (each is a
@@ -2993,7 +2987,7 @@ def q_ann_ivf_two_level_streaming_ingest(
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+    base = emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     coarse, books = km.two_level_fit(
         base, kc=_TL_KC, kf=_TL_KF, coarse_iters=_TL_TC, fine_iters=_TL_TF,
         d=_KM_D,
@@ -3010,7 +3004,7 @@ def q_ann_ivf_two_level_streaming_ingest(
     # outside the micro-batch body and reused against every batch
     # frame (round-14, guide §4 driver boundary); same tree as
     # two_level_assign, which delegates to the same builder
-    qv_sel = km.quantize_expr("embedding").alias("qv")
+    qv_sel = F.expr(km.quantize_sql_expr("embedding")).alias("qv")
     gid_col, fid_col = km.two_level_assign_exprs(coarse, books)
 
     def ingest(batch_df: DataFrame, _batch_id: int) -> None:
@@ -3180,7 +3174,7 @@ def q_ann_ivf_two_level_drift_refit(
         .alias("embedding"),
     )
     hist = staged.filter(F.col("phase") < 2).select(
-        "vec_id", km.quantize_expr("embedding").alias("qv")
+        "vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv")
     )
     stage = tempfile.mkdtemp(prefix="ivf2_drift_src_")
     # training and the fixture write are independent — overlap them
@@ -3208,7 +3202,7 @@ def q_ann_ivf_two_level_drift_refit(
     # outside the micro-batch body (round-14, guide §4 driver
     # boundary); same tree as two_level_assign, which delegates to the
     # same builder
-    qv_sel = km.quantize_expr("embedding").alias("qv")
+    qv_sel = F.expr(km.quantize_sql_expr("embedding")).alias("qv")
     gid_col, fid_col = km.two_level_assign_exprs(coarse, books)
 
     def ingest(batch_df: DataFrame, _batch_id: int) -> None:
@@ -3272,7 +3266,7 @@ def q_ann_ivf_two_level_drift_refit(
             km.two_level_assign(
                 emb.select(
                     (F.col("vec_id") % 4).cast("int").alias("phase"),
-                    km.quantize_expr("embedding").alias("qv"),
+                    F.expr(km.quantize_sql_expr("embedding")).alias("qv"),
                 ),
                 coarse,
                 books,
@@ -3422,7 +3416,7 @@ def q_ann_ivfadc_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered ADC fold end-to-end."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     coarse, books = km.two_level_fit(
         base, kc=_TL_KC, kf=_TL_KF, coarse_iters=_TL_TC, fine_iters=_TL_TF,
@@ -3466,7 +3460,6 @@ def q_ann_ivfadc_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=_PQ_ITERS,
         d=_PQ_SUBD,
         group_col="sub",
-        n_groups=_PQ_M,
     )
     q_quant = [
         int(x)
@@ -3594,7 +3587,7 @@ def q_ann_ivfadc_two_level_streaming_encode(
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
-        emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     )
     coarse, books = km.two_level_fit(
         base, kc=_TL_KC, kf=_TL_KF, coarse_iters=_TL_TC, fine_iters=_TL_TF,
@@ -3637,7 +3630,6 @@ def q_ann_ivfadc_two_level_streaming_encode(
         iters=_PQ_ITERS,
         d=_PQ_SUBD,
         group_col="sub",
-        n_groups=_PQ_M,
     )
 
     stage = tempfile.mkdtemp(prefix="ivfadc2_src_")
@@ -3652,7 +3644,7 @@ def q_ann_ivfadc_two_level_streaming_encode(
     # (round-14, guide §4 driver boundary): assignment pair, broadcast
     # fine-centroid frame, residual zip_with, and the m per-sub code
     # argmins — the per-batch work is apply + append only
-    qv_sel = km.quantize_expr("embedding").alias("qv")
+    qv_sel = F.expr(km.quantize_sql_expr("embedding")).alias("qv")
     gid_col, fid_col = km.two_level_assign_exprs(coarse, books)
     fc_b = F.broadcast(fc_df)
     rq_col = F.zip_with(

@@ -72,21 +72,8 @@ DEFAULT_SCALE = 100_000
 # --- quantization -------------------------------------------------------------
 
 
-def quantize_expr(vec_col: str | Column, scale: int = DEFAULT_SCALE) -> Column:
-    """array<float|double> → array<bigint>: floor(x · scale).
-
-    Exactness bound: |component| ≤ ~10 and corpora ≤ ~10^9 rows keep
-    per-cluster component sums < 2^53 ≪ BIGINT, so group sums are
-    exact and order-independent — the property the whole oracle
-    contract rests on."""
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        col, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
-    )
-
-
 def quantize_sql(vec_expr: str, scale: int = DEFAULT_SCALE) -> str:
-    """DuckDB twin of quantize_expr (identical IEEE ops)."""
+    """DuckDB twin of quantize_sql_expr (identical IEEE ops)."""
     return (
         f"list_transform(CAST({vec_expr} AS DOUBLE[]), "
         f"x -> CAST(floor(x * {float(scale)!r}) AS BIGINT))"
@@ -94,8 +81,14 @@ def quantize_sql(vec_expr: str, scale: int = DEFAULT_SCALE) -> str:
 
 
 def quantize_sql_expr(vec_sql: str, scale: int = DEFAULT_SCALE) -> str:
-    """Spark-SQL text twin of quantize_expr (same tree after parse),
-    for composing into other SQL-text expressions."""
+    """array<float|double> → array<bigint>: floor(x · scale), as Spark
+    SQL text (callers parse it with F.expr or compose it into other
+    SQL-text expressions).
+
+    Exactness bound: |component| ≤ ~10 and corpora ≤ ~10^9 rows keep
+    per-cluster component sums < 2^53 ≪ BIGINT, so group sums are
+    exact and order-independent — the property the whole oracle
+    contract rests on."""
     return (
         f"transform({vec_sql}, x -> "
         f"CAST(floor(CAST(x AS DOUBLE) * {repr(float(scale))}D) AS BIGINT))"
@@ -185,27 +178,37 @@ def centroid_components(n: int, sums: list[int]) -> list[float]:
     return [s / n for s in sums]
 
 
+def _argmin_sql_expr(terms: list[tuple[str, str]]) -> str:
+    """Argmin over (distance SQL, id SQL) pairs as Spark SQL text:
+    array_min of (d, c) structs — lexicographic struct ordering ≡ SQL
+    ``ORDER BY d, c`` (ties → lowest id). Each distance fold appears
+    ONCE in the expression (a nested when-chain duplicates it O(k²)
+    times — measured 5.8 MB task binaries at k=8·m=4 vs ~1.5 MB this
+    way). No candidates (an empty centroid set or codebook) → a typed
+    NULL: no row has a nearest centroid."""
+    if not terms:
+        return "CAST(NULL AS INT)"
+    entries = ", ".join(f"struct({d} AS d, {c} AS c)" for d, c in terms)
+    return f"array_min(array({entries})).c"
+
+
 def _nearest_sql_expr(
     qv_sql: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> str:
     """SQL text of nearest_expr's tree."""
-    entries = ", ".join(
-        f"struct({_sq_dist_sql_expr(qv_sql, centroid_components(*centroids[cid]))}"
-        f" AS d, {int(cid)} AS c)"
-        for cid in sorted(centroids)
+    return _argmin_sql_expr(
+        [
+            (_sq_dist_sql_expr(qv_sql, centroid_components(*centroids[cid])), str(int(cid)))
+            for cid in sorted(centroids)
+        ]
     )
-    return f"array_min(array({entries})).c"
 
 
 def nearest_expr(
     qv_col: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> Column:
-    """Argmin cluster id over inlined centroid literals: array_min of
-    (dist, cid) structs — lexicographic struct ordering ≡ SQL
-    ``ORDER BY dist, cid`` (ties → lowest cid). Each distance fold
-    appears ONCE in the expression (a nested when-chain duplicates it
-    O(k²) times — measured 5.8 MB task binaries at k=8·m=4 vs ~1.5 MB
-    this way)."""
+    """Argmin cluster id over inlined centroid literals
+    (_argmin_sql_expr over the fold distances)."""
     return F.expr(_nearest_sql_expr(qv_col, centroids))
 
 
@@ -309,7 +312,6 @@ def kmeans_fit_grouped(
     iters: int,
     d: int,
     group_col: str,
-    n_groups: int,
     qv_col: str = "qv",
     id_col: str = "vec_id",
 ) -> dict[int, dict[int, tuple[int, list[int]]]]:
@@ -387,20 +389,21 @@ def _grouped_nearest_expr(
 ) -> Column:
     """CASE over the group column, each branch the group's argmin —
     one projection covers all m codebooks, built as one parsed SQL
-    expression. No ELSE: a missing group yields NULL."""
+    expression. No ELSE: a missing group yields NULL, and so does an
+    empty codebook."""
     whens = " ".join(
         f"WHEN {group_col} = {int(g)} THEN"
         f" {_nearest_sql_expr(qv_col, per_group[g])}"
         for g in sorted(per_group)
     )
-    return F.expr(f"CASE {whens} END")
+    return F.expr(f"CASE {whens} END" if whens else _argmin_sql_expr([]))
 
 
 # --- two-level (hierarchical) IVF: coarse cells, per-cell fine lists -----------
 #
 # At production k ≈ √n a FLAT quantizer is the wrong shape twice over:
-# the assignment expression carries k·d literals (the plan-size
-# ceiling assign_cells gates on), and every query's probe selection
+# the assignment expression carries k·d literals (SCALE.md's
+# assignment ceiling), and every query's probe selection
 # ranks all k centroids. The IVF answer (Jégou et al., TPAMI 2011 §V;
 # FAISS's IVF over a coarse quantizer) is hierarchical: a small coarse
 # level (e.g. 256 cells) assigned via inlined literals, then an
@@ -650,39 +653,48 @@ def kmeans_iter_ctes(
     q_cte: str,
     cent0_cte: str,
     prefix: str = "",
+    keys: tuple[str, ...] = (),
 ) -> list[str]:
-    """The Lloyd's iteration chain alone, reading points from
-    ``q_cte`` (vid, qv) and seeds from ``cent0_cte`` (cid, n, s).
-    Emits ``{prefix}a{t}/b{t}/n{t}/cent{t}`` so two independently
-    seeded chains can coexist in one WITH (the init-quality
-    comparison)."""
+    """The one DuckDB Lloyd's iteration chain, reading points from
+    ``q_cte`` (vid, qv, *keys) and seeds from ``cent0_cte`` (*keys,
+    cid, n, s). Emits ``{prefix}a{t}/b{t}/n{t}/cent{t}``; ``b{t}``
+    (vid, *keys, qv, cid) is the assignment under ``cent{t-1}``, so a
+    caller wanting the final assignment asks for one extra iteration
+    and reads ``b{iters}``. ``prefix`` lets independently seeded
+    chains coexist in one WITH (the init-quality comparison, the
+    two-level coarse/fine chains).
+
+    ``keys`` trains one codebook per key value in the same chain (PQ
+    subspaces ``("sub",)``, two-level coarse cells ``("gid",)``): a
+    point meets only its own key's centroids, the argmin, the
+    recompute and the empty-cluster carry-forward are all per key.
+    Mirrors kmeans_fit_from_seeds (no keys) and
+    grouped_fit_from_seeds (keys): same fold distance, lowest-cid
+    tie-break (ORDER BY dist, cid), carry-forward."""
+    kp = "".join(f"{k}, " for k in keys)
+    qk = "".join(f"{q_cte}.{k}, " for k in keys)
+    on = " AND ".join(f"{q_cte}.{k} = c.{k}" for k in keys) or "TRUE"
+    same = "".join(f"x.{k} = c.{k} AND " for k in keys)
     sums = ", ".join(f"SUM(qv[{j + 1}]) AS s{j}" for j in range(d))
     slist = "list_value(" + ", ".join(f"s{j}" for j in range(d)) + ")"
     dist = _sq_dist_sql(f"{q_cte}.qv", "c.c", d)
     parts: list[str] = []
     for t in range(1, iters + 1):
         prev = cent0_cte if t == 1 else f"{prefix}cent{t - 1}"
-        parts.append(
-            f"{prefix}a{t} AS MATERIALIZED (SELECT {q_cte}.vid, {q_cte}.qv, c.cid,"
-            f" {dist} AS dist FROM {q_cte}"
-            f" CROSS JOIN (SELECT cid, list_transform(s, x ->"
-            f" CAST(x AS DOUBLE) / n) AS c FROM {prev}) c)"
-        )
-        parts.append(
-            f"{prefix}b{t} AS MATERIALIZED (SELECT vid, qv, cid FROM (SELECT vid, qv, cid,"
-            f" row_number() OVER (PARTITION BY vid ORDER BY dist, cid)"
-            f" AS rn FROM {prefix}a{t}) WHERE rn = 1)"
-        )
-        parts.append(
-            f"{prefix}n{t} AS MATERIALIZED (SELECT cid, n, {slist} AS s FROM"
-            f" (SELECT cid, COUNT(*) AS n, {sums} FROM {prefix}b{t}"
-            f" GROUP BY cid))"
-        )
-        parts.append(
-            f"{prefix}cent{t} AS MATERIALIZED (SELECT cid, n, s FROM {prefix}n{t}"
-            f" UNION ALL SELECT cid, n, s FROM {prev}"
-            f" WHERE cid NOT IN (SELECT cid FROM {prefix}n{t}))"
-        )
+        a, b, n = (f"{prefix}{x}{t}" for x in "abn")
+        parts += [
+            f"{a} AS MATERIALIZED (SELECT {q_cte}.vid, {qk}{q_cte}.qv, c.cid,"
+            f" {dist} AS dist FROM {q_cte} JOIN (SELECT {kp}cid, list_transform(s,"
+            f" x -> CAST(x AS DOUBLE) / n) AS c FROM {prev}) c ON {on})",
+            f"{b} AS MATERIALIZED (SELECT vid, {kp}qv, cid FROM (SELECT vid, {kp}qv,"
+            f" cid, row_number() OVER (PARTITION BY {kp}vid ORDER BY dist, cid)"
+            f" AS rn FROM {a}) WHERE rn = 1)",
+            f"{n} AS MATERIALIZED (SELECT {kp}cid, n, {slist} AS s FROM (SELECT"
+            f" {kp}cid, COUNT(*) AS n, {sums} FROM {b} GROUP BY {kp}cid))",
+            f"{prefix}cent{t} AS MATERIALIZED (SELECT {kp}cid, n, s FROM {n}"
+            f" UNION ALL SELECT {kp}cid, n, s FROM {prev} c WHERE NOT EXISTS"
+            f" (SELECT 1 FROM {n} x WHERE {same}x.cid = c.cid))",
+        ]
     return parts
 
 
@@ -701,10 +713,10 @@ def grouped_kmeans_cte_sql(
 ) -> str:
     """The PQ-trainer twin of kmeans_cte_sql: m per-subspace codebooks
     trained in one shared iteration chain. Emits CTEs ``{p}q0`` (flat
-    quantized), ``{p}r`` (reshaped vid/sub/qv), ``{p}cent0`` …
-    ``{p}cent{T}`` keyed by (sub, cid). Same init (k smallest-md5 ids,
-    reused across subspaces), fold distance, tie-break, and
-    empty-cluster carry-forward as kmeans_fit_grouped.
+    quantized), ``{p}r`` (reshaped vid/sub/qv), ``{p}seed``,
+    ``{p}cent0``, then kmeans_iter_ctes keyed on ``sub`` (``{p}a1`` …
+    ``{p}cent{T}``, keyed by (sub, cid)). Same init (k smallest-md5
+    ids, reused across subspaces) as kmeans_fit_grouped.
 
     ``q0_body`` overrides the quantized-input CTE with an arbitrary
     ``SELECT ... AS vid, ... AS qv`` (must emit BIGINT-list vectors of
@@ -713,8 +725,6 @@ def grouped_kmeans_cte_sql(
     the chain can coexist with a coarse kmeans_cte_sql chain in one
     WITH."""
     p = prefix
-    sums = ", ".join(f"SUM(qv[{j + 1}]) AS s{j}" for j in range(sub_d))
-    slist = "list_value(" + ", ".join(f"s{j}" for j in range(sub_d)) + ")"
     slices = " UNION ALL ".join(
         f"SELECT vid, {s} AS sub,"
         f" list_slice(qv, {s * sub_d + 1}, {(s + 1) * sub_d}) AS qv"
@@ -736,30 +746,10 @@ def grouped_kmeans_cte_sql(
         f"{p}cent0 AS MATERIALIZED (SELECT {p}r.sub, {p}seed.cid, CAST(1 AS BIGINT) AS n,"
         f" {p}r.qv AS s FROM {p}r JOIN {p}seed USING (vid))",
     ]
-    dist = _sq_dist_sql(f"{p}r.qv", "c.c", sub_d)
-    for t in range(1, iters + 1):
-        pv = t - 1
-        parts.append(
-            f"{p}a{t} AS MATERIALIZED (SELECT {p}r.vid, {p}r.sub, {p}r.qv, c.cid, {dist} AS dist"
-            f" FROM {p}r JOIN (SELECT sub, cid, list_transform(s, x ->"
-            f" CAST(x AS DOUBLE) / n) AS c FROM {p}cent{pv}) c ON {p}r.sub = c.sub)"
-        )
-        parts.append(
-            f"{p}b{t} AS MATERIALIZED (SELECT vid, sub, qv, cid FROM (SELECT vid, sub, qv,"
-            f" cid, row_number() OVER (PARTITION BY vid, sub"
-            f" ORDER BY dist, cid) AS rn FROM {p}a{t}) WHERE rn = 1)"
-        )
-        parts.append(
-            f"{p}n{t} AS MATERIALIZED (SELECT sub, cid, n, {slist} AS s FROM"
-            f" (SELECT sub, cid, COUNT(*) AS n, {sums} FROM {p}b{t}"
-            f" GROUP BY sub, cid))"
-        )
-        parts.append(
-            f"{p}cent{t} AS MATERIALIZED (SELECT sub, cid, n, s FROM {p}n{t} UNION ALL"
-            f" SELECT c.sub, c.cid, c.n, c.s FROM {p}cent{pv} c"
-            f" WHERE NOT EXISTS (SELECT 1 FROM {p}n{t} x"
-            f" WHERE x.sub = c.sub AND x.cid = c.cid))"
-        )
+    parts += kmeans_iter_ctes(
+        iters=iters, d=sub_d, q_cte=f"{p}r", cent0_cte=f"{p}cent0", prefix=p,
+        keys=("sub",),
+    )
     return ",\n    ".join(parts)
 
 
@@ -781,12 +771,12 @@ def two_level_cte_sql(
     iteration — ``{p}b{coarse_iters+1}`` is the cell assignment under
     the trained ``{p}cent{coarse_iters}``), then ``{p}qc`` (vid, qv,
     gid), per-cell seeds ``{p}fseed``/``{p}fcent0`` (kf smallest
-    md5(id) WITHIN each cell), the fine grouped-Lloyd's chain
-    ``{p}fa/{p}fb/{p}fn/{p}fcent{t}`` keyed on (gid, cid), and the
-    final fine assignment ``{p}fb{fine_iters+1}`` under
-    ``{p}fcent{fine_iters}``. ``prefix`` namespaces the whole chain
-    (coarse included) so it can coexist with a flat chain in one
-    WITH."""
+    md5(id) WITHIN each cell), and the fine chain — kmeans_iter_ctes
+    keyed on ``gid`` under the prefix ``{p}f`` — again with one extra
+    iteration: ``{p}fb{fine_iters+1}`` is the final fine assignment
+    under ``{p}fcent{fine_iters}``. ``prefix`` namespaces the whole
+    chain (coarse included) so it can coexist with a flat chain in
+    one WITH."""
     px = prefix
     parts = [
         kmeans_cte_sql(
@@ -809,36 +799,10 @@ def two_level_cte_sql(
         f" CAST(1 AS BIGINT) AS n, {px}qc.qv AS s"
         f" FROM {px}qc JOIN {px}fseed ON {px}qc.vid = {px}fseed.vid)",
     ]
-    sums = ", ".join(f"SUM(qv[{j + 1}]) AS s{j}" for j in range(d))
-    slist = "list_value(" + ", ".join(f"s{j}" for j in range(d)) + ")"
-    dist = _sq_dist_sql(f"{px}qc.qv", "c.c", d)
-    for t in range(1, fine_iters + 2):
-        p = t - 1
-        parts.append(
-            f"{px}fa{t} AS MATERIALIZED (SELECT {px}qc.vid, {px}qc.gid, {px}qc.qv, c.cid,"
-            f" {dist} AS dist FROM {px}qc JOIN (SELECT gid, cid,"
-            f" list_transform(s, x -> CAST(x AS DOUBLE) / n) AS c"
-            f" FROM {px}fcent{p}) c ON {px}qc.gid = c.gid)"
-        )
-        parts.append(
-            f"{px}fb{t} AS MATERIALIZED (SELECT vid, gid, qv, cid FROM"
-            f" (SELECT vid, gid, qv, cid, row_number() OVER"
-            f" (PARTITION BY vid ORDER BY dist, cid) AS rn FROM {px}fa{t})"
-            f" WHERE rn = 1)"
-        )
-        if t == fine_iters + 1:
-            break  # last iteration is the assignment pass only
-        parts.append(
-            f"{px}fn{t} AS MATERIALIZED (SELECT gid, cid, n, {slist} AS s FROM"
-            f" (SELECT gid, cid, COUNT(*) AS n, {sums} FROM {px}fb{t}"
-            f" GROUP BY gid, cid))"
-        )
-        parts.append(
-            f"{px}fcent{t} AS MATERIALIZED (SELECT gid, cid, n, s FROM {px}fn{t}"
-            f" UNION ALL SELECT c.gid, c.cid, c.n, c.s FROM {px}fcent{p} c"
-            f" WHERE NOT EXISTS (SELECT 1 FROM {px}fn{t} x"
-            f" WHERE x.gid = c.gid AND x.cid = c.cid))"
-        )
+    parts += kmeans_iter_ctes(
+        iters=fine_iters + 1, d=d, q_cte=f"{px}qc", cent0_cte=f"{px}fcent0",
+        prefix=f"{px}f", keys=("gid",),
+    )
     return ",\n    ".join(parts)
 
 
@@ -884,7 +848,6 @@ def kmeanspp_candidates(
     *,
     rounds: int,
     l: int,
-    d: int,
     qv_col: str = "qv",
     id_col: str = "vec_id",
 ) -> list[tuple[int, int, list[int], int]]:
@@ -908,17 +871,20 @@ def kmeanspp_candidates(
 
     Weights: each corpus point votes for its nearest candidate
     (exact-integer argmin, ties → lowest candidate id); candidates
-    that win no point keep weight 0."""
+    that win no point keep weight 0. An empty frame has no candidates."""
     base = df.select(
         F.col(id_col).alias("vid"),
         F.col(qv_col).alias("qv"),
         u32_expr(id_col).alias("u32"),
     )
-    seed = (
+    seeds = (
         base.orderBy(F.md5(F.col("vid").cast("string").cast("binary")))
         .limit(1)
-        .collect()[0]
+        .collect()
     )
+    if not seeds:
+        return []
+    seed = seeds[0]
     cands: list[tuple[int, int, list[int]]] = [
         (int(seed["vid"]), 0, [int(x) for x in seed["qv"]])
     ]
@@ -946,13 +912,9 @@ def kmeanspp_candidates(
             if int(r["vid"]) not in have:
                 cands.append((int(r["vid"]), t, [int(x) for x in r["qv"]]))
     nearest = F.expr(
-        "array_min(array("
-        + ", ".join(
-            f"struct({int_sq_dist_sql_expr('qv', qv)} AS d,"
-            f" {int(vid)}L AS c)"
-            for vid, _, qv in cands
+        _argmin_sql_expr(
+            [(int_sq_dist_sql_expr("qv", qv), f"{int(vid)}L") for vid, _, qv in cands]
         )
-        + ")).c"
     )
     counts = {
         int(r["cand"]): int(r["n"])
@@ -1015,104 +977,3 @@ def kmeanspp_cte_sql(
         f" AS rn FROM u CROSS JOIN c{rounds} c) WHERE rn = 1 GROUP BY cand)"
     )
     return ",\n    ".join(parts)
-
-
-# --- assignment at production k: the broadcast-join escape hatch ----------------
-
-#: Measured ceiling for literal-inlined argmin (see SCALE.md round-9
-#: "assignment ceiling" table, 64k rows × d=64, local[32]): the two
-#: paths cross at k·d ≈ 8k doubles (10.10 s vs 9.67 s at k=128);
-#: above it the literal plan's codegen cost grows superlinearly
-#: (28.4 s vs 9.4 s at k=256, 108.6 s vs 57.7 s at k=1024). Above
-#: this, assign_cells switches to the broadcast-join formulation
-#: automatically (same auto-switch economics as the tokenizer
-#: INLINE_INVENTORY_MAX).
-INLINE_CENTROID_DOUBLES_MAX = 8_192
-
-
-def _sq_dist_cols(qv_col: Column, c_col: Column) -> Column:
-    """Column-column twin of _sq_dist_sql_expr (the centroid arrives
-    as a JOINED column, not a literal) — identical fold, identical
-    IEEE ops, so join-assignment is bit-equal to literal-assignment."""
-    diffs = F.zip_with(
-        qv_col,
-        c_col,
-        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda a, b: a + b)
-
-
-def assign_via_join(
-    df: DataFrame,
-    centroids: dict[int, tuple[int, list[int]]],
-    *,
-    qv_col: str = "qv",
-    id_col: str = "vec_id",
-    out_col: str = "cid",
-) -> DataFrame:
-    """Nearest-centroid assignment as a BROADCAST JOIN + min(struct)
-    aggregation instead of an inlined-literal expression.
-
-    Why it exists: the literal argmin's plan size grows with k·d
-    (every centroid component is an expression-tree literal), and
-    planning cost with it — the same resource the tree-SQL ceiling
-    measured. The join path keeps the plan CONSTANT-SIZE: centroids
-    ride a broadcast k-row frame, each row meets k candidates, and
-    min(struct(dist, cid)) — lexicographic, ties to lowest cid, the
-    same rule as nearest_expr — reduces them with map-side partial
-    aggregation, so the shuffle carries ONE row per input id. The
-    trade: that per-id reduce IS a shuffle the literal path doesn't
-    have; below the ceiling literals win, above it the join is the
-    only plan that still builds. (At IVF-production k≈√n the real
-    answer is hierarchical — a 256-way coarse level then per-list
-    fine assignment — see two_level_assign, which composes from this
-    same primitive.)
-
-    Keying: the reduce groups on `id_col` ALONE and carries the other
-    columns through first() — every one of an id's k candidate rows
-    shares identical carried values (one input row crossed with k
-    centroids), so first() is deterministic in VALUE regardless of
-    which candidate row wins, the shuffle key is one long instead of
-    the full row, and non-groupable column types (MapType) ride
-    through fine (round-9 judge nit). PRECONDITION: `id_col` uniquely
-    identifies df's rows — the contract every caller (vec_id) already
-    satisfies.
-
-    Returns df's columns plus `out_col`."""
-    spark = df.sparkSession
-    rows = [
-        (cid, centroid_components(n, s))
-        for cid, (n, s) in sorted(centroids.items())
-    ]
-    cdf = spark.createDataFrame(rows, "__cid int, __c array<double>")
-    dist = _sq_dist_cols(F.col(qv_col), F.col("__c"))
-    best = F.min(F.struct(dist.alias("d"), F.col("__cid").alias("c")))
-    carried = [F.first(c).alias(c) for c in df.columns if c != id_col]
-    assigned = (
-        df.crossJoin(F.broadcast(cdf))
-        .groupBy(id_col)
-        .agg(*carried, best["c"].alias(out_col))
-        .select(*df.columns, out_col)
-    )
-    return assigned
-
-
-def assign_cells(
-    df: DataFrame,
-    centroids: dict[int, tuple[int, list[int]]],
-    *,
-    qv_col: str = "qv",
-    id_col: str = "vec_id",
-    out_col: str = "cid",
-) -> DataFrame:
-    """Size-gated assignment: inline literals below
-    INLINE_CENTROID_DOUBLES_MAX centroid doubles (zero-shuffle, the
-    oracle-scale shape), broadcast-join above it (constant plan size,
-    one per-id reduce). Both paths are bit-identical — crossover-
-    tested in tests/test_similarity.py."""
-    n_doubles = sum(len(s) for _n, s in centroids.values())
-    if n_doubles <= INLINE_CENTROID_DOUBLES_MAX:
-        return df.withColumn(out_col, nearest_expr(qv_col, centroids))
-    return assign_via_join(
-        df, centroids, qv_col=qv_col, id_col=id_col, out_col=out_col
-    )

@@ -192,6 +192,23 @@ def test_run_concurrently_raises_earliest_argument_failure_with_notes():
     assert "thunk #3 also failed: RuntimeError: fourth" in notes[1]
 
 
+def test_run_concurrently_bounds_workers():
+    """max_workers=2: six thunks never run more than two at once."""
+    lock = threading.Lock()
+    running, peak = [0], [0]
+
+    def thunk():
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+        time.sleep(0.1)
+        with lock:
+            running[0] -= 1
+
+    Q.run_concurrently(*[thunk] * 6, max_workers=2)
+    assert peak[0] == 2
+
+
 def test_run_concurrently_rehomes_worker_scratch_to_caller(spark):
     """A scratch_persist made on a worker thread moves to the CALLING
     thread's registry, so the caller's next release frees it."""

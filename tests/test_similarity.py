@@ -178,7 +178,7 @@ def km_rows(spark):
 
     qdf = (
         spark.read.parquet(f"{SF_CORRECTNESS_DIR}/embeddings.parquet")
-        .select("vec_id", km.quantize_expr("embedding").alias("qv"))
+        .select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
         .limit(120)
     )
     return [(int(r.vec_id), [int(x) for x in r.qv]) for r in qdf.collect()]
@@ -226,9 +226,45 @@ def test_grouped_kmeans_single_group_equals_flat(spark, km_rows):
         iters=2,
         d=64,
         group_col="sub",
-        n_groups=1,
     )
     assert grouped == {0: flat}
+
+
+def test_duckdb_chain_single_key_equals_flat():
+    """DuckDB twin of test_grouped_kmeans_single_group_equals_flat:
+    the one Lloyd's chain keyed on a constant ``sub`` trains the same
+    centroids as the unkeyed chain — the keys only add columns to the
+    join, tie-break, recompute and carry-forward."""
+    import duckdb
+
+    from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
+
+    # 9 points on 3 spots with k=4: two seeds share a spot, the higher
+    # cid loses every tie and carries forward (the NOT EXISTS path)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE q AS SELECT i AS vid, 0 AS sub,"
+        " [CAST(1000 * (i % 3) AS BIGINT), CAST(0 AS BIGINT)] AS qv"
+        " FROM range(9) t(i)"
+    )
+    seeds = (
+        "SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vid AS VARCHAR)))"
+        " AS INT) - 1 AS cid, sub, CAST(1 AS BIGINT) AS n, qv AS s FROM q"
+        " ORDER BY md5(CAST(vid AS VARCHAR)) LIMIT 4"
+    )
+
+    def final(keys):
+        ctes = km.kmeans_iter_ctes(
+            iters=3, d=2, q_cte="q", cent0_cte="cent0", keys=keys
+        )
+        return con.execute(
+            f"WITH cent0 AS ({seeds}), {', '.join(ctes)}"
+            " SELECT cid, n, s FROM cent3 ORDER BY cid"
+        ).fetchall()
+
+    flat = final(())
+    assert len(flat) == 4 and any(n == 1 for _, n, _ in flat)
+    assert final(("sub",)) == flat
 
 
 def test_pq_adc_scoring_plan_is_shuffle_free(spark):
@@ -251,7 +287,7 @@ def test_kmeanspp_candidates_contract(spark, km_rows):
     from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
 
     df = spark.createDataFrame(km_rows, "vec_id long, qv array<long>")
-    cands = km.kmeanspp_candidates(df, rounds=2, l=4, d=64)
+    cands = km.kmeanspp_candidates(df, rounds=2, l=4)
     seed = min(
         (vid for vid, _ in km_rows),
         key=lambda v: hashlib.md5(str(v).encode()).hexdigest(),
@@ -263,40 +299,6 @@ def test_kmeanspp_candidates_contract(spark, km_rows):
     ids = [vid for vid, *_ in cands]
     assert len(ids) == len(set(ids))
     assert sum(w for *_, w in cands) == len(km_rows)
-
-
-def test_assignment_join_path_matches_literal_path(spark, km_rows):
-    """The broadcast-join assignment (production-k escape hatch) is
-    row-identical to the inlined-literal argmin on the same
-    centroids, including ties (min(struct) ≡ array_min(struct))."""
-    from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
-
-    df = spark.createDataFrame(km_rows, "vec_id long, qv array<long>")
-    cent = km.kmeans_fit(df, k=6, iters=2, d=64)
-    lit_path = {
-        r["vec_id"]: r["cid"]
-        for r in df.withColumn(
-            "cid", km.nearest_expr("qv", cent)
-        ).collect()
-    }
-    join_path = {
-        r["vec_id"]: r["cid"]
-        for r in km.assign_via_join(df, cent).collect()
-    }
-    assert lit_path == join_path
-    # the auto-switch picks the literal path at this k and the join
-    # path above the ceiling
-    assert km.assign_cells(df, cent).columns == ["vec_id", "qv", "cid"]
-    old = km.INLINE_CENTROID_DOUBLES_MAX
-    try:
-        km.INLINE_CENTROID_DOUBLES_MAX = 1
-        switched = {
-            r["vec_id"]: r["cid"]
-            for r in km.assign_cells(df, cent).collect()
-        }
-    finally:
-        km.INLINE_CENTROID_DOUBLES_MAX = old
-    assert switched == lit_path
 
 
 def test_ivf_drift_refit_planted_fixture(spark):
@@ -483,3 +485,51 @@ def test_sql_text_exprs_match_driver_twins(spark, km_rows):
     assert z_sql == {
         v: sum((x - c) * (x - c) for x, c in zip(qv, cand)) for v, qv in qvs.items()
     }
+
+
+@pytest.fixture(scope="module")
+def empty_embeddings_dir(tmp_path_factory):
+    """The smoke fixture with an all-empty ``embeddings`` table (schema
+    kept, zero rows); every other table links to the smoke files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flight_delay_prediction_using_pyspark_spark.sources.readers import (
+        TESTDATA_TABLES,
+    )
+    from tests.conftest import SF_SMOKE_DIR
+
+    out = tmp_path_factory.mktemp("empty_embeddings")
+    for t in TESTDATA_TABLES:
+        src = f"{SF_SMOKE_DIR}/{t}.parquet"
+        if t == "embeddings":
+            pq.write_table(pq.read_table(src).slice(0, 0), out / f"{t}.parquet")
+        else:
+            os.symlink(src, out / f"{t}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "embedding_kmeans_clusters",
+        "semdedup_kmeans_cells",
+        "embedding_kmeans_pp_candidates",
+    ],
+)
+def test_kmeans_queries_on_empty_embeddings_match_oracle(
+    spark, empty_embeddings_dir, name
+):
+    """Zero points: no seeds, so the argmin emitter gets an empty
+    centroid set and k-means|| an empty frame. Each must yield the
+    oracle's (empty) answer instead of raising."""
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        ORACLES,
+        QUERIES,
+    )
+    from tests.oracle_util import compare_frames, duckdb_connection
+
+    got = QUERIES[name](spark, empty_embeddings_dir).toPandas()
+    want = duckdb_connection(empty_embeddings_dir).execute(ORACLES[name]).fetchdf()
+    assert compare_frames(got, want) == []
