@@ -1055,9 +1055,7 @@ def phash_chunks_codec(df: DataFrame, target: int = 8, chunk_bits: int = 16) -> 
     return _phash_map(src, sample, target, chunk_bits)
 
 
-def phash_near_dup(
-    chunks: DataFrame, max_hamming: int = 3, persist_fn=None
-) -> DataFrame:
+def phash_near_dup(chunks: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Perceptual near-dup pairs from phash chunks: candidates via the
     pigeonhole equi-join (any pair within Hamming k agrees on ≥1 of
     k+1 chunks — recall 1.0 for k ≤ n_chunks−1), verified by exact
@@ -1079,11 +1077,15 @@ def phash_near_dup(
     (pairs sharing ≥1 (ci, val)) is unchanged. 8.4 s → 2.5 s warm at
     sf0.1 on the clone corpus.
 
-    `persist_fn` persists the chunk frame (its Python decode/hash
-    lineage feeds both join sides; exchange reuse does not fire across
-    the MapInPandas stages) — catalog callers pass scratch_persist so
-    the cache is released at next-query entry instead of leaking."""
-    ch = (persist_fn or (lambda df: df.persist()))(chunks)
+    The chunk frame goes through scratch_persist (its Python
+    decode/hash lineage feeds both join sides; exchange reuse does not
+    fire across the MapInPandas stages), so the cache is released when
+    the next catalog query starts instead of leaking."""
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        scratch_persist,
+    )
+
+    ch = scratch_persist(chunks)
     per_doc = ch.groupBy("doc_id").agg(
         F.collect_list(F.struct("ci", "val")).alias("cvs"),
         F.sum(F.expr("shiftleft(val, 16 * ci)")).alias("h"),

@@ -13,10 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flight_delay_prediction_using_pyspark_spark.multimodal import media as M
-from flight_delay_prediction_using_pyspark_spark.plans.queries import (
-    query,
-    scratch_persist,
-)
+from flight_delay_prediction_using_pyspark_spark.plans.queries import query
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
 
 _ASCII_SUM = (
@@ -231,7 +228,7 @@ def q_media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics; the oracle would need a byte-indexed rewrite."""
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     chunks = M.phash_chunks(M.attach_media(docs))
-    return M.phash_near_dup(chunks, max_hamming=3, persist_fn=scratch_persist)
+    return M.phash_near_dup(chunks, max_hamming=3)
 
 
 @query(
@@ -570,9 +567,7 @@ def q_media_phash_mixed_codec_near_dup(
     codec work, keeps it.)"""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     media = _mixed_codec_media(docs)
-    return M.phash_near_dup(
-        M.phash_chunks_codec(media), max_hamming=3, persist_fn=scratch_persist
-    )
+    return M.phash_near_dup(M.phash_chunks_codec(media), max_hamming=3)
 
 
 @query(
@@ -660,9 +655,7 @@ def q_media_phash_container_invariant_near_dup(
         load_table(spark, sf_dir, "documents").filter(F.length("text") > 0),
     )
     chunks = M.phash_chunks_normalized(M.attach_media_clones(docs))
-    return M.phash_near_dup(
-        chunks, max_hamming=3, persist_fn=scratch_persist
-    ).select(
+    return M.phash_near_dup(chunks, max_hamming=3).select(
         "id_a",
         "id_b",
         "hamming",

@@ -286,7 +286,7 @@ def q_dedup_exact_hash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_ctes(threshold: float, source: str = "documents") -> str:
     k, bands, rows = TD.MINHASH_K, TD.LSH_BANDS, TD.LSH_ROWS
-    # Mirrors dedup.minhash_signature: one md5 per shingle (the hs
+    # Mirrors dedup.minhash_sig_from_hashes: one md5 per shingle (the hs
     # column), k Carter-Wegman variants (A[i]*(h mod P) + B[i]) % P
     # over it (round-7 family fix — see dedup.py MINHASH_P notes).
     sig_exprs = ", ".join(
@@ -376,8 +376,7 @@ def _sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("sigs", sf_dir),
         lambda: TD.minhash_signatures(
-            load_table(spark, sf_dir, "documents"),
-            parallelism=spark.sparkContext.defaultParallelism,
+            load_table(spark, sf_dir, "documents")
         ).persist(),
     )
 
@@ -447,7 +446,6 @@ def _simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents"),
             max_hamming=3,
             chunks=4,
-            parallelism=spark.sparkContext.defaultParallelism,
         ).persist(),
     )
 
@@ -537,7 +535,6 @@ def q_dedup_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TD.embedding_near_dup_pairs(
         load_table(spark, sf_dir, "embeddings"),
         threshold=0.35,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -616,7 +613,6 @@ def q_training_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_quality=0.4,
         lang="en",
         jaccard_threshold=0.5,
-        parallelism=spark.sparkContext.defaultParallelism,
         sigs=_sigs_cached(spark, sf_dir),
     )
     return kept.select(
@@ -1044,7 +1040,6 @@ def q_corpus_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_quality=0.4,
         lang="en",
         jaccard_threshold=0.5,
-        parallelism=spark.sparkContext.defaultParallelism,
         # whole-corpus signature cache: corpus0 ⊂ documents, so the
         # survivors' signatures are a semi-join away (pure per-doc fn)
         sigs=_sigs_cached(spark, sf_dir),
@@ -2148,9 +2143,7 @@ def q_doc_lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_if_narrow(
         load_table(spark, sf_dir, "documents"), "doc_id"
     )
-    scores = TA.bigram_lm_doc_scores(
-        docs, docs.filter(F.col("lang") == "en"), persist_fn=scratch_persist
-    )
+    scores = TA.bigram_lm_doc_scores(docs, docs.filter(F.col("lang") == "en"))
     j = docs.select("doc_id", "lang").join(scores, "doc_id", "left")
     bucket = (
         F.when(F.col("avg_logp_q").isNull(), "short")
@@ -2621,9 +2614,7 @@ def q_corpus_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataF
         .select("doc_id")
         .withColumn("is_exact", F.lit(True))
     )
-    sigs = TD.minhash_signatures(
-        docs, parallelism=spark.sparkContext.defaultParallelism
-    )
+    sigs = TD.minhash_signatures(docs)
     buckets = TD.lsh_band_buckets(sigs)
     cand = (
         buckets.filter(F.col("doc_id") < _INGEST_SPLIT)
@@ -2748,7 +2739,6 @@ def q_corpus_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         .option("basePath", stage)
         .parquet(f"{stage}/phase=*")
     )
-    parallelism = spark.sparkContext.defaultParallelism
     # loop-invariant expression bundles, built ONCE outside the
     # micro-batch body (round-14, guide §4 driver boundary): the
     # shingle/digest/signature and band-struct trees cost ~0.5 s of
@@ -2765,9 +2755,7 @@ def q_corpus_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         # persist the batch signatures: the shingle store and the
         # band-bucket store both consume them, and without the persist
         # the shingle+minhash pass runs twice per micro-batch
-        sigs_b = TD.minhash_signatures(
-            batch_df, parallelism=parallelism, exprs=sig_exprs
-        ).persist()
+        sigs_b = TD.minhash_signatures(batch_df, exprs=sig_exprs).persist()
         try:
             # the three sinks are independent appends to three stores
             # (different directories — no commit-protocol interaction);
@@ -2944,11 +2932,7 @@ def q_corpus_dedup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFra
     # batch-side buckets, and both shingle sides of the screen's
     # verify join otherwise re-run the whole shingle+minhash lineage
     # per consumer (guide §5 caching: ~6 rescans measured before)
-    sigs = scratch_persist(
-        TD.minhash_signatures(
-            docs, parallelism=spark.sparkContext.defaultParallelism
-        )
-    )
+    sigs = scratch_persist(TD.minhash_signatures(docs))
     buckets = TD.lsh_band_buckets(sigs)
     corpus_buckets = buckets.filter(F.col("doc_id") < _INGEST_SPLIT)
     store = tempfile.mkdtemp(prefix="dedup_store_")
@@ -3424,7 +3408,6 @@ def q_embedding_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataF
     pairs = TD.embedding_near_dup_pairs(
         load_table(spark, sf_dir, "embeddings"),
         threshold=_SWEEP_BP[0] / 10000.0,
-        parallelism=spark.sparkContext.defaultParallelism,
     ).select("cosine")
     return (
         pairs.crossJoin(F.broadcast(thresholds))

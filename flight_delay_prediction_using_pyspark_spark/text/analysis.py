@@ -57,6 +57,18 @@ NGRAM_PROFILES: dict[str, tuple[str, ...]] = {
 BPE_ISH_PATTERN = r"\w+|[^\w\s]"
 
 
+def let(value: Column, body) -> Column:
+    """`body(value)` with `value` evaluated ONCE per row, bound to the
+    lambda variable of a transform over a 1-element wrapper array.
+    Higher-order functions are interpreted (CodegenFallback) with no
+    common-subexpression elimination, so a Column that a HOF-bearing
+    expression references k times is computed k times (round-12 plan
+    audit). Only for HOF-bearing bodies: in a codegen'd scalar
+    projection CSE already shares the subtree, and the wrapper would
+    demote it out of codegen."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization → array<string>."""
     c = F.col(col) if isinstance(col, str) else col
@@ -99,16 +111,19 @@ def md5_hash60(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def _fingerprint(t: Column, mod: int = HASH_MOD) -> Column:
+    """rolling_fingerprint over a bound token array."""
+    return F.aggregate(
+        t, F.lit(0).cast("long"), lambda acc, x: (acc * 31 + md5_hash32(x)) % F.lit(mod)
+    )
+
+
 def rolling_fingerprint(col: Column | str, mod: int = HASH_MOD) -> Column:
     """Order-sensitive document fingerprint: polynomial rolling hash
     over token hashes, `acc = (acc*31 + h(tok)) % mod`. Two documents
     get equal fingerprints iff their token sequences match — the
     content-defined identity used for exact dedup at scale."""
-    return F.aggregate(
-        tokens(col),
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * 31 + md5_hash32(t)) % F.lit(mod),
-    )
+    return _fingerprint(tokens(col), mod)
 
 
 def winnowing_fingerprints(col: Column | str, k: int = 4, w: int = 5) -> Column:
@@ -124,17 +139,14 @@ def winnowing_fingerprints(col: Column | str, k: int = 4, w: int = 5) -> Column:
     (minhash: fixed-size but position-blind).
 
     Shape notes: BOTH the token array and the k-gram hash array are
-    let-bound via the single-element-array + transform trick (same as
-    minhash_signature) so Catalyst evaluates the regex tokenizer and
+    bound with `let`, so Catalyst evaluates the regex tokenizer and
     the O(n) md5 pass ONCE each — the gram builder references tokens
     three times (guard size, sequence bound, slice source) and the
-    window picker references the hash array three ways, and
-    HOF-bearing projections get no codegen subexpression elimination
-    (round-12 plan audit). Documents with fewer than k tokens yield
-    an empty array; documents with 1..w−1 grams yield the single
-    minimum (one degenerate window), matching the reference
-    algorithm. Pure JVM Column expression — no Python UDF, map-only
-    at any scale."""
+    window picker references the hash array three ways. Documents
+    with fewer than k tokens yield an empty array; documents with
+    1..w−1 grams yield the single minimum (one degenerate window),
+    matching the reference algorithm. Pure JVM Column expression — no
+    Python UDF, map-only at any scale."""
 
     def grams(t: Column) -> Column:
         return F.when(
@@ -159,8 +171,7 @@ def winnowing_fingerprints(col: Column | str, k: int = 4, w: int = 5) -> Column:
             ),
         ).otherwise(F.array().cast("array<long>"))
 
-    gram_hashes = F.element_at(F.transform(F.array(tokens(col)), grams), 1)
-    return F.element_at(F.transform(F.array(gram_hashes), pick), 1)
+    return let(let(tokens(col), grams), pick)
 
 
 #: PII-ish patterns a corpus-prep pipeline scrubs before training.
@@ -205,19 +216,48 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str, stopwords: Sequence[str] = STOPWORDS) -> Column:
-    """Stopword tokens / total tokens — the classic fluency signal
-    (gibberish and boilerplate both score near 0)."""
-    toks = tokens(col)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
+def _hits(t: Column, words: Sequence[str]) -> Column:
+    """How many elements of the bound token array `t` are in `words`."""
+    return F.size(F.filter(t, lambda x: x.isin(*words)))
 
 
-def mean_token_length(col: Column | str) -> Column:
-    """Average token length in characters."""
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
+def _total_len(t: Column) -> Column:
+    """Summed character length of the bound token array `t`."""
+    return F.aggregate(t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
+
+
+def _ratio(num: Column, n: Column) -> Column:
+    """num / n per token, 0.0 for a document with no tokens."""
+    return F.when(n > 0, num / n).otherwise(F.lit(0.0))
+
+
+def _quality(
+    c: Column, n: Column, n_stop: Column, total_len: Column, min_tokens: int, max_tokens: int
+) -> Column:
+    """The quality arithmetic over the integer evidence of text `c`:
+    length gate × (stopword fluency + clean-punctuation +
+    sane-word-length) / 3."""
+    sw = _ratio(n_stop, n)
+    fluency = F.least(sw * 4, F.lit(1.0))  # ≥25% stopwords ⇒ full marks
+    clean = F.lit(1.0) - F.least(punct_ratio(c) * 5, F.lit(1.0))
+    mtl = _ratio(total_len, n)
+    sane_len = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
+    raw = (fluency + clean + sane_len) / 3
+    return F.when((n >= min_tokens) & (n <= max_tokens), raw).otherwise(F.lit(0.0))
+
+
+def _evidence(
+    t: Column, stopwords: Sequence[str], profiles: dict[str, Sequence[str]]
+) -> list[Column]:
+    """The integer evidence fields of the bound token array `t` that
+    quality and language ID read: n, n_stop, total_len and one
+    s_<lang> stopword-hit count per profile."""
+    return [
+        F.size(t).alias("n"),
+        _hits(t, stopwords).alias("n_stop"),
+        _total_len(t).alias("total_len"),
+        *[_hits(t, words).alias(f"s_{lang}") for lang, words in profiles.items()],
+    ]
 
 
 def quality_score(
@@ -230,53 +270,25 @@ def quality_score(
     (stopword fluency + clean-punctuation + sane-word-length) / 3.
     The C4/Gopher-style heuristic stack as one vectorized expression.
 
-    The token array is LET-BOUND (transform over a 1-element wrapper
-    array): the score references it eight times (count gate ×2,
-    stopword filter + two sizes, length fold + two sizes), and
-    HOF-bearing projections get no codegen subexpression elimination,
-    so the previous inline form re-ran the regex tokenizer 8x per
-    document (round-12 plan audit). Identical arithmetic — every
-    ratio divides the same operands in the same order."""
+    The token array is bound with `let`: the score references it eight
+    times (count gate ×2, stopword filter + two sizes, length fold +
+    two sizes), so the inline form re-ran the regex tokenizer 8x per
+    document."""
     c = F.col(col) if isinstance(col, str) else col
-
-    def build(t: Column) -> Column:
-        n = F.size(t)
-        length_ok = (n >= min_tokens) & (n <= max_tokens)
-        sw = F.when(
-            n > 0,
-            F.size(F.filter(t, lambda x: x.isin(*stopwords))) / n,
-        ).otherwise(F.lit(0.0))
-        fluency = F.least(sw * 4, F.lit(1.0))  # ≥25% stopwords ⇒ full marks
-        clean = F.lit(1.0) - F.least(punct_ratio(c) * 5, F.lit(1.0))
-        total = F.aggregate(
-            t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-        )
-        mtl = F.when(n > 0, total / n).otherwise(F.lit(0.0))
-        sane_len = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
-        raw = (fluency + clean + sane_len) / 3
-        return F.when(length_ok, raw).otherwise(F.lit(0.0))
-
-    return F.element_at(F.transform(F.array(tokens(c)), build), 1)
-
-
-def token_2grams(col: Column | str) -> Column:
-    """Adjacent token 2-grams as `array<string>` ("a b", "b c", ...).
-    Built with an index-aware transform over a slice, so a document
-    with fewer than 2 tokens yields an empty array (never a
-    descending-`sequence` surprise). Map-only JVM expression. The
-    token array is LET-BOUND — the expression references it three
-    times (slice source, size bound, element_at lookup) and HOF
-    projections get no codegen subexpression elimination, so the
-    inline form re-ran the tokenizer 3x per document (round-12 plan
-    audit)."""
-
-    return F.element_at(F.transform(F.array(tokens(col)), token_2grams_from), 1)
+    return let(
+        tokens(c),
+        lambda t: _quality(
+            c, F.size(t), _hits(t, stopwords), _total_len(t), min_tokens, max_tokens
+        ),
+    )
 
 
 def token_2grams_from(t: Column) -> Column:
-    """token_2grams over an ALREADY-BOUND token array (a lambda
-    variable or materialized column) — the form composite expressions
-    use to share one tokenization across signals."""
+    """Adjacent token 2-grams ("a b", "b c", ...) of an ALREADY-BOUND
+    token array (a lambda variable or materialized column). Built with
+    an index-aware transform over a slice, so a document with fewer
+    than 2 tokens yields an empty array (never a descending-`sequence`
+    surprise). Map-only JVM expression."""
     head = F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0)))
     return F.transform(
         head,
@@ -365,20 +377,6 @@ def repetition_stats(col: Column | str) -> Column:
     return F.element_at(F.transform(F.transform(bound, stats), with_flag), 1)
 
 
-def language_scores(col: Column | str, profiles: dict[str, Sequence[str]] | None = None) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the language-ID evidence)."""
-    profiles = profiles or LANG_PROFILES
-    toks = tokens(col)
-
-    def member_of(ws):  # closure factory: PySpark lambdas must be unary
-        return lambda t: t.isin(*ws)
-
-    return {
-        lang: F.size(F.filter(toks, member_of(words)))
-        for lang, words in profiles.items()
-    }
-
-
 def argmax_label(scores: dict[str, Column], default: str = "und") -> Column:
     """Deterministic argmax over a labeled score dict: first-wins
     tie-break in dict order; `default` when no score is positive.
@@ -418,25 +416,15 @@ def predict_language(col: Column | str, profiles: dict[str, Sequence[str]] | Non
     """Argmax language with deterministic first-wins tie-break (profile
     order). Emits 'und' when no profile scores a single hit.
 
-    The token array is LET-BOUND so the regex tokenizer runs once per
-    document instead of once per language profile (language_scores'
-    dict form builds an independent tokens() copy per language, and
-    HOF projections get no codegen subexpression elimination —
-    round-12 plan audit)."""
+    The token array is bound with `let`, so the regex tokenizer runs
+    once per document instead of once per language profile."""
     profiles = profiles or LANG_PROFILES
-
-    def member_of(ws):  # closure factory: PySpark lambdas must be unary
-        return lambda t: t.isin(*ws)
-
-    def build(t: Column) -> Column:
-        return argmax_label(
-            {
-                lang: F.size(F.filter(t, member_of(words)))
-                for lang, words in profiles.items()
-            }
-        )
-
-    return F.element_at(F.transform(F.array(tokens(col)), build), 1)
+    return let(
+        tokens(col),
+        lambda t: argmax_label(
+            {lang: _hits(t, words) for lang, words in profiles.items()}
+        ),
+    )
 
 
 def quality_language_struct(
@@ -448,54 +436,27 @@ def quality_language_struct(
 ) -> Column:
     """struct(quality, pred_lang) — value-identical to
     (round(quality_score(col), 6), predict_language(col)) with the
-    token array let-bound ONCE. The separate gate columns each build
-    their own token array, and since higher-order functions are
-    interpreted (CodegenFallback, no subexpression elimination) the
-    combined gate tokenized every document ~8× (length + stopword +
-    mean-length + 5 language filters). Here a nested transform over a
-    single-element array binds the array once, level 1 folds it into
-    the integer evidence (counts, total length, per-language hits),
-    and level 2 is plain scalar math over those fields. Callers expand
-    the struct behind an explode(array(...)) Generate barrier so the
-    pipeline also evaluates once per ROW, not once per output column
-    (same discipline as repetition_stats)."""
+    token array bound ONCE, where the two separate gate columns
+    tokenized every document ~8× (length + stopword + mean-length + 5
+    language filters). A nested transform over a single-element array
+    binds the array once, level 1 folds it into the integer
+    `_evidence`, and level 2 is scalar math over those fields. Callers
+    expand the struct behind an explode(array(...)) Generate barrier so
+    it is also evaluated once per ROW, not once per output column."""
     profiles = profiles or LANG_PROFILES
     c = F.col(col) if isinstance(col, str) else col
-
-    def member_of(ws):  # closure factory: PySpark lambdas must be unary
-        return lambda t: t.isin(*ws)
-
     bound = F.array(F.struct(tokens(c).alias("t")))
 
     def evidence(s: Column) -> Column:
-        t = s["t"]
-        total_len = F.aggregate(
-            t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-        )
-        return F.struct(
-            F.size(t).alias("n"),
-            F.size(F.filter(t, member_of(stopwords))).alias("n_stop"),
-            total_len.alias("total_len"),
-            *[
-                F.size(F.filter(t, member_of(words))).alias(f"s_{lang}")
-                for lang, words in profiles.items()
-            ],
-        )
+        return F.struct(*_evidence(s["t"], stopwords, profiles))
 
     def verdict(r: Column) -> Column:
-        n = r["n"]
-        sw = F.when(n > 0, r["n_stop"] / n).otherwise(F.lit(0.0))
-        fluency = F.least(sw * 4, F.lit(1.0))
-        clean = F.lit(1.0) - F.least(punct_ratio(c) * 5, F.lit(1.0))
-        mtl = F.when(n > 0, r["total_len"] / n).otherwise(F.lit(0.0))
-        sane_len = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
-        raw = (fluency + clean + sane_len) / 3
-        quality = F.when((n >= min_tokens) & (n <= max_tokens), raw).otherwise(
-            F.lit(0.0)
+        quality = _quality(
+            c, r["n"], r["n_stop"], r["total_len"], min_tokens, max_tokens
         )
-        lang = argmax_label({lang: r[f"s_{lang}"] for lang in profiles})
         return F.struct(
-            F.round(quality, 6).alias("quality"), lang.alias("pred_lang")
+            F.round(quality, 6).alias("quality"),
+            argmax_label({lang: r[f"s_{lang}"] for lang in profiles}).alias("pred_lang"),
         )
 
     return F.element_at(F.transform(F.transform(bound, evidence), verdict), 1)
@@ -535,59 +496,34 @@ def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     signal (token counts, quality, language, fingerprint). At 100 TB
     this is a single map stage — no shuffle, no state.
 
-    Values are identical to composing the standalone helpers
-    (token_count, stopword_ratio, quality_score, predict_language,
-    rolling_fingerprint — the oracles encode their exact arithmetic),
-    but the token array is let-bound ONCE and folded into integer
-    evidence, instead of each output column rebuilding it (~12
-    tokenize passes per doc under interpreted HOF evaluation); the
-    struct expands behind a Generate barrier so the pipeline also
-    runs once per row, not once per column."""
+    Values are identical to composing token_count, quality_score,
+    predict_language and rolling_fingerprint, but the token array is
+    bound ONCE and folded into the integer `_evidence` plus the
+    fingerprint (instead of ~12 tokenize passes per doc), and the
+    struct expands behind a Generate barrier, as in
+    quality_language_struct."""
     c = F.col(text_col)
-
-    def member_of(ws):  # closure factory: PySpark lambdas must be unary
-        return lambda t: t.isin(*ws)
-
     bound = F.array(F.struct(tokens(c).alias("t")))
 
     def evidence(s: Column) -> Column:
         t = s["t"]
         return F.struct(
-            F.size(t).alias("n"),
-            F.size(F.filter(t, member_of(STOPWORDS))).alias("n_stop"),
-            F.aggregate(
-                t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-            ).alias("total_len"),
-            F.aggregate(
-                t,
-                F.lit(0).cast("long"),
-                lambda acc, x: (acc * 31 + md5_hash32(x)) % F.lit(HASH_MOD),
-            ).alias("fingerprint"),
-            *[
-                F.size(F.filter(t, member_of(words))).alias(f"s_{lang}")
-                for lang, words in LANG_PROFILES.items()
-            ],
+            *_evidence(t, STOPWORDS, LANG_PROFILES),
+            _fingerprint(t).alias("fingerprint"),
         )
 
     def emit(r: Column) -> Column:
         n = r["n"]
-        sw = F.when(n > 0, r["n_stop"] / n).otherwise(F.lit(0.0))
-        mtl = F.when(n > 0, r["total_len"] / n).otherwise(F.lit(0.0))
-        fluency = F.least(sw * 4, F.lit(1.0))
-        clean = F.lit(1.0) - F.least(punct_ratio(c) * 5, F.lit(1.0))
-        sane_len = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
-        raw = (fluency + clean + sane_len) / 3
-        quality = F.when((n >= 10) & (n <= 10_000), raw).otherwise(F.lit(0.0))
-        lang = argmax_label({lang: r[f"s_{lang}"] for lang in LANG_PROFILES})
+        quality = _quality(c, n, r["n_stop"], r["total_len"], 10, 10_000)
         return F.struct(
             n.cast("long").alias("n_tokens"),
             bpe_ish_token_count(c).cast("long").alias("n_bpe_tokens"),
             F.length(c).cast("long").alias("n_chars"),
-            F.round(mtl, 6).alias("mean_token_len"),
+            F.round(_ratio(r["total_len"], n), 6).alias("mean_token_len"),
             F.round(punct_ratio(c), 6).alias("punct_ratio"),
-            F.round(sw, 6).alias("stopword_ratio"),
+            F.round(_ratio(r["n_stop"], n), 6).alias("stopword_ratio"),
             F.round(quality, 6).alias("quality"),
-            lang.alias("pred_lang"),
+            argmax_label({lang: r[f"s_{lang}"] for lang in LANG_PROFILES}).alias("pred_lang"),
             r["fingerprint"].alias("fingerprint"),
         )
 
@@ -612,7 +548,7 @@ def bigram_pairs_from_tokens(toks: Column) -> Column:
 
 def token_bigram_pairs(col: Column | str) -> Column:
     """Adjacent token pairs as `array<struct<w1,w2>>` — the join-ready
-    form of token_2grams (w1 is needed alone for the context-count
+    form of token_2grams_from (w1 is needed alone for the context-count
     join in the bigram LM). Slice-based, so <2-token docs yield an
     empty array without the descending-`sequence` trap. Map-only."""
     return bigram_pairs_from_tokens(tokens(col))
@@ -624,7 +560,6 @@ def bigram_lm_doc_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     quant: int = 100_000,
-    persist_fn=None,
 ) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al., LREC'20), the
     Spark-expressible core: fit an add-one-smoothed token-bigram LM on
@@ -646,22 +581,25 @@ def bigram_lm_doc_scores(
     V rides a broadcast single-row cross join. The per-doc agg is the
     only other shuffle.
 
-    `persist_fn`: optional cache hook (e.g. the catalog's
-    scratch_persist) applied to the SHARED intermediates — the train
+    The SHARED intermediates go through the catalog's scratch_persist
+    (released when the next catalog query starts) — the train
     token-array frame (feeds both unigram and bigram counts: without
     the cache the train text is scanned+tokenized twice) and the
     unigram-count frame (feeds both the vocab scalar and the probe's
     context join). Measured at sf0.1 this collapses the query from 5
     parquet scans to 3 and ~6.3 s to ~4 s.
     """
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        scratch_persist,
+    )
+
     lowered = F.lower(F.col(text_col))
-    keep = persist_fn if persist_fn is not None else (lambda df: df)
     probe = docs.select(
         F.col(id_col), F.explode(token_bigram_pairs(lowered)).alias("bg")
     ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    tr_arr = keep(train.select(tokens(lowered).alias("ta")))
+    tr_arr = scratch_persist(train.select(tokens(lowered).alias("ta")))
     tr_toks = tr_arr.select(F.explode("ta").alias("w"))
-    uni = keep(tr_toks.groupBy("w").agg(F.count(F.lit(1)).alias("cu")))
+    uni = scratch_persist(tr_toks.groupBy("w").agg(F.count(F.lit(1)).alias("cu")))
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     big = (
         tr_arr.select(F.explode(bigram_pairs_from_tokens(F.col("ta"))).alias("bg"))

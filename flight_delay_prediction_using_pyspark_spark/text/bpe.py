@@ -344,7 +344,6 @@ def wordpiece_segment(
     merges: list[tuple[str, str]],
     max_pieces: int = 8,
     inventory: list[str] | None = None,
-    inline_threshold: int = INLINE_INVENTORY_MAX,
 ) -> DataFrame:
     """Greedy longest-match-first segmentation (the WordPiece
     INFERENCE algorithm, Wu et al. 2016 — what BERT-family tokenizers
@@ -385,8 +384,8 @@ def wordpiece_segment(
     char-fallback analogue of byte-fallback in production tokenizers),
     so segmentation is total and never folds to a NULL state.
 
-    Inventories LARGER than `inline_threshold` entries (default
-    INLINE_INVENTORY_MAX) are routed to `wordpiece_segment_trie`
+    Inventories LARGER than INLINE_INVENTORY_MAX entries (read at call
+    time) are routed to `wordpiece_segment_trie`
     automatically — the mapInPandas escape hatch (round-9 mandate; it
     was a docstring promise through round 8): a 100k-entry array
     literal would bloat every task's serialized plan and the codegen
@@ -407,7 +406,7 @@ def wordpiece_segment(
         }
         vocab_syms = sorted(alphabet | {a + b for a, b in merges})
 
-    if len(vocab_syms) > inline_threshold:
+    if len(vocab_syms) > INLINE_INVENTORY_MAX:
         return wordpiece_segment_trie(
             words, merges, max_pieces=max_pieces, inventory=vocab_syms
         )

@@ -18,13 +18,16 @@ Scale design (the point of each algorithm):
   trick: split the signature into `hamming_k + 1` chunks — any pair
   within distance k agrees on ≥1 chunk — so candidate generation is
   again an equi-join on (chunk_idx, chunk_value).
-- **n-gram Jaccard** (`jaccard_verify`): exact set overlap on token
+- **n-gram Jaccard** (`jaccard`): exact set overlap on token
   shingles; used as the verifier behind LSH (never run all-pairs at
   scale).
 - **Embedding cosine** (`embedding_near_dup_pairs`): semantic
   near-dup over `array<float>` embeddings; candidates via
   random-hyperplane LSH buckets (see similarity.ann), verified by
   exact cosine.
+
+The CPU-bound per-document stages spread a scan narrower than the
+core count with `plans.queries.spread_if_narrow`.
 
 All hashes are the portable md5-derived 32-bit hash
 (analysis.md5_hash32) so every stage is DuckDB-oracle-verifiable
@@ -38,7 +41,13 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flight_delay_prediction_using_pyspark_spark.text.analysis import md5_hash32, md5_hash60, tokens
+from flight_delay_prediction_using_pyspark_spark.text.analysis import (
+    let,
+    md5_hash32,
+    md5_hash60,
+    quality_language_struct,
+    tokens,
+)
 
 #: Default MinHash geometry: 16 hashes = 4 bands × 4 rows. With
 #: Jaccard s, P(candidate) = 1-(1-s^4)^4 — the s-curve crosses 0.5
@@ -81,13 +90,8 @@ MINHASH_B: list[int] = [_mh_rng.randrange(MINHASH_P) for _ in range(MINHASH_K)]
 def shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct token n-gram shingles → array<string>. Documents with
     fewer than n tokens yield an empty array (callers filter them).
-
-    The token array is LET-BOUND (transform over a 1-element wrapper
-    array) because the expression references it three times — the
-    short-doc guard, the sequence bound, and the slice source — and
-    HOF-bearing projections get no codegen common-subexpression
-    elimination, so an inline `tokens(col)` re-ran the regex split
-    3x per document (round-12 plan audit)."""
+    The token array is bound with `let`: the short-doc guard, the
+    sequence bound and the slice source all read it."""
 
     def build(t: Column) -> Column:
         # Guard: sequence(1, stop) DESCENDS when stop < 1, so short
@@ -103,35 +107,14 @@ def shingles(col: Column | str, n: int = 3) -> Column:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    return F.element_at(F.transform(F.array(tokens(col)), build), 1)
-
-
-def minhash_signature(shingle_col: Column, k: int = MINHASH_K) -> Column:
-    """k-minhash signature → array<long>; element i is
-    min over shingles of (A[i]*md5_32(shingle) + B[i]) mod P.
-
-    The base md5 array is let-bound via a transform over a
-    single-element wrapper array, so the digests run ONCE per shingle
-    no matter how many affine variants consume them — Catalyst's
-    CollapseProject would otherwise re-inline a "materialized"
-    projection into all k consumers (k× the digest cost)."""
-
-    def affine(i):  # closure factory: PySpark lambda arity must stay 1
-        return lambda h: ((h % MINHASH_P) * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P
-
-    def sig_from(base):  # base: lambda-bound array<long>, evaluated once
-        return F.array(
-            *[F.array_min(F.transform(base, affine(i))) for i in range(k)]
-        )
-
-    hashed_wrapped = F.array(F.transform(shingle_col, lambda s: md5_hash32(s)))
-    return F.element_at(F.transform(hashed_wrapped, sig_from), 1)
+    return let(tokens(col), build)
 
 
 def minhash_sig_from_hashes(hashes_col: Column, k: int = MINHASH_K) -> Column:
-    """Signature from an already-materialized shingle-hash array —
-    the k affine variants reference a plain column (cheap attribute
-    reads), so no let-binding wrapper is needed."""
+    """k-minhash signature → array<long> from an already-materialized
+    shingle-hash array; element i is min over shingles of
+    (A[i]*md5_32(shingle) + B[i]) mod P. The k affine variants read a
+    plain column (cheap attribute reads), so no `let` is needed."""
 
     def affine(i):
         return lambda h: ((h % MINHASH_P) * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P
@@ -147,7 +130,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 3,
     k: int = MINHASH_K,
-    parallelism: int | None = None,
     exprs: tuple[Column, Column] | None = None,
 ) -> DataFrame:
     """Per-document (id, shingles, sh_hashes, minhash signature).
@@ -160,21 +142,15 @@ def minhash_signatures(
     these hashes, so sharing the cached signature frame saves it a
     full tokenize+shingle+digest pass over the corpus.
 
-    The shingle expression itself is ALSO let-bound (transform over a
-    1-element wrapper array) and the empty-doc filter runs on the
-    generated attribute ABOVE the barrier: the previous shape
-    (project shingles → filter size>0 → project struct) let Catalyst's
-    CollapseProject + filter pushdown re-inline the full
-    tokenize+shingle tree into the struct field, the md5 transform,
-    AND the filter — three evaluations per document, measured 3.3 s →
-    1.3 s cold (2.8 s → 0.4 s steady-state) for the sf0.1 signature
-    build after the fix, with bit-identical signatures.
+    The shingle expression itself is ALSO bound once (the generator
+    wraps it in a 1-element array) and the empty-doc filter runs on
+    the generated attribute ABOVE the barrier: a project → filter →
+    project shape let CollapseProject + filter pushdown re-inline the
+    tokenize+shingle tree three times per document (measured 3.3 s →
+    1.3 s cold for the sf0.1 signature build, same signatures).
 
-    `parallelism`: explicit repartition before the (CPU-heavy, per-
-    shingle md5) computation. Use when the source is a few dense files
-    (local testdata = 1 row-group = 1 task); leave None at real scale,
-    where the scan is already split and an extra shuffle of the text
-    would cost more than it buys.
+    A one-split input (local testdata) is spread by id before the
+    per-shingle md5 work (spread_if_narrow); a wider scan is not.
 
     `exprs`: a prebuilt column bundle from minhash_signature_exprs —
     pass it when calling this in a LOOP (streaming foreachBatch):
@@ -182,8 +158,11 @@ def minhash_signatures(
     driver-side py4j per call (measured at k=16), and a Column is an
     unresolved tree reusable against every batch frame (guide §4, the
     round-14 loop-invariant-hoist pattern)."""
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        spread_if_narrow,
+    )
+
+    df = spread_if_narrow(df, id_col)
     exploded, sig = exprs or minhash_signature_exprs(
         text_col=text_col, n=n, k=k
     )
@@ -293,7 +272,6 @@ def minhash_lsh_pairs(
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
     threshold: float = 0.5,
-    parallelism: int | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) via the full
@@ -308,7 +286,7 @@ def minhash_lsh_pairs(
     (CPU-dominant) shingle+sign stage across verify variants.
     """
     if sigs is None:
-        sigs = minhash_signatures(df, text_col, id_col, n, k, parallelism).persist()
+        sigs = minhash_signatures(df, text_col, id_col, n, k).persist()
     candidates = lsh_candidate_pairs(sigs, id_col, bands, rows)
     sh = sigs.select(F.col(id_col), F.col("shingles"))
     verified = (
@@ -332,7 +310,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.6,
-    parallelism: int | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup pairs: containment = |A∩B| / min(|A|,|B|)
@@ -344,7 +321,7 @@ def containment_pairs(
     with the Jaccard pipeline). Returns (id_a, id_b, containment
     ≥ threshold)."""
     if sigs is None:
-        sigs = minhash_signatures(df, text_col, id_col, n, parallelism=parallelism).persist()
+        sigs = minhash_signatures(df, text_col, id_col, n).persist()
     candidates = lsh_candidate_pairs(sigs, id_col)
     sh = sigs.select(F.col(id_col), F.col("shingles"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -367,32 +344,14 @@ def containment_pairs(
     )
 
 
-def simhash_from_hashes(hashed: Column, bits: int = 32) -> Column:
-    """SimHash signature from a precomputed token-hash array: bit j
-    is set iff the sum over tokens of (hash bit j ? +1 : -1) is
-    positive. Pass an already-materialized hash column — inlining
-    `transform(tokens, md5)` here would re-evaluate the md5s once per
-    bit (32×), since each vote aggregate embeds its own copy of the
-    expression tree."""
-
-    def vote_fn(j):  # closure factory: aggregate's merge lambda is binary
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(F.lit(1 << j)) != 0, 1
-        ).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        vote = F.aggregate(hashed, F.lit(0).cast("long"), vote_fn(j))
-        out = out + F.when(vote > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
-    return out
-
-
 def simhash_single_pass(hash_col_name: str, bits: int = 32) -> Column:
     """SimHash over a named token-hash array column in ONE traversal:
     the aggregate carries a `bits`-wide vote array (each token updates
-    every bit's counter), then the votes fold into the signature. Same
-    result as simhash_from_hashes, but tokens are visited once instead
-    of `bits` times — the bulk form simhash_pairs uses."""
+    every bit's counter), then the votes fold into the signature: bit j
+    is set iff the sum over tokens of (hash bit j ? +1 : -1) is
+    positive. Tokens are visited once, not once per bit, and the hash
+    array is a named column, so its md5s are not re-evaluated per
+    bit either."""
     return F.expr(
         f"""
         aggregate(
@@ -411,13 +370,6 @@ def simhash_single_pass(hash_col_name: str, bits: int = 32) -> Column:
     )
 
 
-def simhash(col: Column | str, bits: int = 32) -> Column:
-    """Single-expression SimHash (convenience form — md5s re-evaluate
-    per bit; for bulk use, materialize the hash array first as
-    simhash_pairs does)."""
-    return simhash_from_hashes(F.transform(tokens(col), lambda t: md5_hash32(t)), bits)
-
-
 def hamming32(a: Column, b: Column) -> Column:
     """Hamming distance between two 32-bit signatures (popcount of
     XOR via bin()-and-count — no Python)."""
@@ -431,18 +383,18 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     chunks: int = 4,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: pigeonhole-bucket on signature
     chunks, then exact Hamming verify. With chunks = max_hamming + 1
     every qualifying pair shares at least one exact chunk, so recall
-    is 1.0 and candidate generation is an equi-join.
+    is 1.0 and candidate generation is an equi-join. The 32-bit vote
+    computation is spread like minhash_signatures'."""
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        spread_if_narrow,
+    )
 
-    `parallelism`: see minhash_signatures — spreads the 32-bit vote
-    computation when the source arrives as a single dense file."""
     width = 32 // chunks
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
+    df = spread_if_narrow(df, id_col)
     # Single pass: hash each token once, carry a 32-wide vote array
     # through one aggregate (vs. 32 aggregates each re-hashing).
     hashed = df.select(
@@ -561,7 +513,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.95,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Semantic near-dup pairs by exact cosine ≥ threshold.
 
@@ -572,9 +523,14 @@ def embedding_near_dup_pairs(
 
     Norms are computed ONCE per vector before the pair join (O(n·d)),
     not per pair (O(n²·d)) — the pair stage does one dot product and
-    one multiply. `parallelism` repartitions the probe side so the
-    nested-loop join fans out instead of running as one task.
+    one multiply. A probe side narrower than the core count is spread
+    (spread_if_narrow) so the nested-loop join fans out instead of
+    running as one task.
     """
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        spread_if_narrow,
+    )
+
     norm = F.sqrt(
         F.aggregate(
             F.col(vec_col),
@@ -588,8 +544,7 @@ def embedding_near_dup_pairs(
     a = normed.select(
         F.col(id_col).alias("id_a"), F.col("v").alias("v_a"), F.col("nrm").alias("nrm_a")
     )
-    if parallelism:
-        a = a.repartition(parallelism, F.col("id_a"))
+    a = spread_if_narrow(a, "id_a")
     b = normed.select(
         F.col(id_col).alias("id_b"), F.col("v").alias("v_b"), F.col("nrm").alias("nrm_b")
     )
@@ -609,12 +564,19 @@ def embedding_near_dup_pairs(
     )
 
 
+#: connected_components' shuffle width: the pair graph is orders of
+#: magnitude smaller than the corpus, so it iterates narrower than the
+#: corpus-scale session setting (raise only for billions of edges).
+CC_GRAPH_PARTITIONS = 8
+
+#: Round bound of connected_components' distributed min-label loop.
+CC_MAX_ITER = 20
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
-    graph_partitions: int = 8,
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a
@@ -632,15 +594,11 @@ def connected_components(
     each iteration is one join+agg (labels x edges -> min over
     neighborhood); the driver only checks the converged flag.
     Iterations needed = graph diameter — near-dup clusters are
-    shallow (usually <= 3) so this converges in a few rounds; max_iter
-    bounds pathological chains. The loop persists each generation and
-    unpersists the last — lineage stays O(1) per round. Both paths
+    shallow (usually <= 3) so this converges in a few rounds;
+    CC_MAX_ITER bounds pathological chains. The loop persists each
+    generation and unpersists the last — lineage stays O(1) per round. Both paths
     return identical labels (min node id of the component).
     """
-    # The pair graph is orders of magnitude smaller than the corpus
-    # (duplicate pairs, not documents): iterate at a narrow shuffle
-    # width (graph_partitions) instead of the corpus-scale session
-    # setting — raise only for graphs with billions of edges.
     # Symmetrize in ONE pass over `pairs` via a per-row explode — a
     # union of two selects would execute the caller's (unpersisted,
     # often expensive: LSH candidate join + verify) pair lineage twice.
@@ -655,7 +613,7 @@ def connected_components(
         )
         .select("e.u", "e.v")
         .distinct()
-        .repartition(graph_partitions, F.col("u"))
+        .repartition(CC_GRAPH_PARTITIONS, F.col("u"))
         .persist()
     )
     n_edges = edges.count()  # also materializes the persisted frontier
@@ -670,7 +628,7 @@ def connected_components(
 
         # collect(), not toLocalIterator(): under the threshold the
         # edge list is a few MB, and toLocalIterator fetches each of
-        # the graph_partitions partitions as a SEQUENTIAL job — pure
+        # the CC_GRAPH_PARTITIONS partitions as a SEQUENTIAL job — pure
         # scheduler latency (~2 s here) for a frame collect() moves
         # in one job.
         for r in edges.collect():
@@ -693,7 +651,7 @@ def connected_components(
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     ).persist()
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")
@@ -742,7 +700,6 @@ def prepare_training_corpus(
     min_quality: float = 0.4,
     lang: str | None = "en",
     jaccard_threshold: float = 0.5,
-    parallelism: int | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end training-corpus preparation — the composite a 100 TB
@@ -769,17 +726,14 @@ def prepare_training_corpus(
     doc_id instead of re-running the CPU-dominant shingle+sign stage —
     the natural sharing when several corpus jobs run over one snapshot.
     """
-    from flight_delay_prediction_using_pyspark_spark.text.analysis import (
-        quality_language_struct,
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        spread_if_narrow,
     )
 
-    if parallelism:
-        # The gates run real interpreted per-doc work — a map that
-        # would otherwise run at the INPUT split count (the local
-        # testdata table is one parquet file = one task). Spread
-        # before any per-row work; at real scale the scan is already
-        # split and callers pass None.
-        df = df.repartition(parallelism)
+    # The gates run real interpreted per-doc work — a map that would
+    # otherwise run at the INPUT split count (the local testdata table
+    # is one parquet file = one task). Spread before any per-row work.
+    df = spread_if_narrow(df)
     # One let-bound gate struct, expanded behind a Generate barrier:
     # quality and pred_lang tokenize once per document instead of ~8×
     # (see analysis.quality_language_struct).
@@ -817,7 +771,6 @@ def prepare_training_corpus(
     pairs = minhash_lsh_pairs(
         deduped,
         threshold=jaccard_threshold,
-        parallelism=parallelism,
         sigs=survivor_sigs,
     )
     clusters = connected_components(pairs)

@@ -113,9 +113,12 @@ def quantized_costs(counts: dict[str, int]) -> dict[str, int]:
     """Integer-quantized smoothed negative log-probs from a bounded
     piece-count dict — pure Python (the artifact is driver-resident
     by design), but floor(Q·ln(x)) matches both engines' floor/ln on
-    the same integers bit-for-bit."""
+    the same integers bit-for-bit. An empty count table (an empty
+    vocabulary) has an empty cost table."""
     import math
 
+    if not counts:
+        return {}
     total = sum(counts.values())
     m = len(counts)
     base = math.floor(_Q * math.log(total + m))
@@ -132,7 +135,6 @@ def viterbi_segment(
     words: DataFrame,
     costs: dict[str, int],
     max_piece_len: int | None = None,
-    inline_threshold: int | None = None,
 ) -> DataFrame:
     """Map-only Viterbi: per word, the minimum-cost segmentation under
     the piece-cost map (inlined as a literal), returning
@@ -144,15 +146,14 @@ def viterbi_segment(
 
     `max_piece_len` bounds the DP look-back (defaults to the module
     constant; production SentencePiece uses ~16). Cost tables LARGER
-    than `inline_threshold` (default INLINE_COSTS_MAX) route to the
+    than INLINE_COSTS_MAX (read at call time) route to the
     mapInPandas lattice (`viterbi_segment_pandas`): a map LITERAL is
     an ArrayBasedMapData whose element_at is a LINEAR scan, so the
     fold's per-row cost grows as O(word_len · max_piece_len · |V|) —
     measured curve in SCALE.md — while the lattice's dict lookup is
     O(1) per candidate."""
     ml_over = MAX_PIECE_LEN if max_piece_len is None else int(max_piece_len)
-    thr = INLINE_COSTS_MAX if inline_threshold is None else inline_threshold
-    if len(costs) > thr:
+    if len(costs) > INLINE_COSTS_MAX:
         return viterbi_segment_pandas(words, costs, max_piece_len=ml_over)
     items = sorted(costs.items())
     cost_map = (

@@ -46,6 +46,18 @@ def test_text_profile_null_and_whitespace(spark):
     assert rows[1].n_tokens == 1
 
 
+def test_unigram_train_on_empty_vocabulary(spark):
+    """An empty (word, freq) table trains to an empty tokenizer: the
+    cost table of an empty count table is empty, not ln(0)."""
+    from flight_delay_prediction_using_pyspark_spark.text import unigram as U
+
+    assert U.quantized_costs({}) == {}
+    words = spark.createDataFrame([], "word string, freq long")
+    counts, costs, seg = U.unigram_train(words)
+    assert counts == {} and costs == {}
+    assert seg.count() == 0
+
+
 def test_cosine_topk_k_exceeds_corpus(spark):
     df = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], ["vec_id", "embedding"])
     assert ann.cosine_topk(df, [1.0, 0.0], k=50).count() == 2

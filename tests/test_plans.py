@@ -5,6 +5,8 @@ plan and iterate until it's the plan you'd want'.)"""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1071,8 +1073,31 @@ def test_text_tier_tokenizes_once_per_node(spark, name):
     assert worst <= budget, (
         f"{name}: tokenizer appears {worst}x in one plan node "
         f"(budget {budget}) — a let-binding regressed (see "
-        "text/analysis.py quality_score docstring)"
+        "text/analysis.py let docstring)"
     )
+
+
+@contextmanager
+def _wide_documents(spark, tmp_path):
+    """A many-file documents fixture whose scan has >= cores splits
+    (the split-packing knobs shrink so each tiny file is its own
+    split; restored on exit)."""
+    cores = spark.sparkContext.defaultParallelism
+    wide_dir = str(tmp_path / "wide_documents")
+    spark.range(0, 4 * cores).selectExpr(
+        "id AS doc_id", "repeat('x', 64) AS text"
+    ).repartition(2 * cores).write.parquet(wide_dir)
+    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+        wide = spark.read.parquet(wide_dir)
+        assert wide.rdd.getNumPartitions() >= cores
+        yield wide
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+        spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
 
 
 def test_spread_if_narrow_two_states(spark, tmp_path):
@@ -1096,23 +1121,23 @@ def test_spread_if_narrow_two_states(spark, tmp_path):
     assert n_exchanges(plan_of(narrow)) == 1
     assert narrow.rdd.getNumPartitions() == cores
 
-    # wide state: a many-file fixture whose scan has >= cores splits
-    # (shrink the split-packing knobs so each tiny file is its own
-    # split; restored below)
-    wide_dir = str(tmp_path / "wide_documents")
-    spark.range(0, 4 * cores).selectExpr(
-        "id AS doc_id", "repeat('x', 64) AS text"
-    ).repartition(2 * cores).write.parquet(wide_dir)
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
-        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-        wide = spark.read.parquet(wide_dir)
-        assert wide.rdd.getNumPartitions() >= cores
+    # wide state: a scan with >= cores splits gets no Exchange
+    with _wide_documents(spark, tmp_path) as wide:
         spread = spread_if_narrow(wide, "doc_id")
         assert n_exchanges(plan_of(spread)) == 0
         assert spread.rdd.getNumPartitions() == wide.rdd.getNumPartitions()
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+
+
+def test_minhash_signatures_spread_from_input_width(spark, tmp_path):
+    """minhash_signatures decides its spread from the input, with no
+    option: the one-split documents scan comes out at
+    defaultParallelism partitions, and a scan already wider than the
+    core count gets no Exchange."""
+    from flight_delay_prediction_using_pyspark_spark.text import dedup as TD
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{SF_CORRECTNESS_DIR}/documents.parquet")
+    assert docs.rdd.getNumPartitions() < cores
+    assert TD.minhash_signatures(docs).rdd.getNumPartitions() == cores
+    with _wide_documents(spark, tmp_path) as wide:
+        assert n_exchanges(plan_of(TD.minhash_signatures(wide))) == 0

@@ -1176,12 +1176,12 @@ def test_bpe_batched_rounds_mode_and_segmentation(spark):
     assert got == want and len(merges) >= 2
 
 
-def test_wordpiece_trie_crossover_row_identical(spark):
+def test_wordpiece_trie_crossover_row_identical(spark, monkeypatch):
     """The mapInPandas trie segmenter is row-identical to the
     array-literal fold on the same vocabulary — including the
     char-fallback (out-of-inventory chars) and max_pieces truncation
     edges — and wordpiece_segment auto-routes to it past
-    inline_threshold."""
+    INLINE_INVENTORY_MAX."""
     from flight_delay_prediction_using_pyspark_spark.text import bpe as B
 
     words = spark.createDataFrame(
@@ -1208,11 +1208,13 @@ def test_wordpiece_trie_crossover_row_identical(spark):
 
     # auto-switch: a sub-threshold inventory stays a fold (pure plan,
     # no Python), an over-threshold one becomes a mapInPandas scan
+    monkeypatch.setattr(B, "INLINE_INVENTORY_MAX", 10)
     small_plan = B.wordpiece_segment(
-        words, [], inventory=inv, inline_threshold=10
+        words, [], inventory=inv
     )._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(B, "INLINE_INVENTORY_MAX", 3)
     big_plan = B.wordpiece_segment(
-        words, [], inventory=inv, inline_threshold=3
+        words, [], inventory=inv
     )._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in small_plan
     assert "MapInPandas" in big_plan
@@ -1273,25 +1275,25 @@ def test_quality_clf_engine_free_reference(spark):
         assert got[t] == Q.score_q(t, bias_q, wq), t
 
 
-def test_viterbi_auto_switch_threshold(spark):
-    """viterbi_segment routes cost tables past inline_threshold to the
+def test_viterbi_auto_switch_threshold(spark, monkeypatch):
+    """viterbi_segment routes cost tables past INLINE_COSTS_MAX to the
     mapInPandas lattice (map-literal element_at is a linear scan —
     SCALE.md curve) and keeps small tables on the codegen fold."""
     from flight_delay_prediction_using_pyspark_spark.text import unigram as U
 
     words = spark.createDataFrame([("abab", 2)], "word string, freq long")
     costs = {"a": 300, "b": 300, "ab": 100}
-    fold_plan = (
-        U.viterbi_segment(words, costs, inline_threshold=10)
-        ._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(U, "INLINE_COSTS_MAX", 10)
+    fold = U.viterbi_segment(words, costs)
+    monkeypatch.setattr(U, "INLINE_COSTS_MAX", 2)
+    lattice = U.viterbi_segment(words, costs)
+    assert "MapInPandas" not in (
+        fold._jdf.queryExecution().executedPlan().toString()
     )
-    lat_plan = (
-        U.viterbi_segment(words, costs, inline_threshold=2)
-        ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in (
+        lattice._jdf.queryExecution().executedPlan().toString()
     )
-    assert "MapInPandas" not in fold_plan
-    assert "MapInPandas" in lat_plan
     # and both produce the same rows
-    a = U.viterbi_segment(words, costs, inline_threshold=10).collect()
-    b = U.viterbi_segment(words, costs, inline_threshold=2).collect()
+    a = fold.collect()
+    b = lattice.collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
