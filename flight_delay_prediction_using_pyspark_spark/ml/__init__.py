@@ -8,7 +8,9 @@ from flight_delay_prediction_using_pyspark_spark.ml.train import (
     extract_feature_importance,
     mean_fallback_predictions,
     train_decision_tree,
+    train_gbt,
     train_linear_regression,
+    train_random_forest,
 )
 
 __all__ = [
@@ -19,5 +21,7 @@ __all__ = [
     "extract_feature_importance",
     "mean_fallback_predictions",
     "train_decision_tree",
+    "train_gbt",
     "train_linear_regression",
+    "train_random_forest",
 ]

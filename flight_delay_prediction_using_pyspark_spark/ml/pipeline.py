@@ -34,9 +34,7 @@ from pyspark.ml.feature import (
 
 
 def build_feature_pipeline(
-    categorical_cols: list[str],
-    numeric_cols: list[str],
-    output_col: str = "features",
+    categorical_cols: list[str], numeric_cols: list[str]
 ) -> Pipeline:
     """L1-L6: the reference's encoder Pipeline, parameter-identical
     per column — but with ONE multi-column StringIndexer and ONE
@@ -72,25 +70,24 @@ def build_feature_pipeline(
     )
     final_assembler = VectorAssembler(
         inputCols=[f"{c}_ONEHOT" for c in categorical_cols] + ["scaledFeatures"],
-        outputCol=output_col,
+        outputCol="features",
     )
     return Pipeline(stages=indexers + encoders + [numeric_assembler, scaler, final_assembler])
 
 
-def impute_numeric(
-    df, cols: list[str], strategy: str = "mean", suffix: str = "_imp"
-):
+def impute_numeric(df, cols: list[str], strategy: str = "mean"):
     """Null imputation as an MLlib estimator (extension beyond the
     reference, which drops null rows — dataset_utils.py:21-28's
     dropna; imputation keeps the rows a 100 TB pipeline can't afford
     to shed). ONE multi-column Imputer: a single agg job computes all
     column statistics (mean or approx median), then a map-only
-    transform fills the nulls — no shuffle of the data itself."""
+    transform fills the nulls into `<col>_imp` — no shuffle of the
+    data itself."""
     from pyspark.ml.feature import Imputer
 
     imputer = Imputer(
         strategy=strategy,
         inputCols=list(cols),
-        outputCols=[f"{c}{suffix}" for c in cols],
+        outputCols=[f"{c}_imp" for c in cols],
     )
     return imputer.fit(df).transform(df)

@@ -11,6 +11,12 @@ The tree is depth-bounded, so the expression is small (2^depth leaf
 literals) and driver-resident — the same bounded-artifact rule as the
 tokenizer merge lists.
 
+One walk of the JVM tree: `tree_to_arrays(model)` flattens a fitted
+tree over py4j into preorder arrays, and every other reader takes
+those arrays, so a caller walks each model once (forest_to_sql_expr
+flattens each member tree once). The py4j walk costs 0.4-1.1 s at
+1,642 leaves; building the CASE text from the arrays, milliseconds.
+
 Exactness contract: MLlib continuous splits route `value <= threshold`
 and leaves emit constant predictions; the generated SQL uses the
 identical comparison on the identical double (Python repr emits the
@@ -81,31 +87,6 @@ def _quote_ident(col: str) -> str:
     return "`" + col.replace("`", "``") + "`"
 
 
-def tree_to_case_expr(model, feature_cols: Sequence[str]) -> str:
-    """Fitted DecisionTreeRegressionModel (or classifier with numeric
-    leaf predictions) → a Spark SQL expression string over
-    `feature_cols` (the assembler inputs, in assembly order)."""
-
-    def walk(node) -> str:
-        cls = node.getClass().getSimpleName()
-        if "LeafNode" in cls:
-            return _dlit(node.prediction())
-        split = node.split()
-        if split.getClass().getSimpleName() != "ContinuousSplit":
-            raise NotImplementedError(
-                "tree_to_case_expr translates continuous splits only; "
-                "one-hot categoricals upstream (see module docstring)"
-            )
-        col = _quote_ident(feature_cols[split.featureIndex()])
-        return (
-            f"(CASE WHEN {col} <= {_dlit(split.threshold())} "
-            f"THEN {walk(node.leftChild())} "
-            f"ELSE {walk(node.rightChild())} END)"
-        )
-
-    return walk(model._call_java("rootNode"))
-
-
 def _dlit(x: float) -> str:
     """Bare Spark SQL DOUBLE literal: `<repr>D`. Python repr emits the
     shortest decimal that round-trips to the same IEEE-754 double, and
@@ -116,17 +97,74 @@ def _dlit(x: float) -> str:
     return f"{x!r}D"
 
 
-def count_leaves(model) -> int:
-    """Leaf count of a fitted tree (2·splits+1 for binary trees) —
-    bounded by 2^maxDepth, the size witness for the transpiled
-    expression."""
+def tree_to_arrays(model) -> dict[str, list]:
+    """Flatten a fitted tree into parallel arrays (preorder, root at
+    0): feat[i] (-1 for leaves), thr[i], left[i]/right[i] (child
+    indices, -1 for leaves), pred[i]. The ONLY walk of the JVM tree —
+    one py4j round-trip per node per getter, 0.4-1.1 s at 1,642 leaves
+    — so a caller flattens each model once and every reader here
+    (tree_to_case_expr, count_leaves, scoring_strategy,
+    vectorized_tree_scorer) takes the arrays. They are plain Python
+    lists, so the vectorized scorer's pandas UDF stays
+    self-contained (no module references; executors under a foreign
+    cwd can't import the repo)."""
+    feat: list[int] = []
+    thr: list[float] = []
+    left: list[int] = []
+    right: list[int] = []
+    pred: list[float] = []
 
     def walk(node) -> int:
+        i = len(feat)
+        left.append(-1)
+        right.append(-1)
         if "LeafNode" in node.getClass().getSimpleName():
-            return 1
-        return walk(node.leftChild()) + walk(node.rightChild())
+            feat.append(-1)
+            thr.append(0.0)
+            pred.append(node.prediction())
+            return i
+        split = node.split()
+        if split.getClass().getSimpleName() != "ContinuousSplit":
+            raise NotImplementedError(
+                "tree_to_arrays translates continuous splits only; "
+                "one-hot categoricals upstream (see module docstring)"
+            )
+        feat.append(split.featureIndex())
+        thr.append(split.threshold())
+        pred.append(0.0)
+        left[i] = walk(node.leftChild())
+        right[i] = walk(node.rightChild())
+        return i
 
-    return walk(model._call_java("rootNode"))
+    walk(model._call_java("rootNode"))
+    return {"feat": feat, "thr": thr, "left": left, "right": right, "pred": pred}
+
+
+def tree_to_case_expr(arrays: dict[str, list], feature_cols: Sequence[str]) -> str:
+    """Flattened tree (tree_to_arrays) → a Spark SQL expression string
+    over `feature_cols` (the assembler inputs, in assembly order). A
+    single-leaf tree is a bare literal."""
+    feat, thr = arrays["feat"], arrays["thr"]
+    left, right, pred = arrays["left"], arrays["right"], arrays["pred"]
+
+    def walk(i: int) -> str:
+        if feat[i] < 0:
+            return _dlit(pred[i])
+        col = _quote_ident(feature_cols[feat[i]])
+        return (
+            f"(CASE WHEN {col} <= {_dlit(thr[i])} "
+            f"THEN {walk(left[i])} "
+            f"ELSE {walk(right[i])} END)"
+        )
+
+    return walk(0)
+
+
+def count_leaves(arrays: dict[str, list]) -> int:
+    """Leaf count of a flattened tree (2·splits+1 for binary trees) —
+    bounded by 2^maxDepth, the size witness for the transpiled
+    expression."""
+    return sum(f < 0 for f in arrays["feat"])
 
 
 def forest_to_sql_expr(model, feature_cols: Sequence[str]) -> str:
@@ -142,17 +180,14 @@ def forest_to_sql_expr(model, feature_cols: Sequence[str]) -> str:
     trees = model.trees
     weights = list(model.treeWeights)
     cls = model.__class__.__name__
+    exprs = [tree_to_case_expr(tree_to_arrays(t), feature_cols) for t in trees]
     if cls.startswith("RandomForest"):
-        body = " + ".join(tree_to_case_expr(t, feature_cols) for t in trees)
-        return f"(({body}) / CAST({len(trees)} AS DOUBLE))"
-    terms = " + ".join(
-        f"({_dlit(w)} * {tree_to_case_expr(t, feature_cols)})"
-        for t, w in zip(trees, weights)
-    )
+        return f"(({' + '.join(exprs)}) / CAST({len(trees)} AS DOUBLE))"
+    terms = " + ".join(f"({_dlit(w)} * {e})" for e, w in zip(exprs, weights))
     return f"({terms})"
 
 
-def scoring_strategy(model) -> str:
+def scoring_strategy(arrays: dict[str, list]) -> str:
     """'expression' when the transpiled tree stays inside whole-stage
     codegen (leaves <= WHOLESTAGE_SAFE_LEAVES, the measured janino
     ceiling), else 'vectorized' — route scoring through
@@ -161,7 +196,7 @@ def scoring_strategy(model) -> str:
     driver-side parse of a megabyte expression string."""
     return (
         "expression"
-        if count_leaves(model) <= WHOLESTAGE_SAFE_LEAVES
+        if count_leaves(arrays) <= WHOLESTAGE_SAFE_LEAVES
         else "vectorized"
     )
 
@@ -205,53 +240,7 @@ def wholestage_compiles(df) -> tuple[bool, int]:
     return ok, n
 
 
-def tree_to_arrays(model) -> dict[str, list]:
-    """Flatten a fitted tree into parallel arrays (preorder): feat[i]
-    (-1 for leaves), thr[i], left[i]/right[i] (child indices, -1 for
-    leaves), pred[i]. This is the bounded artifact the vectorized
-    scorer ships in its closure — plain Python lists, so the pandas
-    UDF stays self-contained (no module references; executors under a
-    foreign cwd can't import the repo)."""
-    feat: list[int] = []
-    thr: list[float] = []
-    left: list[int] = []
-    right: list[int] = []
-    pred: list[float] = []
-
-    def walk(node) -> int:
-        i = len(feat)
-        if "LeafNode" in node.getClass().getSimpleName():
-            feat.append(-1)
-            thr.append(0.0)
-            left.append(-1)
-            right.append(-1)
-            pred.append(node.prediction())
-            return i
-        split = node.split()
-        if split.getClass().getSimpleName() != "ContinuousSplit":
-            raise NotImplementedError(
-                "tree_to_arrays translates continuous splits only"
-            )
-        feat.append(split.featureIndex())
-        thr.append(split.threshold())
-        pred.append(0.0)
-        left.append(-1)
-        right.append(-1)
-        left[i] = walk(node.leftChild())
-        right[i] = walk(node.rightChild())
-        return i
-
-    walk(model._call_java("rootNode"))
-    return {
-        "feat": feat,
-        "thr": thr,
-        "left": left,
-        "right": right,
-        "pred": pred,
-    }
-
-
-def vectorized_tree_scorer(arrays: dict[str, list], n_features: int):
+def vectorized_tree_scorer(arrays: dict[str, list]):
     """Arrow-vectorized scoring kernel for trees ABOVE the whole-stage
     ceiling: a pandas UDF over the raw feature columns that walks the
     flattened tree one LEVEL per step with numpy gathers — the whole
@@ -265,22 +254,17 @@ def vectorized_tree_scorer(arrays: dict[str, list], n_features: int):
     compile."""
     from pyspark.sql.functions import pandas_udf
 
-    feat_l = list(arrays["feat"])
-    thr_l = list(arrays["thr"])
-    left_l = list(arrays["left"])
-    right_l = list(arrays["right"])
-    pred_l = list(arrays["pred"])
+    tree = {k: list(v) for k, v in arrays.items()}
 
     @pandas_udf("double")
     def score(*cols):
         import numpy as np
         import pandas as pd
 
-        feat = np.asarray(feat_l, dtype=np.int64)
-        thr = np.asarray(thr_l, dtype=np.float64)
-        left = np.asarray(left_l, dtype=np.int64)
-        right = np.asarray(right_l, dtype=np.int64)
-        pred = np.asarray(pred_l, dtype=np.float64)
+        feat, left, right = (
+            np.asarray(tree[k], dtype=np.int64) for k in ("feat", "left", "right")
+        )
+        thr, pred = (np.asarray(tree[k], dtype=np.float64) for k in ("thr", "pred"))
         X = np.column_stack(
             [c.to_numpy(dtype=np.float64, copy=False) for c in cols]
         )

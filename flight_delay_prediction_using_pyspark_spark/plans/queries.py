@@ -1731,17 +1731,17 @@ def q_ml_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     meaningful (any broken run surfaces as contract_ok=false, visible
     in the recorded rows). The grid is kept to 2 points so the catalog
     entry demonstrates the operator without dominating round runtime
-    (the full reference grid runs through the same
-    ml.train.cross_validation_summary)."""
+    (the full reference grid is ml.train.cross_validate_tree's
+    default)."""
     import math
 
     from flight_delay_prediction_using_pyspark_spark.ml.train import (
-        cross_validation_summary,
+        cross_validate_tree,
     )
 
     depth_grid, bins_grid = [5, 10], [60]
     _, encoded = _encoded_flights(spark)
-    rows = cross_validation_summary(
+    _, rows = cross_validate_tree(
         encoded, max_depth_grid=depth_grid, max_bins_grid=bins_grid
     )
     expected = len(depth_grid) * len(bins_grid)
@@ -1845,12 +1845,12 @@ from flight_delay_prediction_using_pyspark_spark.plans import graph_queries  # n
 @query("ml_isotonic_calibration")
 def q_ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib IsotonicRegression as a prediction CALIBRATOR — the
-    estimator family the catalog lacked: fit the shared decision tree,
-    then fit an isotonic (monotone, PAVA) map from raw prediction to
-    label on the validation frame and score with it. Rows-only check
-    (PAVA is an iterative pooled-adjacent-violators solve, not
-    SQL-expressible), so the row is SELF-CHECKING with two exact
-    mathematical contracts: (a) the calibrated prediction is monotone
+    estimator family the catalog lacked: take the session's shared
+    decision tree (_trained_tree), then fit an isotonic (monotone,
+    PAVA) map from raw prediction to label on its validation frame
+    and score with it. Rows-only check (PAVA is an iterative
+    pooled-adjacent-violators solve, not SQL-expressible), so the row
+    is SELF-CHECKING with two exact mathematical contracts: (a) the calibrated prediction is monotone
     non-decreasing in the raw prediction (checked with one lag window
     over the scored frame, sorted by raw), and (b) on the frame the
     isotonic map was fit on, calibrated MSE ≤ raw MSE + eps — the
@@ -1861,10 +1861,7 @@ def q_ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.regression import IsotonicRegression
     from pyspark.sql import Window as W
 
-    from flight_delay_prediction_using_pyspark_spark.ml.train import train_decision_tree
-
-    _, encoded = _encoded_flights(spark)
-    _, val_preds = train_decision_tree(encoded)
+    _, val_preds = _trained_tree(spark)
     base = val_preds.select(
         F.col("ArrDelay").cast("double").alias("label"),
         F.col("prediction").alias("raw"),
@@ -1908,6 +1905,19 @@ def q_ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # synthetic frame is SF-independent, so one small deterministic fit
 # serves every invocation.
 _TREESQL_FEATURES = ["DepDelay", "Distance", "DepTime"]
+
+
+def _parity_mismatches(model, assembled: DataFrame, scored_col) -> tuple[int, int]:
+    """(n_rows, mismatches) of model.transform vs an alternative
+    scoring column over the assembled frame."""
+    scored = model.transform(assembled).withColumn("alt_pred", scored_col)
+    r = scored.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(
+            F.when(F.col("prediction") != F.col("alt_pred"), 1)
+        ).alias("mism"),
+    ).first()
+    return int(r["n"]), int(r["mism"])
 
 
 def _treesql_fit(spark: SparkSession):
@@ -1985,33 +1995,26 @@ def q_ml_tree_sql_scoring_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
         count_leaves,
         forest_to_sql_expr,
+        tree_to_arrays,
         tree_to_case_expr,
     )
 
     tree, rf, gbt, assembled = _treesql_fit(spark)
-
-    def mismatches(model, expr: str) -> tuple[int, int]:
-        scored = model.transform(assembled).withColumn(
-            "sql_pred", F.expr(expr)
-        )
-        r = scored.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(
-                F.when(F.col("prediction") != F.col("sql_pred"), 1)
-            ).alias("mism"),
-        ).first()
-        return int(r["n"]), int(r["mism"])
-
+    arrays = tree_to_arrays(tree)
     # the three family parities are independent deterministic aggs
-    # over the same assembled frame — overlap them (guide §2.6,
-    # round-14; unlike ceiling/depth15 nothing here toggles the
-    # session-global codegen conf, so the concurrency is safe)
+    # over the same assembled frame — overlap them (guide §2.6)
     (n, tree_mism), (_, rf_mism), (_, gbt_mism) = run_concurrently(
-        lambda: mismatches(tree, tree_to_case_expr(tree, _TREESQL_FEATURES)),
-        lambda: mismatches(rf, forest_to_sql_expr(rf, _TREESQL_FEATURES)),
-        lambda: mismatches(gbt, forest_to_sql_expr(gbt, _TREESQL_FEATURES)),
+        lambda: _parity_mismatches(
+            tree, assembled, F.expr(tree_to_case_expr(arrays, _TREESQL_FEATURES))
+        ),
+        lambda: _parity_mismatches(
+            rf, assembled, F.expr(forest_to_sql_expr(rf, _TREESQL_FEATURES))
+        ),
+        lambda: _parity_mismatches(
+            gbt, assembled, F.expr(forest_to_sql_expr(gbt, _TREESQL_FEATURES))
+        ),
     )
-    n_leaves = count_leaves(tree)
+    n_leaves = count_leaves(arrays)
     return spark.createDataFrame(
         [
             (
@@ -2064,21 +2067,25 @@ def _deep_synth(spark: SparkSession, n_rows: int) -> DataFrame:
     )
 
 
+def _deep_assembled(spark: SparkSession, n_rows: int) -> DataFrame:
+    """The deep synth frame with its `features` vector assembled."""
+    from pyspark.ml.feature import VectorAssembler
+
+    return VectorAssembler(inputCols=_DEEP_FEATS, outputCol="features").transform(
+        _deep_synth(spark, n_rows)
+    )
+
+
 def _deep_fit(spark: SparkSession, n_rows: int, depth: int):
     """DecisionTreeRegressor(maxDepth=depth, maxBins=60, seed=42) — the
     reference's own tree config (reference src/main/helper_methods.py:301
     uses maxDepth=15, maxBins=60) — on the deterministic synth frame,
     which is SF-independent and partition-pinned, so one memoized fit
     serves the session."""
-    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import DecisionTreeRegressor
 
     def build():
-        assembled = (
-            VectorAssembler(inputCols=_DEEP_FEATS, outputCol="features")
-            .transform(_deep_synth(spark, n_rows))
-            .persist()
-        )
+        assembled = _deep_assembled(spark, n_rows).persist()
         try:
             return DecisionTreeRegressor(
                 maxDepth=depth, maxBins=60, seed=42
@@ -2089,22 +2096,16 @@ def _deep_fit(spark: SparkSession, n_rows: int, depth: int):
     return session_memo(spark, ("deep_fit", n_rows, depth), build)
 
 
-def _parity_mismatches(spark, model, n_rows: int, scored_col) -> tuple[int, int]:
-    """(n_rows, mismatches) of model.transform vs a scoring column
-    over the `n_rows` deep synth frame the model was fitted on."""
-    from pyspark.ml.feature import VectorAssembler
-
-    assembled = VectorAssembler(
-        inputCols=_DEEP_FEATS, outputCol="features"
-    ).transform(_deep_synth(spark, n_rows))
-    scored = model.transform(assembled).withColumn("alt_pred", scored_col)
-    r = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(
-            F.when(F.col("prediction") != F.col("alt_pred"), 1)
-        ).alias("mism"),
-    ).first()
-    return int(r["n"]), int(r["mism"])
+def _no_wholestage(spark: SparkSession) -> SparkSession:
+    """A child session (shared SparkContext and cache, its own SQL
+    conf) with whole-stage codegen off, so a parity action over a
+    transpiled tree past the janino ceiling reaches split-method
+    expression codegen directly instead of first paying the doomed
+    whole-stage compile — without touching the caller's session conf
+    (measured on the depth-15 parity agg: ~1.0 s off vs 1.2-2.3 s on)."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.codegen.wholeStage", "false")
+    return child
 
 
 # The two ceiling queries memoize their whole result row: every leg
@@ -2145,13 +2146,14 @@ def q_ml_tree_sql_codegen_ceiling(
     OTHER measured ceiling — ANTLR parse of a ≳160 KB nested CASE can
     OOM a default 1 GiB driver heap, and that OOM poisons the shared
     session, so driver-battery queries must never go near it. The
-    large tree's parity action runs with whole-stage toggled OFF to
-    reach the split-method codegen path directly instead of paying the
-    doomed compile a second time (the probe already measured the
-    failure)."""
+    large tree's parity action runs on a `_no_wholestage` child
+    session to reach the split-method codegen path directly instead of
+    paying the doomed compile a second time (the probe already
+    measured the failure)."""
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
         WHOLESTAGE_SAFE_LEAVES,
         count_leaves,
+        tree_to_arrays,
         tree_to_case_expr,
         wholestage_compiles,
     )
@@ -2159,59 +2161,42 @@ def q_ml_tree_sql_codegen_ceiling(
     def build():
         n_rows = 20000
         # the two fits are independent deterministic jobs — overlap
-        # them (guide §2.6); likewise the two codegen probes below
-        # (the doomed 74 KB janino compile is single-threaded driver
-        # JVM work the small arm's jobs can back-fill)
+        # them (guide §2.6); likewise the two codegen probes (the
+        # doomed 74 KB janino compile is single-threaded driver JVM
+        # work the small arm's jobs can back-fill) and the two parity
+        # aggs (the large arm's codegen conf lives on its own session)
         small, large = run_concurrently(
             lambda: _deep_fit(spark, n_rows, 8),
             lambda: _deep_fit(spark, n_rows, 11),
         )
+        arrays = {"small": tree_to_arrays(small), "large": tree_to_arrays(large)}
+        exprs = {t: tree_to_case_expr(a, _DEEP_FEATS) for t, a in arrays.items()}
         raw = _deep_synth(spark, n_rows)
-        _WS = "spark.sql.codegen.wholeStage"
-        exprs = {
-            "small": tree_to_case_expr(small, _DEEP_FEATS),
-            "large": tree_to_case_expr(large, _DEEP_FEATS),
-        }
-        probes = dict(
-            zip(
-                ("small", "large"),
-                run_concurrently(
-                    lambda: wholestage_compiles(
-                        raw.select(F.expr(exprs["small"]).alias("sql_pred"))
-                    ),
-                    lambda: wholestage_compiles(
-                        raw.select(F.expr(exprs["large"]).alias("sql_pred"))
-                    ),
-                ),
-            )
+        (small_ws, small_n), (large_ws, large_n) = run_concurrently(
+            lambda: wholestage_compiles(
+                raw.select(F.expr(exprs["small"]).alias("sql_pred"))
+            ),
+            lambda: wholestage_compiles(
+                raw.select(F.expr(exprs["large"]).alias("sql_pred"))
+            ),
         )
-        results = {}
-        # the parity aggs stay SEQUENTIAL: the large arm toggles the
-        # session-global whole-stage conf, which must not race the
-        # small arm's default-mode action
-        for tag, model in (("small", small), ("large", large)):
-            in_ws, n_sub = probes[tag]
-            prev = spark.conf.get(_WS, "true")
-            try:
-                if tag == "large":
-                    spark.conf.set(_WS, "false")
-                _, mism = _parity_mismatches(
-                    spark, model, n_rows, F.expr(exprs[tag])
-                )
-            finally:
-                spark.conf.set(_WS, prev)
-            results[tag] = {
-                "leaves": count_leaves(model),
-                "in_ws": in_ws and n_sub > 0,
-                "mism": mism,
-            }
+        (_, small_mism), (_, large_mism) = run_concurrently(
+            lambda: _parity_mismatches(
+                small, _deep_assembled(spark, n_rows), F.expr(exprs["small"])
+            ),
+            lambda: _parity_mismatches(
+                large,
+                _deep_assembled(_no_wholestage(spark), n_rows),
+                F.expr(exprs["large"]),
+            ),
+        )
         return (
-            results["small"]["leaves"] <= WHOLESTAGE_SAFE_LEAVES,
-            results["large"]["leaves"] > WHOLESTAGE_SAFE_LEAVES,
-            results["small"]["in_ws"],
-            results["large"]["in_ws"],
-            results["small"]["mism"],
-            results["large"]["mism"],
+            count_leaves(arrays["small"]) <= WHOLESTAGE_SAFE_LEAVES,
+            count_leaves(arrays["large"]) > WHOLESTAGE_SAFE_LEAVES,
+            small_ws and small_n > 0,
+            large_ws and large_n > 0,
+            small_mism,
+            large_mism,
         )
     return spark.createDataFrame(
         [session_memo(spark, ("deep_result", "ceiling"), build)],
@@ -2250,15 +2235,17 @@ def q_ml_tree_sql_depth15_parity(
     demonstration, 12,741 leaves with a 16 GiB heap, lives in the
     pytest tier and the module docstring's probe table).
 
-    The SQL-parity action runs with whole-stage codegen toggled OFF
-    for the duration (restored after): the expression is correct
-    either way, but default mode would first attempt — and pay for —
-    a doomed multi-megabyte janino compile (measured 19 s at 12,741
-    leaves) before silently falling back to the same split-method
-    expression codegen the toggle reaches directly. That tax, and the
+    Both parity actions run on a `_no_wholestage` child session: the
+    expression is correct either way, but default mode would first
+    attempt — and pay for — a doomed multi-megabyte janino compile
+    (measured 19 s at 12,741 leaves) before silently falling back to
+    the same split-method expression codegen the child session
+    reaches directly. That tax, and the
     driver-heap cost of parsing a megabyte CASE cascade, are exactly
     why the strategy flips to the vectorized scorer above the
-    ceiling."""
+    ceiling. The vectorized arm's mismatch count does not depend on
+    the codegen mode, so the two aggs share the child session and
+    overlap (guide §2.6)."""
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
         WHOLESTAGE_SAFE_LEAVES,
         count_leaves,
@@ -2271,37 +2258,22 @@ def q_ml_tree_sql_depth15_parity(
     def build():
         n_rows = 2000
         model = _deep_fit(spark, n_rows, 15)
-        leaves = count_leaves(model)
-
-        expr = tree_to_case_expr(model, _DEEP_FEATS)
-        scorer = vectorized_tree_scorer(
-            tree_to_arrays(model), len(_DEEP_FEATS)
+        arrays = tree_to_arrays(model)
+        expr = F.expr(tree_to_case_expr(arrays, _DEEP_FEATS))
+        udf = vectorized_tree_scorer(arrays)(*[F.col(c) for c in _DEEP_FEATS])
+        assembled = _deep_assembled(_no_wholestage(spark), n_rows)
+        (n, sql_mism), (_, udf_mism) = run_concurrently(
+            lambda: _parity_mismatches(model, assembled, expr),
+            lambda: _parity_mismatches(model, assembled, udf),
         )
-        _WS = "spark.sql.codegen.wholeStage"
-        prev = spark.conf.get(_WS, "true")
-        try:
-            # whole-stage off for BOTH parity aggs: the SQL arm needs
-            # it to reach split-method codegen directly (skipping the
-            # doomed compile the ceiling query already measured), and
-            # the vectorized arm's mismatch count is codegen-mode-
-            # independent — so the two independent aggs can overlap
-            # under one toggle (guide §2.6)
-            spark.conf.set(_WS, "false")
-            (n, sql_mism), (_, udf_mism) = run_concurrently(
-                lambda: _parity_mismatches(spark, model, n_rows, F.expr(expr)),
-                lambda: _parity_mismatches(
-                    spark, model, n_rows, scorer(*[F.col(c) for c in _DEEP_FEATS])
-                ),
-            )
-        finally:
-            spark.conf.set(_WS, prev)
         return (
             n,
-            leaves > WHOLESTAGE_SAFE_LEAVES,
-            scoring_strategy(model) == "vectorized",
+            count_leaves(arrays) > WHOLESTAGE_SAFE_LEAVES,
+            scoring_strategy(arrays) == "vectorized",
             sql_mism,
             udf_mism,
         )
+
     return spark.createDataFrame(
         [session_memo(spark, ("deep_result", "depth15"), build)],
         "n_rows long, leaves_over_ceiling boolean, "

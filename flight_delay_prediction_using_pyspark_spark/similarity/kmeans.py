@@ -283,7 +283,10 @@ def inertia_expr(
     per-row inertia contribution, floor-quantized to BIGINT so the
     corpus sum is exact and order-free (the double min is
     bit-identical both engines; only the cross-row SUM needs the
-    integer armor)."""
+    integer armor). No centroids → a typed NULL, as in
+    _argmin_sql_expr."""
+    if not centroids:
+        return F.expr("CAST(NULL AS BIGINT)")
     ds = [
         _sq_dist_sql_expr(qv_col, centroid_components(*centroids[cid]))
         for cid in sorted(centroids)
@@ -579,7 +582,10 @@ def residual_expr(
     floored back to BIGINT, so residual-PQ training stays inside the
     exact-integer contract (IVFADC, Jégou et al. TPAMI 2011 §V). CASE
     over the cell id, each branch a zip_with over that cell's inlined
-    centroid — the same k·d literal budget as nearest_expr."""
+    centroid — the same k·d literal budget as nearest_expr. No
+    centroids → a typed NULL, as in _argmin_sql_expr."""
+    if not centroids:
+        return F.expr("CAST(NULL AS ARRAY<BIGINT>)")
     whens = []
     for cid in sorted(centroids):
         comp = centroid_components(*centroids[cid])

@@ -196,11 +196,30 @@ def test_cli_soak_bz2_500k(spark, tmp_path):
     assert wall < 360 * n / 500_000, f"soak took {wall:.0f}s at {n} rows"
 
 
-def test_cli_train_and_score(spark, flights_csv, tmp_path):
+def test_cli_train_and_score(spark, flights_csv, tmp_path, monkeypatch):
+    # run() must look train_decision_tree and evaluate_regression up on
+    # ml.train at call time: perfbench's trace attributes its
+    # ml.train.fit / ml.train.evaluate layers by patching these names.
+    from flight_delay_prediction_using_pyspark_spark.ml import train
+
+    calls = {"train_decision_tree": 0, "evaluate_regression": 0}
+
+    def counting(name):
+        fn = getattr(train, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(train, name, counting(name))
     out = tmp_path / "out"
     result = run(
         [flights_csv, str(out), "--test-file", flights_csv, "--figures"]
     )
+    assert calls == {"train_decision_tree": 1, "evaluate_regression": 2}
     assert len(result["figures"]) == 6
     assert all(os.path.exists(p) for p in result["figures"])
     assert result["mae"] >= 0 and result["rmse"] >= result["mae"]

@@ -146,20 +146,18 @@ def test_cross_validator_smoke(spark, prepared):
     sample = planted.sample(0.3, seed=42)
     model = pipeline.fit(sample)
     out = model.transform(sample)
-    best, avg_metrics = cross_validate_tree(
+    best, rows = cross_validate_tree(
         out, max_depth_grid=[3, 6], max_bins_grid=[16], num_folds=2
     )
-    assert len(avg_metrics) == 2
+    assert len(rows) == 2
     assert best.getMaxDepth() in (3, 6)
 
 
 def test_cross_validation_summary_grid_order(spark, prepared):
-    from flight_delay_prediction_using_pyspark_spark.ml.train import cross_validation_summary
-
     pipeline = build_feature_pipeline(CATEGORICAL_FEATURES, NUMERIC_FEATURES)
     sample = prepared.sample(0.3, seed=42)
     out = pipeline.fit(sample).transform(sample)
-    rows = cross_validation_summary(
+    _, rows = cross_validate_tree(
         out, max_depth_grid=[3, 6], max_bins_grid=[16], num_folds=2
     )
     assert [(d, b) for d, b, _, _ in rows] == [(3, 16), (6, 16)]
@@ -248,6 +246,7 @@ def test_tree_to_sql_transpile_bit_exact(spark):
 
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
         count_leaves,
+        tree_to_arrays,
         tree_to_case_expr,
     )
 
@@ -260,12 +259,13 @@ def test_tree_to_sql_transpile_bit_exact(spark):
         .repartition(2)
     )
     model = DecisionTreeRegressor(maxDepth=3, seed=7).fit(assembled)
-    expr = tree_to_case_expr(model, feats)
+    arrays = tree_to_arrays(model)
+    expr = tree_to_case_expr(arrays, feats)
     scored = model.transform(assembled).withColumn("sql_pred", F.expr(expr))
     assert (
         scored.filter(F.col("prediction") != F.col("sql_pred")).count() == 0
     )
-    assert 2 <= count_leaves(model) <= 2**3
+    assert 2 <= count_leaves(arrays) <= 2**3
 
 
 def test_tree_to_sql_refuses_categorical_splits(spark):
@@ -278,7 +278,7 @@ def test_tree_to_sql_refuses_categorical_splits(spark):
     from pyspark.ml.regression import DecisionTreeRegressor
 
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
-        tree_to_case_expr,
+        tree_to_arrays,
     )
 
     rows = [
@@ -292,7 +292,7 @@ def test_tree_to_sql_refuses_categorical_splits(spark):
     ).fit(raw).transform(raw)
     model = DecisionTreeRegressor(maxDepth=3, seed=1).fit(indexed)
     with _pytest.raises(NotImplementedError, match="continuous"):
-        tree_to_case_expr(model, ["cat", "x"])
+        tree_to_arrays(model)
 
 
 def test_tree_to_sql_quotes_awkward_column_names(spark):
@@ -304,6 +304,7 @@ def test_tree_to_sql_quotes_awkward_column_names(spark):
     from pyspark.ml.regression import DecisionTreeRegressor
 
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
+        tree_to_arrays,
         tree_to_case_expr,
     )
 
@@ -322,7 +323,7 @@ def test_tree_to_sql_quotes_awkward_column_names(spark):
         .repartition(2)
     )
     model = DecisionTreeRegressor(maxDepth=3, seed=7).fit(assembled)
-    expr = tree_to_case_expr(model, feats)
+    expr = tree_to_case_expr(tree_to_arrays(model), feats)
     assert "`" in expr
     scored = model.transform(assembled).withColumn("sql_pred", F.expr(expr))
     assert (
@@ -336,7 +337,9 @@ def test_vectorized_scorer_bit_equal_and_strategy(spark):
     and the transpiled SQL expression, and scoring_strategy routes
     small trees to 'expression' / above-ceiling trees to
     'vectorized' (the measured janino whole-stage limit — see the
-    tree_sql module docstring's probe table)."""
+    tree_sql module docstring's probe table). A constant label grows
+    a single-leaf tree: its CASE text is a bare literal, and both
+    scorers still match model.transform."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import DecisionTreeRegressor
 
@@ -373,22 +376,35 @@ def test_vectorized_scorer_bit_equal_and_strategy(spark):
         small = DecisionTreeRegressor(maxDepth=6, maxBins=60, seed=42).fit(
             assembled
         )
-        assert count_leaves(small) <= WHOLESTAGE_SAFE_LEAVES
-        assert scoring_strategy(small) == "expression"
+        small_arrays = tree_to_arrays(small)
+        assert count_leaves(small_arrays) <= WHOLESTAGE_SAFE_LEAVES
+        assert scoring_strategy(small_arrays) == "expression"
 
         deep = DecisionTreeRegressor(maxDepth=12, maxBins=60, seed=42).fit(
             assembled
         )
-        assert count_leaves(deep) > WHOLESTAGE_SAFE_LEAVES
-        assert scoring_strategy(deep) == "vectorized"
+        deep_arrays = tree_to_arrays(deep)
+        assert count_leaves(deep_arrays) > WHOLESTAGE_SAFE_LEAVES
+        assert scoring_strategy(deep_arrays) == "vectorized"
 
-        for model in (small, deep):
-            scorer = vectorized_tree_scorer(tree_to_arrays(model), 3)
+        leaf = DecisionTreeRegressor(maxDepth=6, maxBins=60, seed=42).fit(
+            assembled.withColumn("label", F.lit(2.5))
+        )
+        leaf_arrays = tree_to_arrays(leaf)
+        assert count_leaves(leaf_arrays) == 1
+        assert tree_to_case_expr(leaf_arrays, feats) == "2.5D"
+
+        for model, arrays in (
+            (small, small_arrays),
+            (deep, deep_arrays),
+            (leaf, leaf_arrays),
+        ):
+            scorer = vectorized_tree_scorer(arrays)
             scored = (
                 model.transform(assembled)
                 .withColumn("vec_pred", scorer(*[F.col(c) for c in feats]))
                 .withColumn(
-                    "sql_pred", F.expr(tree_to_case_expr(model, feats))
+                    "sql_pred", F.expr(tree_to_case_expr(arrays, feats))
                 )
             )
             bad = scored.filter(
@@ -413,6 +429,7 @@ def test_wholestage_compiles_probe(spark):
         _deep_synth,
     )
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
+        tree_to_arrays,
         tree_to_case_expr,
     )
 
@@ -423,7 +440,7 @@ def test_wholestage_compiles_probe(spark):
     assert ok and n >= 1
 
     big = _deep_fit(spark, 20000, 11)
-    expr = tree_to_case_expr(big, _DEEP_FEATS)
+    expr = tree_to_case_expr(tree_to_arrays(big), _DEEP_FEATS)
     ok_big, n_big = wholestage_compiles(
         raw.select(F.expr(expr).alias("p"))
     )

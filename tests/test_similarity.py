@@ -487,6 +487,23 @@ def test_sql_text_exprs_match_driver_twins(spark, km_rows):
     }
 
 
+def test_kmeans_exprs_over_zero_centroids_are_typed_null(spark):
+    """inertia_expr and residual_expr over an empty centroid set emit a
+    typed NULL, like the argmin emitter: each resolves over an empty
+    frame, and a row gets NULL (no centroid, no distance or residual)."""
+    from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
+
+    df = spark.createDataFrame([([3, 4], 0)], "qv array<int>, gid int")
+    exprs = [
+        km.inertia_expr("qv", {}).alias("inertia"),
+        km.residual_expr("qv", "gid", {}).alias("residual"),
+    ]
+    assert df.limit(0).select(*exprs).collect() == []
+    out = df.select(*exprs)
+    assert out.dtypes == [("inertia", "bigint"), ("residual", "array<bigint>")]
+    assert out.first().asDict() == {"inertia": None, "residual": None}
+
+
 @pytest.fixture(scope="module")
 def empty_embeddings_dir(tmp_path_factory):
     """The smoke fixture with an all-empty ``embeddings`` table (schema
