@@ -63,6 +63,18 @@ def session_memo(spark: SparkSession, key: tuple, build: Callable[[], object]):
     return memo[key]
 
 
+def child_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """`spark.newSession()` with `conf` set on it — the one way a query
+    scopes SQL conf. The child shares the SparkContext, cache and
+    catalog but has its own SQL conf (seeded from the builder, not from
+    the caller's runtime conf), so the caller's session is never
+    touched and concurrent catalog queries cannot race on it."""
+    child = spark.newSession()
+    for key, value in conf.items():
+        child.conf.set(key, value)
+    return child
+
+
 def memo_size(spark: SparkSession) -> int:
     """Number of entries memoized for this session so far."""
     return len(_MEMO.get(spark.sparkContext, ()))
@@ -2096,16 +2108,11 @@ def _deep_fit(spark: SparkSession, n_rows: int, depth: int):
     return session_memo(spark, ("deep_fit", n_rows, depth), build)
 
 
-def _no_wholestage(spark: SparkSession) -> SparkSession:
-    """A child session (shared SparkContext and cache, its own SQL
-    conf) with whole-stage codegen off, so a parity action over a
-    transpiled tree past the janino ceiling reaches split-method
-    expression codegen directly instead of first paying the doomed
-    whole-stage compile — without touching the caller's session conf
-    (measured on the depth-15 parity agg: ~1.0 s off vs 1.2-2.3 s on)."""
-    child = spark.newSession()
-    child.conf.set("spark.sql.codegen.wholeStage", "false")
-    return child
+#: Whole-stage codegen off for a parity action over a transpiled tree
+#: past the janino ceiling: it reaches split-method expression codegen
+#: directly instead of first paying the doomed whole-stage compile
+#: (measured on the depth-15 parity agg: ~1.0 s off vs 1.2-2.3 s on).
+_NO_WHOLESTAGE = {"spark.sql.codegen.wholeStage": "false"}
 
 
 # The two ceiling queries memoize their whole result row: every leg
@@ -2146,10 +2153,10 @@ def q_ml_tree_sql_codegen_ceiling(
     OTHER measured ceiling — ANTLR parse of a ≳160 KB nested CASE can
     OOM a default 1 GiB driver heap, and that OOM poisons the shared
     session, so driver-battery queries must never go near it. The
-    large tree's parity action runs on a `_no_wholestage` child
-    session to reach the split-method codegen path directly instead of
-    paying the doomed compile a second time (the probe already
-    measured the failure)."""
+    large tree's parity action runs on a `child_session` with
+    whole-stage codegen off, to reach the split-method codegen path
+    directly instead of paying the doomed compile a second time (the
+    probe already measured the failure)."""
     from flight_delay_prediction_using_pyspark_spark.ml.tree_sql import (
         WHOLESTAGE_SAFE_LEAVES,
         count_leaves,
@@ -2186,7 +2193,7 @@ def q_ml_tree_sql_codegen_ceiling(
             ),
             lambda: _parity_mismatches(
                 large,
-                _deep_assembled(_no_wholestage(spark), n_rows),
+                _deep_assembled(child_session(spark, _NO_WHOLESTAGE), n_rows),
                 F.expr(exprs["large"]),
             ),
         )
@@ -2235,12 +2242,12 @@ def q_ml_tree_sql_depth15_parity(
     demonstration, 12,741 leaves with a 16 GiB heap, lives in the
     pytest tier and the module docstring's probe table).
 
-    Both parity actions run on a `_no_wholestage` child session: the
-    expression is correct either way, but default mode would first
-    attempt — and pay for — a doomed multi-megabyte janino compile
-    (measured 19 s at 12,741 leaves) before silently falling back to
-    the same split-method expression codegen the child session
-    reaches directly. That tax, and the
+    Both parity actions run on a `child_session` with whole-stage
+    codegen off: the expression is correct either way, but default
+    mode would first attempt — and pay for — a doomed multi-megabyte
+    janino compile (measured 19 s at 12,741 leaves) before silently
+    falling back to the same split-method expression codegen the child
+    session reaches directly. That tax, and the
     driver-heap cost of parsing a megabyte CASE cascade, are exactly
     why the strategy flips to the vectorized scorer above the
     ceiling. The vectorized arm's mismatch count does not depend on
@@ -2261,7 +2268,7 @@ def q_ml_tree_sql_depth15_parity(
         arrays = tree_to_arrays(model)
         expr = F.expr(tree_to_case_expr(arrays, _DEEP_FEATS))
         udf = vectorized_tree_scorer(arrays)(*[F.col(c) for c in _DEEP_FEATS])
-        assembled = _deep_assembled(_no_wholestage(spark), n_rows)
+        assembled = _deep_assembled(child_session(spark, _NO_WHOLESTAGE), n_rows)
         (n, sql_mism), (_, udf_mism) = run_concurrently(
             lambda: _parity_mismatches(model, assembled, expr),
             lambda: _parity_mismatches(model, assembled, udf),

@@ -21,6 +21,13 @@ from flight_delay_prediction_using_pyspark_spark.plans.queries import (
 )
 from flight_delay_prediction_using_pyspark_spark.similarity import ann
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
+from flight_delay_prediction_using_pyspark_spark.streaming.ops import (
+    drain_batches,
+    stream_parquet,
+)
+
+#: The embeddings file as a stream reads it.
+_EMBEDDINGS_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 _QUERY_VEC_ID = 0
 
@@ -1499,20 +1506,14 @@ def q_ann_ivf_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_IVF_ITERS + 1}'s CTE) without any streaming machinery —
     batch/stream symmetry, same contract as the events_streaming_*
     family."""
-    import os
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.expr(km.quantize_sql_expr("embedding")).alias("qv"))
     cent = km.kmeans_fit(base, k=_KM_K, iters=_IVF_ITERS, d=_KM_D)
 
-    stage = tempfile.mkdtemp(prefix="ivf_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(stage)
+    stream = stream_parquet(spark, f"{sf_dir}/embeddings.parquet", _EMBEDDINGS_SCHEMA)
     target = tempfile.mkdtemp(prefix="ivf_index_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_ckpt_")
     # loop-invariant: built ONCE outside the micro-batch body (a Column
     # is an unresolved tree reusable against every batch frame) instead
     # of re-parsed per batch (guide §4 driver boundary, round-14)
@@ -1528,13 +1529,7 @@ def q_ann_ivf_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_batches(stream, ingest)
     return (
         spark.read.parquet(target)
         .groupBy(F.col("list_id").cast("long").alias("list_id"))
@@ -1925,7 +1920,6 @@ def q_ann_ivf_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent: census keys come from the DATA (phase), not the
     micro-batch id, so any chop of the stream lands on the same
     series."""
-    import os
     import shutil
     import tempfile
 
@@ -1954,7 +1948,6 @@ def q_ann_ivf_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     target = tempfile.mkdtemp(prefix="ivf_drift_index_")
     census_dir = tempfile.mkdtemp(prefix="ivf_drift_census_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_drift_ckpt_")
     # basePath keeps the phase partition column visible to the reader
     stream = (
         spark.readStream.schema("vec_id long, embedding array<double>")
@@ -1990,13 +1983,7 @@ def q_ann_ivf_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     try:
-        (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        drain_batches(stream, ingest)
 
         # no-drift control: the ORIGINAL vectors through the same
         # frozen quantizer, one batch-side grouped agg
@@ -2026,7 +2013,7 @@ def q_ann_ivf_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     finally:
-        for d in (stage, target, census_dir, ckpt):
+        for d in (stage, target, census_dir):
             shutil.rmtree(d, ignore_errors=True)
     # Guard BOTH rows (round-10 ADVICE: only control_row was guarded):
     # a degenerate single-phase ingest leaves the CUSUM with no scored
@@ -2982,7 +2969,6 @@ def q_ann_ivf_two_level_streaming_ingest(
     fine training, and the final fine assignment in SQL
     (two_level_cte_sql's fb{_TL_TF + 1}) with no streaming machinery
     — the batch/stream symmetry contract."""
-    import os
     import shutil
     import tempfile
 
@@ -2993,13 +2979,8 @@ def q_ann_ivf_two_level_streaming_ingest(
         d=_KM_D,
     )
 
-    stage = tempfile.mkdtemp(prefix="ivf2_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(stage)
+    stream = stream_parquet(spark, f"{sf_dir}/embeddings.parquet", _EMBEDDINGS_SCHEMA)
     target = tempfile.mkdtemp(prefix="ivf2_index_")
-    ckpt = tempfile.mkdtemp(prefix="ivf2_ckpt_")
     # loop-invariant (gid, fid) assignment expressions, built ONCE
     # outside the micro-batch body and reused against every batch
     # frame (round-14, guide §4 driver boundary); same tree as
@@ -3025,13 +3006,7 @@ def q_ann_ivf_two_level_streaming_ingest(
         )
 
     try:
-        (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        drain_batches(stream, ingest)
         rows = [
             (
                 int(r["gid"]),
@@ -3052,8 +3027,7 @@ def q_ann_ivf_two_level_streaming_ingest(
             )
         ]
     finally:
-        for d in (stage, target, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(target, ignore_errors=True)
     # census is ≤ kc·kf rows — a bounded artifact, so materializing it
     # lets the temp layout be cleaned before returning (the flat
     # ingest leaves its dirs for the session; this one doesn't)
@@ -3160,7 +3134,6 @@ def q_ann_ivf_two_level_drift_refit(
     the shifted assignment, and both CUSUM scans batch-side; the
     streaming machinery must land on the identical verdict row
     (batch/stream symmetry, like the ingest sibling)."""
-    import os
     import shutil
     import tempfile
 
@@ -3190,7 +3163,6 @@ def q_ann_ivf_two_level_drift_refit(
     )
     target = tempfile.mkdtemp(prefix="ivf2_drift_index_")
     census_dir = tempfile.mkdtemp(prefix="ivf2_drift_census_")
-    ckpt = tempfile.mkdtemp(prefix="ivf2_drift_ckpt_")
     stream = (
         spark.readStream.schema("vec_id long, embedding array<double>")
         .option("maxFilesPerTrigger", 1)
@@ -3232,13 +3204,7 @@ def q_ann_ivf_two_level_drift_refit(
         )
 
     try:
-        (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        drain_batches(stream, ingest)
         composite = (
             F.col("gid") * F.lit(_TL_KF) + F.col("fid")
         ).alias("list_id")
@@ -3295,7 +3261,7 @@ def q_ann_ivf_two_level_drift_refit(
             else None
         )
     finally:
-        for d in (stage, target, census_dir, ckpt):
+        for d in (stage, target, census_dir):
             shutil.rmtree(d, ignore_errors=True)
     score = int(drift_row["score_ppm"]) if drift_row else 0
     control = int(control_row["score_ppm"]) if control_row else 0
@@ -3581,7 +3547,6 @@ def q_ann_ivfadc_two_level_streaming_encode(
     chain, and encoding entirely in SQL; assignment and codes are
     per-row deterministic under the frozen artifacts, so any stream
     chop lands on the same index."""
-    import os
     import shutil
     import tempfile
 
@@ -3632,13 +3597,8 @@ def q_ann_ivfadc_two_level_streaming_encode(
         group_col="sub",
     )
 
-    stage = tempfile.mkdtemp(prefix="ivfadc2_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(stage)
+    stream = stream_parquet(spark, f"{sf_dir}/embeddings.parquet", _EMBEDDINGS_SCHEMA)
     target = tempfile.mkdtemp(prefix="ivfadc2_index_")
-    ckpt = tempfile.mkdtemp(prefix="ivfadc2_ckpt_")
     # loop-invariant encode projection, built ONCE outside the
     # micro-batch body and reused against every batch frame
     # (round-14, guide §4 driver boundary): assignment pair, broadcast
@@ -3678,13 +3638,7 @@ def q_ann_ivfadc_two_level_streaming_encode(
         )
 
     try:
-        (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        drain_batches(stream, ingest)
         checksum = None
         for s in range(_PQ_M):
             term = F.col(f"code_{s}").cast("long") * F.lit(s + 1)
@@ -3707,8 +3661,7 @@ def q_ann_ivfadc_two_level_streaming_encode(
             )
         ]
     finally:
-        for d in (stage, target, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(target, ignore_errors=True)
     return (
         spark.createDataFrame(
             rows,

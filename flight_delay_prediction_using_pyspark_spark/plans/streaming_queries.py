@@ -1,11 +1,19 @@
-"""Catalog entries for the streaming-shaped window operators, run in
-batch mode (Spark's unified API: the exact same expressions power
-streaming/ops.py on readStream inputs — batch/stream symmetry is
-tested in tests/test_streaming.py).
+"""Catalog entries for the streaming operators: two window operators
+run in batch mode (Spark's unified API: the exact same expressions
+power streaming/ops.py on readStream inputs — batch/stream symmetry is
+tested in tests/test_streaming.py), and twelve queries that run a real
+stream end to end on the streaming/ops.py harness — `stream_parquet`
+over the events file read in place, drained with the availableNow
+trigger into a memory sink or a foreachBatch body.
+
+Queries that run a stateful operator build their stream on a
+`child_session` with 8 shuffle partitions and read the memory sink
+from that child, so the caller's session conf is never changed.
 
 Oracles: session windows via the classic gaps-and-islands SQL
 (lag → break flag → running sum → group); sliding windows via the
-k-shifted tumbling-bucket union.
+k-shifted tumbling-bucket union; every stream-run query via the batch
+computation its result must equal.
 """
 
 from __future__ import annotations
@@ -18,31 +26,33 @@ import os
 import tempfile
 
 from flight_delay_prediction_using_pyspark_spark.operators import aggregates as A
-from flight_delay_prediction_using_pyspark_spark.plans.queries import query
+from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+    child_session,
+    query,
+)
 from flight_delay_prediction_using_pyspark_spark.session import ensure_utc
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
 from flight_delay_prediction_using_pyspark_spark.streaming import ops as S
 
 _dedup_run = itertools.count()
 
+#: The events file as a stream reads it: `ts` is the raw µs integer of
+#: its TIMESTAMP_NTZ column (`timestamp_micros(ts)` converts exactly).
+_EVENTS_SCHEMA = (
+    "event_id long, ts long, user_id long, event_type string, "
+    "value double, props string"
+)
 
-from contextlib import contextmanager
+#: The streaming state-store instance count is fixed at stream start
+#: from `shuffle.partitions`; every instance is a long-lived
+#: per-partition service with checkpoint I/O per micro-batch, so a
+#: bounded replay wants stores sized to the data (production sizes it
+#: to key cardinality × throughput instead).
+_STATE_CONF = {"spark.sql.shuffle.partitions": "8"}
 
 
-@contextmanager
-def _scoped_state_partitions(spark: SparkSession, n: int = 8):
-    """Pin `spark.sql.shuffle.partitions` for the duration of a
-    stream run, then restore. The streaming state-store instance
-    count is fixed at stream start from this conf; every instance is
-    a long-lived per-partition service with checkpoint I/O per
-    micro-batch, so a bounded replay wants stores sized to the data
-    (production sizes it to key cardinality × throughput instead)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return S.stream_parquet(spark, f"{sf_dir}/events.parquet", _EVENTS_SCHEMA)
 
 
 @query(
@@ -155,17 +165,8 @@ def q_events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch emits MIN(event_id) per (user_id, hash), so the batch
     GROUP BY oracle is exact — the stateful operator itself is under
     the correctness gate, not just its batch shadow."""
-    # FileStreamSource requires a directory; stage the single parquet
-    # file behind a symlink (no copy).
-    stage = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select(
+    child = child_session(spark, _STATE_CONF)
+    stream = _events_stream(child, sf_dir).select(
             "event_id",
             "user_id",
             (
@@ -173,12 +174,10 @@ def q_events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
                 % 64
             ).alias("content_hash"),
-        )
     )
     sink = f"streaming_dedup_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(S.streaming_dedup(stream), sink, output_mode="append")
-    return spark.table(sink)
+    S.run_to_memory_sink(S.streaming_dedup(stream), sink, output_mode="append")
+    return child.table(sink)
 
 
 @query(
@@ -200,27 +199,14 @@ def q_events_streaming_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is exact integer-valued-double arithmetic — immune to
     float summation order — and the batch GROUP BY oracle matches
     bit-for-bit."""
-    stage = tempfile.mkdtemp(prefix="stream_totals_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select(
-            "user_id",
-            F.floor(F.coalesce("value", F.lit(0.0)) * 100)
-            .cast("double")
-            .alias("value"),
-        )
+    child = child_session(spark, _STATE_CONF)
+    stream = _events_stream(child, sf_dir).select(
+        "user_id",
+        F.floor(F.coalesce("value", F.lit(0.0)) * 100).cast("double").alias("value"),
     )
     sink = f"streaming_totals_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(
-            S.running_user_totals(stream), sink, output_mode="update"
-        )
-    return spark.table(sink)
+    S.run_to_memory_sink(S.running_user_totals(stream), sink, output_mode="update")
+    return child.table(sink)
 
 
 @query(
@@ -239,20 +225,13 @@ def q_events_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, so the final target is batching-independent and the
     batch QUALIFY-latest oracle is exact. On Delta/Iceberg the batch
     body becomes MERGE INTO with identical semantics."""
-    stage = tempfile.mkdtemp(prefix="cdc_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select("user_id", "event_id", "event_type")
-    )
+    stream = _events_stream(spark, sf_dir).select("user_id", "event_id", "event_type")
     target = tempfile.mkdtemp(prefix="cdc_target_")
     os.rmdir(target)  # sink creates it on first merge
     S.cdc_merge_sink(stream, target, key_cols=["user_id"], order_col="event_id")
-    return spark.read.parquet(target).drop("__bucket")
+    # the stream's schema, not inference: an empty stream leaves a
+    # target with no data file to infer from
+    return spark.read.schema(stream.schema).parquet(target).drop("__bucket")
 
 
 @query(
@@ -287,22 +266,15 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ; reading it through the explicit `ts long` stream
     schema yields the raw µs integer, so `timestamp_micros(ts)` is the
     exact (lossless) conversion."""
-    stage = tempfile.mkdtemp(prefix="stream_ssj_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    schema = (
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string"
-    )
+    child = child_session(spark, _STATE_CONF)
     to_ts = F.expr("timestamp_micros(ts)")
     clicks = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        _events_stream(child, sf_dir)
         .filter(F.col("event_type") == "click")
         .select("user_id", to_ts.alias("click_ts"))
     )
     purchases = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        _events_stream(child, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id"),
@@ -311,19 +283,11 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     joined = S.interval_join(
-        clicks,
-        purchases,
-        key="user_id",
-        left_ts="click_ts",
-        right_ts="purchase_ts",
-        lookback="30 minutes",
+        clicks, purchases, key="user_id", left_ts="click_ts", right_ts="purchase_ts"
     )
     sink = f"stream_ssj_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(
-            joined.select("user_id", "cents"), sink, output_mode="append"
-        )
-    return spark.table(sink).groupBy("user_id").agg(
+    S.run_to_memory_sink(joined.select("user_id", "cents"), sink, output_mode="append")
+    return child.table(sink).groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum("cents").cast("bigint").alias("sum_purchase_cents"),
     )
@@ -347,14 +311,9 @@ def q_events_streaming_dedup_builtin(spark: SparkSession, sf_dir: str) -> DataFr
     `events_streaming_dedup`, whose per-key state lives forever).
     Emitting ONLY the key columns makes the surviving set equal to
     the batch DISTINCT — batching-independent and oracle-exact."""
-    stage = tempfile.mkdtemp(prefix="stream_dedup_wm_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    child = child_session(spark, _STATE_CONF)
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
+        _events_stream(child, sf_dir)
         .select(
             "user_id",
             (
@@ -369,9 +328,8 @@ def q_events_streaming_dedup_builtin(spark: SparkSession, sf_dir: str) -> DataFr
         .select("user_id", "content_hash")
     )
     sink = f"stream_dedup_wm_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(stream, sink, output_mode="append")
-    return spark.table(sink)
+    S.run_to_memory_sink(stream, sink, output_mode="append")
+    return child.table(sink)
 
 
 @query(
@@ -415,19 +373,19 @@ def q_events_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame
     micro-batches so every real user's trailing session closes; the
     sentinels' own sessions never time out and are never emitted.
     The batch gaps-and-islands oracle is exact because session
-    boundaries and integer-cent sums are order-immune."""
+    boundaries and integer-cent sums are order-immune. An empty events
+    table still gets its sentinels (anchored at epoch 0) and emits
+    nothing."""
+    # the sentinel files sit beside the events file, so this stream
+    # keeps a staging directory of its own
     stage = tempfile.mkdtemp(prefix="stream_sess_src_")
     os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    schema = (
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string"
-    )
     max_ts = (
-        spark.read.schema(schema)
-        .parquet(f"{stage}/events.parquet")
+        spark.read.schema(_EVENTS_SCHEMA)
+        .parquet(f"{sf_dir}/events.parquet")
         .agg(F.max("ts"))
         .first()[0]
-    )
+    ) or 0
     import time as _time
 
     import pyarrow as pa
@@ -460,8 +418,9 @@ def q_events_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         mtime = _time.time() + i  # after the (old) events.parquet mtime
         os.utime(path, (mtime, mtime))
+    child = child_session(spark, _STATE_CONF)
     stream = (
-        spark.readStream.schema(schema)
+        child.readStream.schema(_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{stage}/*")
         .select(
@@ -475,11 +434,8 @@ def q_events_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("event_time", "0 seconds")
     )
     sink = f"stream_sess_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(
-            S.streaming_sessionize(stream), sink, output_mode="append"
-        )
-    return spark.table(sink).filter(F.col("user_id") >= 0)
+    S.run_to_memory_sink(S.streaming_sessionize(stream), sink, output_mode="append")
+    return child.table(sink).filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -516,8 +472,9 @@ def q_events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow result equals the batch join exactly — which is what
     the oracle checks."""
     ensure_utc(spark)
+    child = child_session(spark, _STATE_CONF)
     cents = F.floor(F.coalesce("value", F.lit(0.0)) * 100).cast("long")
-    static_events = load_table(spark, sf_dir, "events")
+    static_events = load_table(child, sf_dir, "events")
     tiers = (
         static_events.select("user_id", cents.alias("cents"))
         .groupBy("user_id")
@@ -530,14 +487,8 @@ def q_events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tier"),
         )
     )
-    stage = tempfile.mkdtemp(prefix="stream_static_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
+        _events_stream(child, sf_dir)
         .select("user_id", cents.alias("cents"))
         .join(tiers, "user_id")
         .groupBy("tier")
@@ -547,9 +498,8 @@ def q_events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_static_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        S.run_to_memory_sink(stream, sink, output_mode="complete")
-    return spark.table(sink)
+    S.run_to_memory_sink(stream, sink, output_mode="complete")
+    return child.table(sink)
 
 
 _CMS_EVENT_PROBES = ["click", "view", "purchase", "signup", "error", "absent_type_zz"]
@@ -582,25 +532,13 @@ def q_events_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flight_delay_prediction_using_pyspark_spark.operators import sketches as SK
 
     ensure_utc(spark)
-    stage = tempfile.mkdtemp(prefix="stream_cms_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select(F.col("event_type").alias("token"))
-    )
+    child = child_session(spark, _STATE_CONF)
+    stream = _events_stream(child, sf_dir).select(F.col("event_type").alias("token"))
     cells = SK.cms_cells(stream, "token", width=_CMS_EVENT_W)
     sink = f"streaming_cms_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        run_sketch = (
-            cells.groupBy("row", "bucket")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-        S.run_to_memory_sink(run_sketch, sink, output_mode="complete")
-    sketch = spark.table(sink)
+    run_sketch = cells.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("count"))
+    S.run_to_memory_sink(run_sketch, sink, output_mode="complete")
+    sketch = child.table(sink)
     probes = spark.range(1).select(
         F.explode(F.array(*[F.lit(t) for t in _CMS_EVENT_PROBES])).alias("token")
     )
@@ -644,27 +582,13 @@ def q_events_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_manifest_sink_*). The aggregate of
     the round-tripped table matches the batch oracle exactly."""
     ensure_utc(spark)
-    stage = tempfile.mkdtemp(prefix="stream_eos_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select(
-            "event_type",
-            F.floor(F.coalesce("value", F.lit(0.0)) * 100)
-            .cast("long")
-            .alias("cents"),
-        )
+    stream = _events_stream(spark, sf_dir).select(
+        "event_type",
+        F.floor(F.coalesce("value", F.lit(0.0)) * 100).cast("long").alias("cents"),
     )
     target = tempfile.mkdtemp(prefix="stream_eos_tgt_")
-    import shutil
-
-    shutil.rmtree(target)
-    with _scoped_state_partitions(spark):
-        S.manifest_parquet_sink(stream, target)
+    os.rmdir(target)  # the sink creates it on its first commit
+    S.manifest_parquet_sink(stream, target)
     table = S.read_manifest_parquet(spark, target)
     return table.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -696,27 +620,20 @@ def q_events_cdc_merge_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     op wins. The oracle QUALIFYs the same latest-change rule over the
     batch table and drops keys ending in a delete; a hash match proves
     upserts, deletes, and their interleavings all landed exactly."""
-    stage = tempfile.mkdtemp(prefix="cdc_del_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stage)
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.when(F.col("event_id") % 13 == 0, "D").otherwise("U").alias("op"),
-        )
+    stream = _events_stream(spark, sf_dir).select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.when(F.col("event_id") % 13 == 0, "D").otherwise("U").alias("op"),
     )
     target = tempfile.mkdtemp(prefix="cdc_del_target_")
     os.rmdir(target)
     S.cdc_merge_sink(
         stream, target, key_cols=["user_id"], order_col="event_id", op_col="op"
     )
-    return spark.read.parquet(target).drop("__bucket")
+    # the stream's schema, not inference: an empty stream leaves a
+    # target with no data file to infer from
+    return spark.read.schema(stream.schema).parquet(target).drop("__bucket")
 
 
 @query(
@@ -755,38 +672,36 @@ def q_custom_pysource_stream_stats(spark: SparkSession, sf_dir: str) -> DataFram
         .load()
     )
     sink = f"pysource_stream_{next(_dedup_run)}"
-    with _scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        # availableNow semantics don't apply to an unbounded generator
-        # (there is always a next batch): drain exactly 5 micro-batches
-        # by watching the progress stream, then stop — the bounded
-        # harness form; production runs continuously.
-        import time as _t
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    # availableNow semantics don't apply to an unbounded generator
+    # (there is always a next batch): drain exactly 5 micro-batches
+    # by watching the progress stream, then stop — the bounded
+    # harness form; production runs continuously.
+    import time as _t
 
-        deadline = _t.time() + 120
-        while True:
-            if len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 5:
-                break
-            if _t.time() >= deadline:
-                # Fail loudly: falling through with <5 batches would
-                # return an under-drained aggregate that surfaces as an
-                # opaque oracle mismatch instead of a timeout (round-5
-                # ADVICE).
-                q.stop()
-                raise RuntimeError(
-                    "detstream drained "
-                    f"{len([p for p in q.recentProgress if p['numInputRows'] > 0])}"
-                    " micro-batches (<5) in 120s"
-                )
-            _t.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
+    deadline = _t.time() + 120
+    while True:
+        if len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 5:
+            break
+        if _t.time() >= deadline:
+            # Fail loudly: falling through with <5 batches would
+            # return an under-drained aggregate that surfaces as an
+            # opaque oracle mismatch instead of a timeout.
+            q.stop()
+            raise RuntimeError(
+                "detstream drained "
+                f"{len([p for p in q.recentProgress if p['numInputRows'] > 0])}"
+                " micro-batches (<5) in 120s"
+            )
+        _t.sleep(0.2)
+    q.stop()
+    q.awaitTermination()
     drained = spark.table(sink).filter(F.col("id") < 500)
     return drained.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -879,8 +794,16 @@ def q_events_streaming_priority_sample(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{stage}/part=*")
     )
+    schema = (
+        "k_eff long, tau_q long, est_q long, true_c long, "
+        "abs_err_ppm long, multi_batch boolean"
+    )
     try:
         n_batches = priority_sample_sink(stream, state_dir, "event_id", "w", k=50)
+        if not os.path.isdir(state_dir):
+            # no row carried a positive weight, so there is no sample —
+            # and the oracle's GROUP BY over an empty ranking has no row
+            return spark.createDataFrame([], schema)
         state = spark.read.parquet(state_dir)
         from pyspark.sql import Window
 
@@ -932,8 +855,4 @@ def q_events_streaming_priority_sample(
         abs(est_q - 1000000 * true_c) // true_c,
         n_batches >= 2,
     )
-    return spark.createDataFrame(
-        [row],
-        "k_eff long, tau_q long, est_q long, true_c long, "
-        "abs_err_ppm long, multi_batch boolean",
-    )
+    return spark.createDataFrame([row], schema)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from flight_delay_prediction_using_pyspark_spark.operators import aggregates as A
 from flight_delay_prediction_using_pyspark_spark.operators import temporal as TP
 from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+    child_session,
     query,
     scratch_persist,
     scratch_persist_if_large,
@@ -1912,15 +1913,18 @@ def q_layout_bucketed_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(
         f"{db}.customer_b"
     )
-    thresh_conf = "spark.sql.autoBroadcastJoinThreshold"
-    aqe_conf = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    old_thresh = spark.conf.get(thresh_conf)
-    old_aqe = spark.conf.get(aqe_conf, None)
-    spark.conf.set(thresh_conf, "-1")
-    spark.conf.set(aqe_conf, "-1")
+    # broadcast off on a child session; the bucketed tables live in
+    # the shared catalog, so the child resolves them
+    child = child_session(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    )
     try:
-        o = spark.table(f"{db}.orders_b")
-        c = spark.table(f"{db}.customer_b")
+        o = child.table(f"{db}.orders_b")
+        c = child.table(f"{db}.customer_b")
         top = (
             o.join(c, o.o_custkey == c.c_custkey)
             .groupBy("c_custkey")
@@ -1944,11 +1948,6 @@ def q_layout_bucketed_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = top.schema
         rows = top.collect()
     finally:
-        spark.conf.set(thresh_conf, old_thresh)
-        if old_aqe is None:
-            spark.conf.unset(aqe_conf)
-        else:
-            spark.conf.set(aqe_conf, old_aqe)
         # The result is already collected, so the scratch db + its
         # mkdtemp location can go: CREATE ... IF NOT EXISTS with a
         # fresh mkdtemp each call would otherwise strand every later

@@ -21,6 +21,7 @@ from flight_delay_prediction_using_pyspark_spark.plans.queries import (
     spread_if_narrow,
 )
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
+from flight_delay_prediction_using_pyspark_spark.streaming.ops import drain_batches
 from flight_delay_prediction_using_pyspark_spark.text import analysis as TA
 from flight_delay_prediction_using_pyspark_spark.text import dedup as TD
 
@@ -2732,7 +2733,6 @@ def q_corpus_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     hash_dir = tempfile.mkdtemp(prefix="ingest_dedup_hash_")
     bucket_dir = tempfile.mkdtemp(prefix="ingest_dedup_buckets_")
     sh_dir = tempfile.mkdtemp(prefix="ingest_dedup_sh_")
-    ckpt = tempfile.mkdtemp(prefix="ingest_dedup_ckpt_")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -2784,13 +2784,7 @@ def q_corpus_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFra
             sigs_b.unpersist()
 
     try:
-        (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        drain_batches(stream, ingest)
         hx = spark.read.parquet(hash_dir)
         buckets = spark.read.option("basePath", bucket_dir).parquet(bucket_dir)
         sh = spark.read.parquet(sh_dir)
@@ -2858,7 +2852,7 @@ def q_corpus_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFra
             .first()
         )
     finally:
-        for d in (stage, hash_dir, bucket_dir, sh_dir, ckpt):
+        for d in (stage, hash_dir, bucket_dir, sh_dir):
             shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [tuple(row)],

@@ -1,11 +1,18 @@
-"""Structured Streaming operators over the events table shape.
+"""Structured Streaming operators over the events table shape, and the
+stream harness the streaming catalog queries run on.
 
 Batch/stream symmetry is the design rule: every transformation here
 takes a DataFrame (batch OR streaming — Spark's unified API) and
 returns one, so the same logic is testable in batch and deployable as
-a stream. Sinks/triggers stay at the edges (`run_to_memory_sink` for
-tests; production would writeStream to kafka/parquet with
-checkpointing).
+a stream. Sinks/triggers stay at the edges.
+
+The harness: `stream_parquet` streams a parquet directory, glob, or
+single file (read in place, no staging copy or link); `_drain` is the
+one availableNow run (process everything present, then stop), behind
+`run_to_memory_sink` (a stream into an in-memory table) and
+`drain_batches` (a stream through a foreachBatch body). A drain that
+is never resumed runs on Spark's temporary checkpoint; production
+would writeStream to kafka/parquet with a checkpointLocation.
 
 Scale notes: watermarks bound state (late data beyond the watermark
 is dropped, state for closed windows is evicted); windowed aggs
@@ -19,13 +26,16 @@ long, event_type string, value double, props string(json).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import os
+import re
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 EVENTS_SCHEMA = T.StructType(
@@ -40,26 +50,33 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def stream_events(spark: SparkSession, directory: str) -> DataFrame:
-    """File-source stream over a parquet directory (explicit schema —
-    streaming readers cannot infer). New files are discovered per
-    micro-batch; `maxFilesPerTrigger` bounds batch size in
-    production."""
-    return spark.readStream.schema(EVENTS_SCHEMA).parquet(directory)
+def _glob_escape(path: str) -> str:
+    return re.sub(r"[\\\[\]{}*?]", lambda m: "\\" + m.group(), path)
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
+def stream_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:
-    """Watermarked tumbling-window aggregate: counts + value sum per
-    (window, event_type). Works identically on batch and streaming
-    inputs; on a stream the watermark bounds state and admits
-    `watermark`-late data."""
+    """File-source stream over a parquet directory, glob, or single file
+    (explicit schema — streaming readers cannot infer). The file
+    source rejects a plain file path ('basePath' must be a directory),
+    so a file becomes a glob that matches only itself: Hadoop glob
+    metacharacters escaped, the last character bracketed
+    (`…/events.parque[t]`). New files are discovered per micro-batch;
+    `maxFilesPerTrigger` bounds batch size in production."""
+    if os.path.isfile(path):
+        path = f"{_glob_escape(path[:-1])}[{_glob_escape(path[-1])}]"
+    return spark.readStream.schema(schema).parquet(path)
+
+
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window aggregate: counts + value sum
+    per (window, event_type). Works identically on batch and streaming
+    inputs; on a stream the 2-hour watermark bounds state and admits
+    that much late data."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
@@ -74,16 +91,12 @@ def windowed_event_counts(
     )
 
 
-def session_window_agg(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows (gap-based) per user: built-in
     `session_window` — state merges adjacent events until a `gap`
-    silence closes the session."""
+    silence closes the session; a 2-hour watermark bounds state."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -145,20 +158,34 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _drain(writer: DataStreamWriter) -> None:
+    """Run a stream with the availableNow trigger (process everything
+    present at start, then stop) and block until it has. Without a
+    checkpointLocation the query runs on a temporary checkpoint that
+    Spark deletes at stop — right for a drain that is never resumed."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def run_to_memory_sink(
     stream_df: DataFrame, table_name: str, output_mode: str = "complete"
 ) -> None:
-    """Drain a stream into an in-memory table with the availableNow
-    trigger (process everything present, then stop) — the test/replay
-    harness; production sinks swap in kafka/parquet + checkpoint."""
-    q = (
+    """Drain a stream into the in-memory table `table_name`, a temp
+    view of the stream's own session — the test/replay harness;
+    production sinks swap in kafka/parquet + checkpoint."""
+    _drain(
         stream_df.writeStream.format("memory")
         .queryName(table_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+
+
+def drain_batches(
+    stream_df: DataFrame, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Drain a stream through the foreachBatch body `fn(batch_df,
+    batch_id)` — the shape of every sink here and of the catalog's
+    index-ingest queries."""
+    _drain(stream_df.writeStream.foreachBatch(fn))
 
 
 DEDUP_SCHEMA = T.StructType(
@@ -172,18 +199,12 @@ DEDUP_SCHEMA = T.StructType(
 _SEEN_STATE_SCHEMA = T.StructType([T.StructField("seen", T.ArrayType(T.LongType()))])
 
 
-def streaming_dedup(
-    events: DataFrame,
-    key_col: str = "user_id",
-    hash_col: str = "content_hash",
-    state_ttl_ms: int | None = None,
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Ingest-time exact dedup as a custom stateful operator: per key,
-    remember every content hash seen so far (GroupState) and emit only
-    first-seen rows. The streaming half of text.dedup.dedup_exact —
-    batch dedup cleans the corpus, this keeps duplicates from ever
-    landing.
+def streaming_dedup(events: DataFrame, state_ttl_ms: int | None = None) -> DataFrame:
+    """Ingest-time exact dedup as a custom stateful operator: per
+    `user_id`, remember every `content_hash` seen so far (GroupState)
+    and emit only first-seen rows. The streaming half of
+    text.dedup.dedup_exact — batch dedup cleans the corpus, this keeps
+    duplicates from ever landing.
 
     State is the per-key hash set, key-partitioned across executors.
     `state_ttl_ms` bounds it with an EVENT-TIME timeout: a key's set
@@ -198,16 +219,16 @@ def streaming_dedup(
     is re-emitted — the standard at-least-once dedup trade-off; swap
     the set for a Bloom filter instead if the horizon must stay
     unbounded. With a TTL, `events` must carry a watermarked
-    `event_time_col` (withWatermark before this operator).
+    `event_time` column (withWatermark before this operator).
 
     Default None keeps exact forever-state, where a single-batch
     (availableNow) run equals the batch
     `GROUP BY key, hash -> MIN(event_id)` oracle exactly.
 
-    Emitted rows: (event_id, key, hash), one per hash on its first
-    micro-batch, carrying the MIN event_id among that batch's rows for
-    the hash — deterministic regardless of partition/file arrival
-    order. The UDF closure is self-contained (no module globals)."""
+    Emitted rows: (event_id, user_id, content_hash), one per hash on
+    its first micro-batch, carrying the MIN event_id among that batch's
+    rows for the hash — deterministic regardless of partition/file
+    arrival order. The UDF closure is self-contained (no module globals)."""
 
     def dedup(
         key: tuple[Any, ...],
@@ -226,7 +247,7 @@ def streaming_dedup(
         last_ms = None
         for pdf in batches:
             if state_ttl_ms is not None and len(pdf):
-                batch_max = pdf[event_time_col].max()
+                batch_max = pdf["event_time"].max()
                 ms = int(batch_max.timestamp() * 1000)
                 last_ms = ms if last_ms is None else max(last_ms, ms)
             for eid, h in zip(pdf["event_id"], pdf["content_hash"]):
@@ -257,7 +278,7 @@ def streaming_dedup(
         if state_ttl_ms is not None
         else GroupStateTimeout.NoTimeout
     )
-    return events.groupBy(key_col).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         dedup,
         outputStructType=DEDUP_SCHEMA,
         stateStructType=_SEEN_STATE_SCHEMA,
@@ -286,26 +307,23 @@ _SESSION_STATE_SCHEMA = T.StructType(
 )
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    gap_sec: int = 1800,
-    event_time_col: str = "event_time",
-) -> DataFrame:
+def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Custom emit-on-close sessionizer via applyInPandasWithState +
     EventTimeTimeout — the stateful shape `session_window` can't
     express when sessions must be EMITTED exactly once, when they
     close, with custom per-session accumulators.
 
     Per user: gaps-and-islands within (open state ∪ batch) sorted by
-    second — a gap strictly greater than `gap_sec` closes a session
+    second — a gap strictly greater than 30 minutes closes a session
     and emits (start, end, n, integer-cent sum); the trailing open
     session stays in state with an event-time timeout at
-    last + gap_sec, so the watermark passing that horizon closes and
+    last + gap, so the watermark passing that horizon closes and
     emits it with NO further data — replay-deterministic, and state
     is always exactly one open session per active user (bounded).
-    `events` must be watermarked on `event_time_col` and carry
+    `events` must be watermarked on `event_time` and carry
     (user_id, sec, cents). Integer seconds/cents keep every emitted
     value order-immune and oracle-exact."""
+    gap_sec = 1800
 
     def sessionize(
         key: tuple[Any, ...],
@@ -357,10 +375,7 @@ def cdc_merge_sink(
     key_cols: list[str],
     order_col: str,
     checkpoint_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-    n_buckets: int = 16,
     op_col: str | None = None,
-    delete_op: str = "D",
 ) -> None:
     """Streaming upsert (CDC merge) via foreachBatch: every micro-batch
     is merged into a parquet target keeping, per key, the row with the
@@ -369,7 +384,7 @@ def cdc_merge_sink(
     becomes a single MERGE INTO with identical semantics.
 
     `op_col` enables TOMBSTONES (the delete half): rows whose op is
-    `delete_op` compete for per-key latest like any other change, and
+    'D' compete for per-key latest like any other change, and
     a key whose LATEST change is a delete is removed from the target —
     exactly Debezium/CDC last-writer-wins compaction semantics, and
     still batching-independent (max(order_col) per key is associative
@@ -378,15 +393,16 @@ def cdc_merge_sink(
     mode cannot write an empty partition dir; on Delta/Iceberg the
     MERGE handles this atomically).
 
-    The target is hash-partitioned on the key into `n_buckets`
+    The target is hash-partitioned on the key into 16
     directories (`__bucket=<i>/`), and each merge batch rewrites ONLY
     the buckets its keys touch (dynamic partition overwrite): read
     target WHERE __bucket IN touched ∪ batch → window-dedup → overwrite
     those partition dirs. Merge cost is O(touched buckets), not
-    O(target) — at 100 TB, n_buckets scales up so a batch touching few
-    keys rewrites a small fraction of the table; untouched partition
-    files are never read or rewritten. The per-bucket partition filter
-    is partition-pruned at the scan (directory skip, no file I/O).
+    O(target) — at 100 TB, the bucket count scales up so a batch
+    touching few keys rewrites a small fraction of the table;
+    untouched partition files are never read or rewritten. The
+    per-bucket partition filter is partition-pruned at the scan
+    (directory skip, no file I/O).
 
     Because max(order_col) per key is associative, the final target is
     independent of how rows were batched — which is what makes the
@@ -398,14 +414,12 @@ def cdc_merge_sink(
     deterministic across sessions and engines, unlike F.hash whose
     seed is fixed but JVM-specific encodings make cross-engine
     reproducibility a non-goal."""
-    import os
-
     from pyspark.sql import Window
 
     def bucket_col() -> Column:
         from flight_delay_prediction_using_pyspark_spark.operators.layout import md5_key_bucket
 
-        return md5_key_bucket(key_cols, n_buckets).alias("__bucket")
+        return md5_key_bucket(key_cols, 16).alias("__bucket")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -414,7 +428,7 @@ def cdc_merge_sink(
             "__src", F.lit(1)
         )
         if os.path.isdir(target_dir):
-            # Touched-bucket list is at most n_buckets small integers —
+            # Touched-bucket list is at most 16 small integers —
             # safe to collect; it prunes the target scan to those
             # partition directories only.
             touched = [
@@ -440,7 +454,7 @@ def cdc_merge_sink(
             # Persisted: survivors are read AFTER the overwrite below,
             # and without the persist the lazy plan would re-read the
             # just-rewritten target (read-after-write cycle).
-            merged = merged.filter(F.col(op_col) != delete_op).persist()
+            merged = merged.filter(F.col(op_col) != "D").persist()
             merged.count()
         # Dynamic mode replaces only the partition dirs present in
         # `merged` (= the touched buckets); all others survive as-is.
@@ -466,11 +480,10 @@ def cdc_merge_sink(
         if op_col is not None:
             merged.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(merge_batch).trigger(availableNow=True)
+    writer = stream_df.writeStream.foreachBatch(merge_batch)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
+    _drain(writer)
 
 
 def interval_join(
@@ -479,33 +492,28 @@ def interval_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    lookback: str = "30 minutes",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Stream-stream INNER interval join: pair each left row with
     every right row of the same key whose timestamp falls in
-    [left_ts - lookback, left_ts]. Both sides are watermarked, and the
-    time-range predicate lets Spark derive state-eviction bounds —
-    right-side state is dropped once the left watermark passes
-    right_ts + lookback, so state size is O(rows in the lookback
-    horizon per key), not O(stream length). Works identically on
-    batch inputs (plain range join) — the unified-API symmetry rule.
+    [left_ts - 30 minutes, left_ts]. Both sides are watermarked (1
+    hour), and the time-range predicate lets Spark derive
+    state-eviction bounds — right-side state is dropped once the left
+    watermark passes right_ts + 30 minutes, so state size is O(rows in
+    the lookback horizon per key), not O(stream length). Works
+    identically on batch inputs (plain range join) — the unified-API
+    symmetry rule.
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = left.withWatermark(left_ts, "1 hour")
+    rw = right.withWatermark(right_ts, "1 hour")
     cond = (
         (lw[key] == rw[key])
-        & (rw[right_ts] >= lw[left_ts] - F.expr(f"INTERVAL {lookback}"))
+        & (rw[right_ts] >= lw[left_ts] - F.expr("INTERVAL 30 minutes"))
         & (rw[right_ts] <= lw[left_ts])
     )
     return lw.join(rw, cond, "inner").drop(rw[key])
 
 
-def manifest_parquet_sink(
-    stream_df: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str | None = None,
-) -> None:
+def manifest_parquet_sink(stream_df: DataFrame, target_dir: str) -> None:
     """EXACTLY-ONCE append parquet sink via a commit manifest — the
     simplified form of the Delta/Iceberg transaction-log protocol,
     built on foreachBatch's at-least-once + deterministic batch ids:
@@ -525,16 +533,12 @@ def manifest_parquet_sink(
     manifest also carries per-batch file stats for pruning; here it is
     the minimal correct protocol."""
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        commit_batch_to_manifest(batch_df, batch_id, target_dir)
-
-    writer = stream_df.writeStream.foreachBatch(commit_batch).trigger(
-        availableNow=True
+    drain_batches(
+        stream_df,
+        lambda batch_df, batch_id: commit_batch_to_manifest(
+            batch_df, batch_id, target_dir
+        ),
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
 
 
 def commit_batch_to_manifest(
@@ -549,10 +553,9 @@ def commit_batch_to_manifest(
     in the commit file (a JSON line) — the Iceberg-manifest pattern
     that lets readers DATA-SKIP whole batches from the tiny manifest
     alone (`read_manifest_parquet(between=...)`) without touching a
-    parquet footer. The min/max agg rides the same job as the write's
-    input (one extra scan of the batch, driver-side two numbers)."""
+    parquet footer. Recording them costs one scan of that column of
+    the just-written batch; the driver keeps two numbers."""
     import json as _json
-    import os
 
     manifest = os.path.join(target_dir, "manifest")
     os.makedirs(manifest, exist_ok=True)
@@ -570,25 +573,15 @@ def commit_batch_to_manifest(
         # an envelope that does not describe the data on disk, and
         # `between` pruning would then silently DROP batches holding
         # qualifying rows — wrong results, not a missed optimization.
-        # The read-back is served from the parquet FOOTERS, not a
-        # column scan: parquet aggregate pushdown is enabled for this
-        # one read (a bare min/max with no filter on a top-level
-        # column is exactly the shape it supports), so the per-batch
-        # stats cost is metadata-sized instead of a second full pass
-        # over the batch (round-8 ADVICE: without the pushdown this
-        # agg re-scanned the whole just-written column).
-        spark = batch_df.sparkSession
-        _PUSH = "spark.sql.parquet.aggregatePushdown"
-        prev = spark.conf.get(_PUSH, "false")
-        try:
-            spark.conf.set(_PUSH, "true")
-            row = (
-                spark.read.parquet(data_dir)
-                .agg(F.min(stats_col).alias("mn"), F.max(stats_col).alias("mx"))
-                .first()
-            )
-        finally:
-            spark.conf.set(_PUSH, prev)
+        # The read-back scans the just-written batch's `stats_col`
+        # (column pruning reads that one column chunk per file); it is
+        # not served from the footers — parquet goes through the V1
+        # file source, which has no aggregate pushdown.
+        row = (
+            batch_df.sparkSession.read.parquet(data_dir)
+            .agg(F.min(stats_col).alias("mn"), F.max(stats_col).alias("mx"))
+            .first()
+        )
         # An empty batch (or all-null stats column) yields null
         # min/max; record stats-absent rather than a null envelope so
         # the reader keeps its "no stats → conservatively keep"
@@ -632,7 +625,6 @@ def read_manifest_parquet(
     the tiny manifest, not one parquet footer of the skipped
     batches."""
     import json as _json
-    import os
 
     manifest = os.path.join(target_dir, "manifest")
     # Numeric sort on the parsed batch ids: a string sort would order
@@ -704,12 +696,11 @@ def priority_sample_sink(
     key_col: str,
     weight_col: str,
     k: int,
-    salt: str = "eps_",
 ) -> int:
     """Streaming maintenance of a Duffield-Lund-Thorup priority sample
     (operators/sampling.priority_sample, the batch twin): every
     micro-batch computes its rows' deterministic priorities
-    w / ((md5_60(salt‖key)+1)/2^60), merges them with the persisted
+    w / ((md5_60('eps_'‖key)+1)/2^60), merges them with the persisted
     reservoir, and keeps the global top-(k+1) — k sample rows PLUS the
     (k+1)-th row whose priority is the estimator threshold τ.
 
@@ -749,7 +740,6 @@ def priority_sample_sink(
     (a retried batch counts once) — callers assert ≥2 to evidence
     that the associative merge path actually ran (a single-batch run
     never exercises it)."""
-    import os
     import shutil
 
     # Crash recovery BEFORE any batch reads or deletes state: a crash
@@ -779,7 +769,7 @@ def priority_sample_sink(
         u = (
             F.conv(
                 F.substring(
-                    F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))),
+                    F.md5(F.concat(F.lit("eps_"), F.col(key_col).cast("string"))),
                     1,
                     15,
                 ),
@@ -846,10 +836,5 @@ def priority_sample_sink(
         os.rename(tmp_dir, state_dir)
         shutil.rmtree(old_dir, ignore_errors=True)
 
-    (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_batches(stream_df, merge_batch)
     return len(seen_batches)

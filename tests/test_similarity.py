@@ -505,26 +505,9 @@ def test_kmeans_exprs_over_zero_centroids_are_typed_null(spark):
 
 
 @pytest.fixture(scope="module")
-def empty_embeddings_dir(tmp_path_factory):
-    """The smoke fixture with an all-empty ``embeddings`` table (schema
-    kept, zero rows); every other table links to the smoke files."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from flight_delay_prediction_using_pyspark_spark.sources.readers import (
-        TESTDATA_TABLES,
-    )
-    from tests.conftest import SF_SMOKE_DIR
-
-    out = tmp_path_factory.mktemp("empty_embeddings")
-    for t in TESTDATA_TABLES:
-        src = f"{SF_SMOKE_DIR}/{t}.parquet"
-        if t == "embeddings":
-            pq.write_table(pq.read_table(src).slice(0, 0), out / f"{t}.parquet")
-        else:
-            os.symlink(src, out / f"{t}.parquet")
-    return str(out)
+def emptied_table():
+    """The table conftest's ``empty_table_dir`` empties for this module."""
+    return "embeddings"
 
 
 @pytest.mark.parametrize(
@@ -536,7 +519,7 @@ def empty_embeddings_dir(tmp_path_factory):
     ],
 )
 def test_kmeans_queries_on_empty_embeddings_match_oracle(
-    spark, empty_embeddings_dir, name
+    spark, empty_table_dir, name
 ):
     """Zero points: no seeds, so the argmin emitter gets an empty
     centroid set and k-means|| an empty frame. Each must yield the
@@ -547,6 +530,6 @@ def test_kmeans_queries_on_empty_embeddings_match_oracle(
     )
     from tests.oracle_util import compare_frames, duckdb_connection
 
-    got = QUERIES[name](spark, empty_embeddings_dir).toPandas()
-    want = duckdb_connection(empty_embeddings_dir).execute(ORACLES[name]).fetchdf()
+    got = QUERIES[name](spark, empty_table_dir).toPandas()
+    want = duckdb_connection(empty_table_dir).execute(ORACLES[name]).fetchdf()
     assert compare_frames(got, want) == []

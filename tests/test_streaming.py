@@ -8,9 +8,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flight_delay_prediction_using_pyspark_spark.plans import streaming_queries
+from flight_delay_prediction_using_pyspark_spark.plans.queries import ORACLES, QUERIES
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_events
 from flight_delay_prediction_using_pyspark_spark.streaming import ops as S
 from tests.conftest import SF_SMOKE_DIR
+from tests.oracle_util import compare_frames, duckdb_connection
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +27,9 @@ def events_dir(spark, tmp_path_factory):
 
 
 def test_windowed_counts_stream_equals_batch(spark, events_dir):
-    stream = S.windowed_event_counts(S.stream_events(spark, events_dir))
+    stream = S.windowed_event_counts(
+        S.stream_parquet(spark, events_dir, S.EVENTS_SCHEMA)
+    )
     S.run_to_memory_sink(stream, "win_counts", output_mode="complete")
     got = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
@@ -57,7 +62,7 @@ def test_session_window_agg_batch(spark, events_dir):
 
 
 def test_running_user_totals_stateful(spark, events_dir):
-    stream = S.running_user_totals(S.stream_events(spark, events_dir))
+    stream = S.running_user_totals(S.stream_parquet(spark, events_dir, S.EVENTS_SCHEMA))
     S.run_to_memory_sink(stream, "running_totals", output_mode="update")
     # update mode with one availableNow pass may emit multiple rows per
     # user (one per micro-batch); the LAST emission carries the final
@@ -84,7 +89,9 @@ def test_stream_to_parquet_sink_with_checkpoint(spark, events_dir, tmp_path):
     checkpoint directory is laid down (restart-safe offsets)."""
     out = str(tmp_path / "agg_out")
     ckpt = str(tmp_path / "ckpt")
-    stream = S.windowed_event_counts(S.stream_events(spark, events_dir))
+    stream = S.windowed_event_counts(
+        S.stream_parquet(spark, events_dir, S.EVENTS_SCHEMA)
+    )
     q = (
         stream.writeStream.format("parquet")
         .option("path", out)
@@ -645,3 +652,86 @@ def test_priority_sample_sink_crash_recovery(spark, tmp_path):
         assert got == truth, f"crash point {crash}: reservoir reset"
         assert not os.path.exists(f"{state}.old")
         assert not os.path.exists(f"{state}.tmp")
+
+
+def test_stream_parquet_single_file_under_glob_metacharacters(spark, tmp_path):
+    """A single-file path streams exactly that file, even under a
+    directory whose name is full of Hadoop glob metacharacters and
+    beside a sibling whose name extends the file's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    weird = tmp_path / "we[ird]{a,b}*?"
+    weird.mkdir()
+    pq.write_table(pa.table({"x": list(range(7))}), weird / "events.parquet")
+    pq.write_table(
+        pa.table({"x": list(range(100, 130))}), weird / "events.parquet.bak"
+    )
+    stream = S.stream_parquet(spark, str(weird / "events.parquet"), "x long")
+    S.run_to_memory_sink(stream, "weird_single_file", output_mode="append")
+    assert sorted(r.x for r in spark.table("weird_single_file").collect()) == list(
+        range(7)
+    )
+
+
+@pytest.fixture(scope="module")
+def emptied_table():
+    """The table conftest's ``empty_table_dir`` empties for this module."""
+    return "events"
+
+
+@pytest.mark.parametrize(
+    "name",
+    sorted(
+        n for n, fn in QUERIES.items() if fn.__module__ == streaming_queries.__name__
+    ),
+)
+def test_streaming_queries_on_empty_events_match_oracle(spark, empty_table_dir, name):
+    """Zero events: no micro-batch carries a row. Every streaming
+    catalog entry must still return its oracle's answer — an empty
+    CDC target, no sessions, no priority sample — instead of raising."""
+    got = QUERIES[name](spark, empty_table_dir).toPandas()
+    want = duckdb_connection(empty_table_dir).execute(ORACLES[name]).fetchdf()
+    assert compare_frames(got, want) == []
+
+
+#: Session settings the engine still makes on the caller on purpose:
+#: `ensure_utc`'s timezone pin and `load_events`'s nanosAsLong, which a
+#: session the engine did not build needs.
+_CALLER_SETTINGS = {
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+}
+
+
+def test_query_scoped_conf_never_reaches_caller_session(spark, monkeypatch):
+    """Query-scoped SQL conf (state-store partitions, broadcast off)
+    lives on a `child_session`: no other conf.set reaches the caller's
+    session, and each query still matches its oracle."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    caller = spark.conf
+    calls: dict[str, list] = {}
+    running = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        if self is caller and key not in _CALLER_SETTINGS:
+            calls.setdefault(running[-1], []).append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    con = duckdb_connection(SF_SMOKE_DIR)
+    mismatches = {}
+    for name in (
+        "events_streaming_dedup",
+        "layout_bucketed_join_topk",
+        "layout_manifest_stats_pruning",
+    ):
+        running.append(name)
+        got = QUERIES[name](spark, SF_SMOKE_DIR).toPandas()
+        problems = compare_frames(got, con.execute(ORACLES[name]).fetchdf())
+        if problems:
+            mismatches[name] = problems
+    assert calls == {}, f"conf set on the caller's session: {calls}"
+    assert mismatches == {}
